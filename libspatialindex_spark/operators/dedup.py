@@ -307,10 +307,10 @@ def _fused_minhash_pairs(
     ids_a = hpdf["_id"].to_numpy(dtype=np.int64)
     hv_raw = [np.asarray(v, dtype=np.int64) for v in hpdf["_hv"]]
     n = len(ids_a)
+    id_t = df.schema[id_col].dataType.simpleString()
+    out_schema = f"id1 {id_t}, id2 {id_t}, jaccard double"
     if n == 0:
-        return spark.createDataFrame(
-            [], "id1 long, id2 long, jaccard double"
-        ).localCheckpoint()
+        return spark.createDataFrame([], out_schema).localCheckpoint()
     flat = np.concatenate(hv_raw)
     lens = np.fromiter((a.size for a in hv_raw), dtype=np.int64, count=n)
     offsets = np.zeros(n, dtype=np.int64)
@@ -323,14 +323,18 @@ def _fused_minhash_pairs(
     S3 = SIG.reshape(n, bands, r)
     hv_sorted = [np.sort(a) for a in hv_raw]
 
-    banded_pdf = pd.DataFrame(
-        {
-            "_id": np.repeat(ids_a, bands),
-            "band": np.tile(np.arange(bands, dtype=np.int32), n),
-            "bsig": [S3[i, b] for i in range(n) for b in range(bands)],
-        }
+    # explicit schema + plain-list cells: without Arrow, createDataFrame
+    # cannot infer a type for numpy-array cells
+    banded = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "_id": np.repeat(ids_a, bands),
+                "band": np.tile(np.arange(bands, dtype=np.int32), n),
+                "bsig": S3.reshape(n * bands, r).tolist(),
+            }
+        ),
+        "_id long, band int, bsig array<bigint>",
     )
-    banded = spark.createDataFrame(banded_pdf)
     left = banded.select(F.col("_id").alias("id1"), "band", "bsig")
     right = banded.select(F.col("_id").alias("id2"), "band", "bsig")
     cand = (
@@ -368,8 +372,7 @@ def _fused_minhash_pairs(
                 {"id1": out_i, "id2": out_j, "jaccard": out_jac},
             ).astype({"id1": "int64", "id2": "int64", "jaccard": "float64"})
 
-    id_t = df.schema[id_col].dataType.simpleString()
-    out = cand.mapInPandas(work_verify, f"id1 {id_t}, id2 {id_t}, jaccard double")
+    out = cand.mapInPandas(work_verify, out_schema)
     try:
         return out.localCheckpoint()
     finally:

@@ -1,9 +1,8 @@
-"""Raster↔vector tiling: assign images to grid tiles, re-encode per tile.
+"""Raster↔vector tiling: assign images to grid tiles, re-encode their bytes.
 
 North-rule stage: every image row is assigned a deterministic ``tile_id``
 (the Morton-grid tile containing its point), then image bytes are
-re-encoded per tile batch inside Arrow UDFs.  Invariants (BASELINE.json
-``input_hint``):
+re-encoded inside Arrow UDFs.  Invariants (BASELINE.json ``input_hint``):
 
 * decoded-pixel fidelity — exact for lossless PNG, PSNR ≥ 40 dB for the
   lossy path (checked by :func:`fidelity_report`);
@@ -11,10 +10,10 @@ re-encoded per tile batch inside Arrow UDFs.  Invariants (BASELINE.json
   Arrow round-trip unmodified).
 
 Execution shape: ``tile_id`` is a pure Column expr (codegen).  Re-encode is
-``mapInPandas`` — *no shuffle at all*: tile grouping is only needed for
-per-tile output files, which ``repartition(tile_id)`` achieves when
-requested.  At 10^12 rows the re-encode is embarrassingly parallel and the
-only data movement is the optional tile clustering."""
+``mapInPandas`` with *no shuffle at all*.  Its output depends only on each
+row's own ``(bytes, fmt)``, so each Arrow batch runs the codec once per
+distinct image: a point-in-polygon join upstream copies an image row once
+per polygon it falls in, and those copies share a batch."""
 
 from __future__ import annotations
 
@@ -44,7 +43,6 @@ def reencode(
     out_fmt: str | None = None,
     quality: int = 90,
     level: int = 0,
-    cluster_by_tile: bool = False,
 ) -> DataFrame:
     """Re-encode ``bytes`` (to ``out_fmt``, or each row's own ``fmt``).
 
@@ -53,26 +51,32 @@ def reencode(
     default: deflate effort dominated the Python stage 26:1 on small tiles.
     All non-image columns pass through untouched (caption equality is free
     by construction but verified in tests — Arrow round-trip fidelity)."""
-    cols = images.columns
-    schema = images.schema
-    if "tile_id" not in cols:
-        raise ValueError("run assign_tiles first")
-
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            new_bytes, new_fmt = [], []
-            for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = codec.decode(bytes(data), fmt)
-                tgt = out_fmt or fmt
-                new_bytes.append(codec.encode(px, tgt, quality=quality, level=level))
-                new_fmt.append(tgt)
-            pdf = pdf.copy()
-            pdf["bytes"] = new_bytes
-            pdf["fmt"] = new_fmt
-            yield pdf
+            yield _reencode_batch(pdf, out_fmt, quality, level)
 
-    src = images.repartition("tile_id") if cluster_by_tile else images
-    return src.mapInPandas(work, schema)
+    return images.mapInPandas(work, images.schema)
+
+
+def _reencode_batch(
+    pdf: pd.DataFrame, out_fmt: str | None, quality: int, level: int
+) -> pd.DataFrame:
+    """One Arrow batch of :func:`reencode`: the codec runs once per
+    distinct ``(bytes, fmt)``, and repeated rows reuse its output."""
+    done: dict[tuple[bytes, str], bytes] = {}
+    new_bytes, new_fmt = [], []
+    for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
+        key = (bytes(data), fmt)
+        tgt = out_fmt or fmt
+        if key not in done:
+            px = codec.decode(key[0], fmt)
+            done[key] = codec.encode(px, tgt, quality=quality, level=level)
+        new_bytes.append(done[key])
+        new_fmt.append(tgt)
+    pdf = pdf.copy()
+    pdf["bytes"] = new_bytes
+    pdf["fmt"] = new_fmt
+    return pdf
 
 
 def fidelity_report(

@@ -2,7 +2,8 @@
 
 ingest (image+caption rows) → geocode/curve key → [optional stored index]
 → point-in-polygon join against a polygon layer → tile assignment →
-per-tile re-encode (fidelity-gated) → metrics.
+re-encode (fidelity-gated; once per distinct image in each Arrow batch, not
+once per joined polygon) → metrics.
 
 Every stage is DataFrame-native; the only Python stages are the Arrow-
 batched codecs (generation + re-encode).  Shuffle budget of the whole
@@ -163,11 +164,9 @@ def run_to_storage(
                 if g not in done:
                     fs.delete(FSM.join(data_path, name))
 
-    joined = spatial_join.point_in_box_join(
-        tiled_src, polys, "x", "y", POLY_BOX, conf,
-        broadcast_boxes=broadcast_polys, salt=salt,
+    out = join_and_tile(
+        tiled_src, polys, conf, broadcast_polys, salt, reencode_fmt
     )
-    out = tiling.reencode(joined, out_fmt=reencode_fmt)
     out.write.partitionBy("grp").mode("append").parquet(data_path)
 
     new_dirs = [

@@ -1,9 +1,11 @@
 """Image pipeline tests: codecs, generator determinism, tiling fidelity."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from libspatialindex_spark import pipeline
 from libspatialindex_spark.config import EngineConfig
 from libspatialindex_spark.operators import tiling
 from libspatialindex_spark.sources import images, png
@@ -93,3 +95,77 @@ def test_tile_stats_expose_skew(tiled):
     assert stats.n_rows.sum() == 300
     # skewness=3 → the hottest tile is much hotter than the median
     assert stats.n_rows.max() >= 3 * max(1, int(stats.n_rows.median()))
+
+
+def test_reencode_batch_runs_codec_once_per_distinct_image(monkeypatch):
+    """A join copies an image row once per polygon it falls in; the copies
+    share one decode/encode and get the same output as their own call."""
+    px = images.pixels_for(np.arange(3), size=16)
+    src = [png.png_encode(px[0]), png.fake_jpeg_encode(px[1]), png.png_encode(px[2])]
+    fmts = ["png", "jpeg", "png"]
+    order = [0, 0, 0, 1, 2, 2]  # image 0 in three polygons, image 2 in two
+    pdf = pd.DataFrame({
+        "bytes": [src[i] for i in order],
+        "fmt": [fmts[i] for i in order],
+        "poly_id": range(len(order)),
+    })
+    want = [tiling._reencode_batch(pdf.iloc[[k]], None, 90, 0) for k in range(6)]
+    calls = []
+    decode = tiling.codec.decode
+    monkeypatch.setattr(
+        tiling.codec, "decode", lambda b, f: calls.append(f) or decode(b, f)
+    )
+    got = tiling._reencode_batch(pdf, None, 90, 0)
+    assert len(calls) == 3
+    assert list(got.poly_id) == list(pdf.poly_id)
+    assert list(got.fmt) == [fmts[i] for i in order]
+    assert list(got.bytes) == [w.bytes.iloc[0] for w in want]
+
+
+ROW_KEY = ["image_id", "poly_id", "tile_id", "fmt", "caption"]
+
+
+def _rows(df):
+    cols = [*ROW_KEY, F.md5("bytes").alias("bytes_md5")]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.fixture(scope="module")
+def join_inputs(spark, tmp_path_factory):
+    """Stored images + a dense polygon layer (about 2 polygons per point)."""
+    path = str(tmp_path_factory.mktemp("imgs") / "t")
+    images.generate_images(spark, 400, skewness=2.0, partitions=4).write.parquet(
+        path
+    )
+    rng = np.random.default_rng(7)
+    lo = rng.uniform(0.0, 0.9, size=(200, 2))
+    hi = lo + rng.uniform(0.05, 0.15, size=(200, 2))
+    polys = spark.createDataFrame(
+        [(i, *map(float, lo[i]), *map(float, hi[i])) for i in range(200)],
+        "poly_id long, pxmin double, pymin double, pxmax double, pymax double",
+    )
+    return EngineConfig(), spark.read.parquet(path), polys
+
+
+@pytest.mark.parametrize("salt", [None, 4])
+@pytest.mark.parametrize("fmt", [None, "png"])
+def test_join_and_tile_same_rows_as_one_row_batches(spark, join_inputs, fmt, salt):
+    """Sharing one encode among an image's join copies gives the rows that
+    re-encoding each joined row on its own gives (one-row Arrow batches)."""
+    conf, imgs, polys = join_inputs
+    bcast = salt is None
+    out = pipeline.join_and_tile(
+        imgs, polys, conf, broadcast_polys=bcast, salt=salt, reencode_fmt=fmt
+    )
+    got = _rows(out)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        want = _rows(out)
+    finally:
+        spark.conf.set(key, prev)
+    hit = {r[0] for r in want}
+    assert len(hit) < len(want)  # images in several polygons
+    assert len(hit) < imgs.count()  # and images in none
+    assert got == want

@@ -74,11 +74,13 @@ def test_resume_completes_partial_run(spark, setup, tmp_path):
     assert set(man.grp) == full_groups
     # groups completed by resume (not in attempt 1) must match the full run
     redo = full_groups - done_before
-    full_pdf = full.select("image_id", "poly_id", "grp").toPandas()
-    res_pdf = resumed.select("image_id", "poly_id", "grp").toPandas()
-    a = {(r.image_id, r.poly_id) for _, r in full_pdf[full_pdf.grp.isin(redo)].iterrows()}
-    b = {(r.image_id, r.poly_id) for _, r in res_pdf[res_pdf.grp.isin(redo)].iterrows()}
-    assert a == b and got <= want
+    # ... down to the re-encoded bytes of every row
+    cols = ["image_id", "poly_id", "tile_id", "fmt", "caption", F.md5("bytes")]
+
+    def rows(df):
+        return set(map(tuple, df.filter(F.col("grp").isin(*redo)).select(*cols).collect()))
+
+    assert redo and rows(resumed) == rows(full) and got <= want
 
 
 def test_run_to_storage_on_file_uri(spark, tmp_path):

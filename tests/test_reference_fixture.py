@@ -10,6 +10,8 @@ Arrow packed-node local index), and golden-diff the full (query, id) result
 multimap against a numpy port of Exhaustive.cc's closed-interval scan.
 """
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -20,6 +22,12 @@ from libspatialindex_spark.operators import batch_query, index_build, local_inde
 DATA = "/root/reference/data/gen_10000.txt"
 QUERIES = "/root/reference/data/query_1000.txt"
 COLS = ["op", "id", "xmin", "ymin", "xmax", "ymax"]
+
+if not (os.path.exists(DATA) and os.path.exists(QUERIES)):
+    pytest.skip(
+        f"reference fixture not present ({DATA}, {QUERIES})",
+        allow_module_level=True,
+    )
 
 
 @pytest.fixture(scope="module")

@@ -439,3 +439,26 @@ def test_minhash_fused_tier_equals_join_tier(docs):
         docs, threshold=0.4, verify_broadcast_max_docs=0
     )
     assert _pairset(fused, "jaccard") == _pairset(joined, "jaccard")
+
+
+def test_minhash_fused_tier_same_rows_with_arrow_off(spark):
+    """The fused tier builds its band table from pandas: with Arrow off,
+    createDataFrame must not have to infer the band-signature type."""
+    base = "the quick brown fox jumps over the lazy dog by the river bank"
+    docs = spark.createDataFrame(
+        [(i, base + " and more" * (i % 4) + f" v{i % 5}") for i in range(20)],
+        "doc_id int, text string",
+    )
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    got = {}
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            pairs = dedup.minhash_lsh_pairs(docs, threshold=0.4)
+            got[arrow] = sorted(tuple(r) for r in pairs.collect())
+            empty = dedup.minhash_lsh_pairs(docs.limit(0), threshold=0.4)
+            assert empty.count() == 0 and dict(empty.dtypes)["id1"] == "int"
+    finally:
+        spark.conf.set(key, prev)
+    assert got["true"] and got["true"] == got["false"]
