@@ -134,8 +134,17 @@ class Index:
         return range_query.count_contains(self._rel(), *w).collect()[0]["n"]
 
     def bounds(self) -> tuple[float, float, float, float]:
-        r = range_query.bounds(self._rel()).collect()[0]
-        return (r["xmin"], r["ymin"], r["xmax"], r["ymax"])
+        """``Index_GetBounds``: the root MBR, rolled up on the driver from
+        the manifest's exact per-bucket MBRs — the reference reads its
+        root node's MBR the same way (``RTreeQuery.cc:166-184``), with no
+        data scan.  ``(None,) * 4`` for an empty index."""
+        rows = self.stored.manifest_totals_rows()
+        if not rows:
+            return (None,) * 4
+        return (
+            min(r["xmin"] for r in rows), min(r["ymin"] for r in rows),
+            max(r["xmax"] for r in rows), max(r["ymax"] for r in rows),
+        )
 
     def leaves(self) -> DataFrame:
         """``Index_GetLeaves``: the bucket manifest (id ranges live in the
@@ -228,12 +237,13 @@ class IndexND:
         ).collect()[0]["n"]
 
     def bounds(self) -> tuple:
-        from libspatialindex_spark.operators import nd
-
-        r = nd.bounds_nd(self._rel()).collect()[0]
-        d = self._rel().box.d
-        return tuple(r[f"lo{i}"] for i in range(d)) + tuple(
-            r[f"hi{i}"] for i in range(d)
+        """Root MBR from the manifest roll-up, as :meth:`Index.bounds`."""
+        rows = self.stored.manifest_totals_rows()
+        d = self.stored.box.d
+        if not rows:
+            return (None,) * (2 * d)
+        return tuple(min(r["lows"][i] for r in rows) for i in range(d)) + tuple(
+            max(r["highs"][i] for r in rows) for i in range(d)
         )
 
     # -- mutations (the generic staged protocol in operators/mutations) ------

@@ -10,7 +10,8 @@ reference             here
 external merge sort   ``repartitionByRange(z)`` shuffle (spill built-in)
 leaf packing          ``sortWithinPartitions(z)`` + parquet row groups
 upper tree levels     **bucket** directories + per-bucket manifest MBRs
-root / header page    ``boundaries.json`` + manifest table on the driver
+root / header page    ``boundaries.json`` + manifest table, read on the
+                      driver (pyarrow) — planning a query runs no job
 ====================  =====================================================
 
 Three global partitioners, mirroring the reference's bulk-load variants:
@@ -168,38 +169,13 @@ def kd_partition_tree(
 
 
 @dataclass
-class StoredIndex:
+class StoredIndex(M.StoredLayout):
     """A persisted two-level spatial index (data dirs + manifest)."""
 
     spark: SparkSession
     path: str
     conf: EngineConfig
     spec: PartitionSpec
-
-    @property
-    def data_path(self) -> str:
-        return FS.join(self.path, "data")
-
-    @property
-    def filemap_path(self) -> str:
-        return FS.join(self.path, "filemap")
-
-    @property
-    def fs(self):
-        return FS.get_fs(self.spark, self.path)
-
-    def file_map(self) -> DataFrame | None:
-        """Per-FILE zone map (path, bucket, zmin, zmax, n_rows) — the
-        third index level (sub-bucket), written by builds with
-        ``max_records_per_file`` and invalidated by mutations (rebuild via
-        :func:`refresh_file_map`)."""
-        p = self.filemap_path
-        fs = self.fs
-        if not fs.isdir(p) or not any(
-            f.endswith(".parquet") for f in fs.listdir(p)
-        ):
-            return None
-        return self.spark.read.parquet(p)
 
     def zm_models(self) -> dict[int, tuple[float, float, int]]:
         """Per-bucket learned rank model {bucket: (a, b, max_err)} — the
@@ -237,12 +213,6 @@ class StoredIndex:
     def bucket_shift(self) -> int:
         return self.spec.shift if self.spec.kind == "zprefix" else 0
 
-    def manifest(self) -> DataFrame:
-        m = M.read_manifest(self.spark, self.path)
-        if m is None:
-            raise FileNotFoundError(f"no manifest under {self.path}")
-        return m
-
     def manifest_totals(self) -> DataFrame:
         """Per-bucket totals (a bucket may have several manifest rows after
         incremental inserts — totals are the roll-up)."""
@@ -254,6 +224,15 @@ class StoredIndex:
             F.max("xmax").alias("xmax"),
             F.max("ymax").alias("ymax"),
             F.sum("n_rows").alias("n_rows"),
+        )
+
+    def manifest_totals_rows(self) -> list[dict]:
+        """:meth:`manifest_totals` rolled up on the driver, plus each
+        bucket's max entry extents (``max_ex``, ``max_ey``)."""
+        return M.rollup(
+            self.manifest_rows(),
+            mins=("zmin", "xmin", "ymin"),
+            maxs=("zmax", "xmax", "ymax", "max_ex", "max_ey"),
         )
 
     def keyed(self, df: DataFrame, box: BoxCols | None = None) -> DataFrame:
@@ -269,33 +248,30 @@ class StoredIndex:
 
     def relation(self, box: BoxCols | None = None) -> "StoredRelation":
         """Queryable relation with driver-side manifest-MBR pruning plus
-        (zprefix) pushed z-range row-group pruning."""
-        totals = self.manifest_totals().collect()
-        boxes = [
-            (r["bucket"], r["xmin"], r["ymin"], r["xmax"], r["ymax"],
-             r["n_rows"])
-            for r in totals
-        ]
-        exts = self.manifest().agg(
-            F.max("max_ex").alias("ex"), F.max("max_ey").alias("ey")
-        ).collect()[0]
-        fb = []
-        fm = self.file_map()
-        if fm is not None:
-            fb = [
-                (r["path"], r["bucket"], r["zmin"], r["zmax"], r["n_rows"])
-                for r in fm.collect()
-            ]
-        df = self.spark.read.parquet(self.data_path)
+        (zprefix) pushed z-range row-group pruning.  Opening it runs no
+        Spark job: manifest and file map are read on the driver and the
+        data scan is planned with the memoized schema."""
+        rows = self.manifest_totals_rows()
+        fm = M.read_rows(self.fs, self.filemap_path) or []
         return StoredRelation(
-            df=df,
+            df=self.data(),
             conf=self.conf,
             box=box or BoxCols(),
             z_col="z",
-            max_extent=(exts["ex"] or 0.0, exts["ey"] or 0.0),
+            max_extent=(
+                max((r["max_ex"] for r in rows), default=0.0),
+                max((r["max_ey"] for r in rows), default=0.0),
+            ),
             bucket_shift=self.spec.shift if self.spec.kind == "zprefix" else None,
-            bucket_boxes=boxes,
-            file_boxes=fb,
+            bucket_boxes=[
+                (r["bucket"], r["xmin"], r["ymin"], r["xmax"], r["ymax"],
+                 r["n_rows"])
+                for r in rows
+            ],
+            file_boxes=[
+                (r["path"], r["bucket"], r["zmin"], r["zmax"], r["n_rows"])
+                for r in fm
+            ],
             data_path=self.data_path,
         )
 
@@ -303,9 +279,7 @@ class StoredIndex:
         """``isIndexValid()`` analog (``SpatialIndex.h:209``): recompute
         per-bucket aggregates from data and diff against manifest totals."""
         cols = ["bucket", "zmin", "zmax", "xmin", "ymin", "xmax", "ymax", "n_rows"]
-        got = M.manifest_for(
-            self.spark.read.parquet(self.data_path), build_id="check"
-        ).select(cols)
+        got = M.manifest_for(self.data(), build_id="check").select(cols)
         want = self.manifest_totals().select(cols)
         return got.exceptAll(want).count() + want.exceptAll(got).count() == 0
 
@@ -313,6 +287,11 @@ class StoredIndex:
 @dataclass
 class StoredRelation(SpatialRelation):
     """SpatialRelation over a stored index.
+
+    Built by :meth:`StoredIndex.relation` with no Spark job: the bucket
+    and file boxes below come from the manifest and file map read on the
+    driver, and every scan (the whole root or a file subset) is planned
+    with the index's memoized data schema, so nothing infers one.
 
     Pruning = driver-side manifest-MBR intersection (→ ``bucket IN``
     partition filter, works for every partitioner) composed with the
@@ -430,9 +409,11 @@ class StoredRelation(SpatialRelation):
         if files is not None:
             if not files:
                 return df.filter(F.lit(False))
-            sub = self.df.sparkSession.read.option(
-                "basePath", self.data_path
-            ).parquet(*files)
+            sub = (
+                self.df.sparkSession.read.schema(self.df.schema)
+                .option("basePath", self.data_path)
+                .parquet(*files)
+            )
             return sub.filter(pred) if pred is not None else sub
         if pred is not None:
             df = df.filter(pred)
@@ -585,6 +566,7 @@ def build_index(
     if not new_dirs:
         return idx
     written = spark.read.option("basePath", data_path).parquet(*new_dirs)
+    idx._data_schema = written.schema  # inferred here once; queries reuse it
     mdf = M.manifest_for(written, bytes_col=bytes_col, build_id=build_id)
     mdf.write.mode("append").parquet(M.manifest_path(path))
     if max_records_per_file:
@@ -613,7 +595,7 @@ def refresh_file_map(idx) -> None:
     driver-side with zero IO (:meth:`StoredIndex.estimate_rows`)."""
     spark = idx.spark
     fs = idx.fs
-    df = spark.read.parquet(idx.data_path)
+    df = idx.data()
     fm = (
         df.groupBy(
             F.input_file_name().alias("path"),

@@ -58,20 +58,6 @@ def _is_nd(idx) -> bool:
     return hasattr(idx, "box") and hasattr(idx.box, "dims")
 
 
-def _mpath(idx) -> str:
-    if _is_nd(idx):
-        return idx.manifest_path
-    return M.manifest_path(idx.path)
-
-
-def _read_manifest_df(idx):
-    p = _mpath(idx)
-    fs = idx.fs
-    if not fs.isdir(p) or not any(f.endswith(".parquet") for f in fs.listdir(p)):
-        return None
-    return idx.spark.read.parquet(p)
-
-
 def _manifest_for_idx(idx, df: DataFrame, bytes_col, build_id: str):
     if _is_nd(idx):
         from libspatialindex_spark.operators import nd
@@ -86,14 +72,6 @@ def _manifest_cols(idx) -> list[str]:
 
         return nd.ND_MANIFEST_COLS
     return M.MANIFEST_COLS
-
-
-def _manifest_schema(idx) -> str:
-    if _is_nd(idx):
-        from libspatialindex_spark.operators import nd
-
-        return nd.ND_MANIFEST_SCHEMA
-    return M.MANIFEST_SCHEMA
 
 
 def _default_box(idx):
@@ -120,10 +98,20 @@ def _invalidate_file_map(idx) -> None:
 
 
 def committed_build_ids(idx) -> set[str]:
-    m = _read_manifest_df(idx)
-    if m is None:
-        return set()
-    return {r["build_id"] for r in m.select("build_id").distinct().collect()}
+    rows = M.read_rows(idx.fs, idx.manifest_path)
+    return {r["build_id"] for r in rows or []}
+
+
+def _read_buckets(idx, buckets) -> DataFrame:
+    """Only the ``bucket=N`` data dirs of ``buckets``, read with the
+    index's data schema: no inference job, and the ``.old`` asides of a
+    swap in flight are never listed."""
+    root = idx.data_path
+    return (
+        idx.spark.read.schema(idx.data_schema())
+        .option("basePath", root)
+        .parquet(*[FS.join(root, f"bucket={b}") for b in buckets])
+    )
 
 
 def _sweep_build(fs, data_path: str, tag: str) -> None:
@@ -173,7 +161,7 @@ def insert_batch(
         .mode("overwrite")
         .parquet(staging)
     )
-    staged = spark.read.option("basePath", staging).parquet(staging)
+    staged = spark.read.schema(keyed.schema).parquet(staging)  # no inference
     mdf = _manifest_for_idx(idx, staged, bytes_col, build_id)
     mrows = mdf.select(*_manifest_cols(idx)).collect()  # one row per bucket
 
@@ -199,8 +187,8 @@ def insert_batch(
     # refinement; keeping a stale one would lose rows from pruned scans).
     _invalidate_file_map(idx)
     spark.createDataFrame(
-        mrows, schema=_manifest_schema(idx)
-    ).coalesce(1).write.mode("append").parquet(_mpath(idx))
+        mrows, schema=idx.manifest_schema
+    ).coalesce(1).write.mode("append").parquet(idx.manifest_path)
     return idx
 
 
@@ -225,7 +213,7 @@ def recover(idx) -> None:
     recovery-path-only cost.
     """
     fs = idx.fs
-    mpath = _mpath(idx)
+    mpath = idx.manifest_path
     if fs.isdir(mpath + ".old"):
         if fs.isdir(mpath):
             fs.delete(mpath + ".old")
@@ -240,21 +228,14 @@ def recover(idx) -> None:
     ]
     if not asides:
         return
-    m = _read_manifest_df(idx)
-    counts: dict[int, int] = {}
-    if m is not None:
-        counts = {
-            r["bucket"]: int(r["n"])
-            for r in m.groupBy("bucket").agg(F.sum("n_rows").alias("n")).collect()
-        }
+    m = M.read_rows(fs, mpath)
+    counts = {r["bucket"]: r["n_rows"] for r in M.rollup(m or [])}
     for name in asides:
         aside = FS.join(idx.data_path, name)
         live = FS.join(idx.data_path, name[: -len(".old")])
         b = int(name[len("bucket="): -len(".old")])
         want = counts.get(b, 0)
-        has_live = fs.isdir(live) and any(
-            f.endswith(".parquet") for f in fs.listdir(live)
-        )
+        has_live = bool(M.parquet_files(fs, live))
         live_rows = idx.spark.read.parquet(live).count() if has_live else 0
         if m is not None and live_rows == want:
             fs.delete(aside)  # forward: manifest already describes live
@@ -266,12 +247,64 @@ def recover(idx) -> None:
 def _replace_manifest(idx, fresh: DataFrame) -> None:
     """Atomically replace the manifest (write new → aside → swap → drop)."""
     fs = idx.fs
-    mpath = _mpath(idx)
+    mpath = idx.manifest_path
     fresh.coalesce(1).write.mode("overwrite").parquet(mpath + ".new")
     if fs.isdir(mpath):
         fs.rename(mpath, mpath + ".old")
     fs.rename(mpath + ".new", mpath)
     fs.delete(mpath + ".old")
+
+
+def _swap_and_commit(
+    idx, staged: str, touched: list, bytes_col, build_id: str
+) -> None:
+    """Swap the staged rewrite of the ``touched`` buckets in and commit.
+
+    Per bucket: aside → move in.  The ``.old`` aside copies are NOT
+    deleted here — they survive until after the manifest commit, so every
+    crash point leaves old or new data present for EVERY bucket (including
+    the all-deleted case, whose bucket has no new dir): before the
+    manifest commit, recover() can restore the aside consistently with the
+    still-old manifest; after it, recover() just drops asides.
+
+    Commit: drop the touched buckets' manifest rows and append one fresh
+    aggregate per touched bucket that still has data — staged + atomic
+    swap, explicit schema (survives an all-deleted case).  The stale file
+    map goes first: it must never survive."""
+    fs = idx.fs
+    for b in touched:
+        live = FS.join(idx.data_path, f"bucket={b}")
+        old = FS.join(idx.data_path, f"bucket={b}.old")
+        fs.delete(old)  # stale aside from pre-recover() eras only
+        src = FS.join(staged, f"bucket={b}")
+        if fs.isdir(live):
+            fs.rename(live, old)
+        if M.parquet_files(fs, src):
+            fs.rename(src, live)
+    fs.delete(staged)
+
+    cols = _manifest_cols(idx)
+    keep = [
+        tuple(r[c] for c in cols)
+        for r in idx.manifest_rows() if r["bucket"] not in touched
+    ]
+    still = [
+        b for b in touched
+        if M.parquet_files(fs, FS.join(idx.data_path, f"bucket={b}"))
+    ]
+    fresh = []
+    if still:
+        fresh = _manifest_for_idx(
+            idx, _read_buckets(idx, still), bytes_col, build_id
+        ).select(*cols).collect()
+    _invalidate_file_map(idx)
+    _replace_manifest(
+        idx, idx.spark.createDataFrame(keep + fresh, schema=idx.manifest_schema)
+    )
+    # Only now — past the commit point — drop the aside copies.  A crash in
+    # this window leaves harmless ``.old`` debris that recover() sweeps.
+    for b in touched:
+        fs.delete(FS.join(idx.data_path, f"bucket={b}.old"))
 
 
 def delete_rows(
@@ -288,16 +321,14 @@ def delete_rows(
     ``victims`` must carry the id column (and box columns if available, to
     route directly; otherwise victim buckets are discovered by semi-join).
     """
-    spark = idx.spark
     fs = idx.fs
     box = box or _default_box(idx)
     recover(idx)  # finish any interrupted earlier swap first
-    data = spark.read.parquet(idx.data_path)
 
     if set(c.name for c in victims.schema) >= _box_col_names(box):
         vb = idx.keyed(victims, box).select(id_col, "bucket")
     else:
-        vb = data.join(
+        vb = idx.data().join(
             victims.select(id_col), on=id_col, how="left_semi"
         ).select(id_col, "bucket")
     touched = [r["bucket"] for r in vb.select("bucket").distinct().collect()]
@@ -308,10 +339,8 @@ def delete_rows(
     # next to the live dirs.
     staged = FS.join(idx.path, "_staging_delete")
     fs.delete(staged)
-    survivors = (
-        spark.read.option("basePath", idx.data_path)
-        .parquet(*[FS.join(idx.data_path, f"bucket={b}") for b in touched])
-        .join(victims.select(id_col), on=id_col, how="left_anti")
+    survivors = _read_buckets(idx, touched).join(
+        victims.select(id_col), on=id_col, how="left_anti"
     )
     # (bucket, z) sort: rewritten buckets keep the build's in-file z
     # clustering (plain unsorted staging silently degraded row-group zone
@@ -321,61 +350,7 @@ def delete_rows(
         "bucket"
     ).mode("overwrite").parquet(staged)
 
-    # Swap per bucket: aside → move in.  The ``.old`` aside copies are NOT
-    # deleted here — they survive until after the manifest commit below, so
-    # every crash point leaves old or new data present for EVERY bucket
-    # (including the all-deleted case, whose bucket has no new dir): before
-    # the manifest commit, recover() can restore the aside consistently
-    # with the still-old manifest; after it, recover() just drops asides.
-    for b in touched:
-        live = FS.join(idx.data_path, f"bucket={b}")
-        old = FS.join(idx.data_path, f"bucket={b}.old")
-        fs.delete(old)  # stale aside from pre-recover() eras only
-        src = FS.join(staged, f"bucket={b}")
-        has_new = fs.isdir(src) and any(
-            f.endswith(".parquet") for f in fs.listdir(src)
-        )
-        if fs.isdir(live):
-            fs.rename(live, old)
-        if has_new:
-            fs.rename(src, live)
-    fs.delete(staged)
-
-    # Manifest: drop touched buckets' rows, re-append fresh aggregates —
-    # staged + atomic swap, explicit schema (survives an all-deleted case).
-    keep_rows = (
-        idx.manifest()
-        .filter(~F.col("bucket").isin(touched))
-        .select(*_manifest_cols(idx))
-        .collect()
-    )
-    still = [
-        b for b in touched
-        if fs.isdir(FS.join(idx.data_path, f"bucket={b}"))
-        and any(
-            f.endswith(".parquet")
-            for f in fs.listdir(FS.join(idx.data_path, f"bucket={b}"))
-        )
-    ]
-    fresh_rows = []
-    if still:
-        fresh_rows = _manifest_for_idx(
-            idx,
-            spark.read.option("basePath", idx.data_path).parquet(
-                *[FS.join(idx.data_path, f"bucket={b}") for b in still]
-            ),
-            bytes_col,
-            build_id,
-        ).select(*_manifest_cols(idx)).collect()
-    fresh = spark.createDataFrame(
-        keep_rows + fresh_rows, schema=_manifest_schema(idx)
-    )
-    _invalidate_file_map(idx)  # before commit: stale map must never survive
-    _replace_manifest(idx, fresh)
-    # Only now — past the commit point — drop the aside copies.  A crash in
-    # this window leaves harmless ``.old`` debris that recover() sweeps.
-    for b in touched:
-        fs.delete(FS.join(idx.data_path, f"bucket={b}.old"))
+    _swap_and_commit(idx, staged, touched, bytes_col, build_id)
     return idx
 
 
@@ -406,7 +381,6 @@ def compact(
     before and after — only physical file count and in-file order change.
     Works on 2-D and N-d stored indexes alike (shared z/bucket layout).
     """
-    spark = idx.spark
     fs = idx.fs
     recover(idx)
 
@@ -414,11 +388,7 @@ def compact(
     for name in fs.listdir(idx.data_path):
         if not name.startswith("bucket=") or name.endswith(".old"):
             continue
-        files = [
-            f
-            for f in fs.listdir(FS.join(idx.data_path, name))
-            if f.endswith(".parquet")
-        ]
+        files = M.parquet_files(fs, FS.join(idx.data_path, name))
         if len(files) > max_files_per_bucket:
             touched.append(int(name[len("bucket="):]))
     if not touched:
@@ -426,9 +396,7 @@ def compact(
 
     staged = FS.join(idx.path, "_staging_compact")
     fs.delete(staged)
-    data = spark.read.option("basePath", idx.data_path).parquet(
-        *[FS.join(idx.data_path, f"bucket={b}") for b in touched]
-    )
+    data = _read_buckets(idx, touched)
     writer = (
         data.repartition(len(touched), F.col("bucket"))
         .sortWithinPartitions("bucket", "z")
@@ -439,41 +407,7 @@ def compact(
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.parquet(staged)
 
-    for b in touched:
-        live = FS.join(idx.data_path, f"bucket={b}")
-        old = FS.join(idx.data_path, f"bucket={b}.old")
-        fs.delete(old)
-        src = FS.join(staged, f"bucket={b}")
-        has_new = fs.isdir(src) and any(
-            f.endswith(".parquet") for f in fs.listdir(src)
-        )
-        if fs.isdir(live):
-            fs.rename(live, old)
-        if has_new:
-            fs.rename(src, live)
-    fs.delete(staged)
-
-    # Manifest: touched buckets collapse to ONE fresh aggregate row each
-    # (insert had appended one row per batch) — same staged swap as delete.
-    keep_rows = (
-        idx.manifest()
-        .filter(~F.col("bucket").isin(touched))
-        .select(*_manifest_cols(idx))
-        .collect()
-    )
-    fresh_rows = _manifest_for_idx(
-        idx,
-        spark.read.option("basePath", idx.data_path).parquet(
-            *[FS.join(idx.data_path, f"bucket={b}") for b in touched]
-        ),
-        bytes_col,
-        build_id,
-    ).select(*_manifest_cols(idx)).collect()
-    fresh = spark.createDataFrame(
-        keep_rows + fresh_rows, schema=_manifest_schema(idx)
-    )
-    _invalidate_file_map(idx)  # before commit: stale map must never survive
-    _replace_manifest(idx, fresh)
-    for b in touched:
-        fs.delete(FS.join(idx.data_path, f"bucket={b}.old"))
+    # Touched buckets collapse to ONE fresh manifest row each (insert had
+    # appended one row per batch).
+    _swap_and_commit(idx, staged, touched, bytes_col, build_id)
     return idx

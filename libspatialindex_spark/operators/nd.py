@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from libspatialindex_spark.functions import curves
 from libspatialindex_spark.functions import geometry as G
 from libspatialindex_spark.plans import fs as FS
+from libspatialindex_spark.plans import manifest as M
 from libspatialindex_spark.plans.cover import Cover, z_cover_nd
 
 
@@ -133,9 +134,11 @@ class NDRelation:
             if not files:
                 return df.filter(F.lit(False))
             if len(files) < len(self.file_boxes):
-                sub = self.df.sparkSession.read.option(
-                    "basePath", self.data_path
-                ).parquet(*files)
+                sub = (
+                    self.df.sparkSession.read.schema(self.df.schema)
+                    .option("basePath", self.data_path)
+                    .parquet(*files)
+                )
                 return sub.filter(pred) if pred is not None else sub
         if pred is not None:
             df = df.filter(pred)
@@ -568,8 +571,19 @@ def kd_partition_tree_nd(sample: "np_like", levels: int) -> list:
     return build(sample, 0)
 
 
+# Explicit manifest schema (mutation rewrites must survive empty frames).
+ND_MANIFEST_COLS = [
+    "bucket", "zmin", "zmax", "n_rows", "lows", "highs", "max_ext", "build_id",
+]
+ND_MANIFEST_SCHEMA = (
+    "bucket long, zmin long, zmax long, n_rows long, "
+    "lows array<double>, highs array<double>, max_ext array<double>, "
+    "build_id string"
+)
+
+
 @dataclass
-class NDStoredIndex:
+class NDStoredIndex(M.StoredLayout):
     """A persisted N-d two-level index (partitioned buckets + array
     manifest; bucket assignment per :class:`NDPartitionSpec`)."""
 
@@ -580,41 +594,10 @@ class NDStoredIndex:
     shift: int
     spec: NDPartitionSpec | None = None
 
+    manifest_schema = ND_MANIFEST_SCHEMA
+
     def _spec(self) -> NDPartitionSpec:
         return self.spec or NDPartitionSpec(kind="zprefix", shift=self.shift)
-
-    @property
-    def data_path(self) -> str:
-        return FS.join(self.path, "data")
-
-    @property
-    def manifest_path(self) -> str:
-        return FS.join(self.path, "manifest")
-
-    @property
-    def filemap_path(self) -> str:
-        return FS.join(self.path, "filemap")
-
-    @property
-    def fs(self):
-        return FS.get_fs(self.spark, self.path)
-
-    def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.manifest_path)
-
-    def file_map(self) -> DataFrame | None:
-        """Per-FILE zone map — the third index level, now at ANY dimension
-        (VERDICT r3 missing #3: the fork ships 3-D learned-index targets,
-        ``test/CMakeLists.txt`` ``ZMQuery3d``/``LISAQuery3d``).  The d-way
-        Morton key is a scalar long, so the 2-D map/model machinery
-        (``index_build.refresh_file_map``) applies unchanged."""
-        p = self.filemap_path
-        fs = self.fs
-        if not fs.isdir(p) or not any(
-            f.endswith(".parquet") for f in fs.listdir(p)
-        ):
-            return None
-        return self.spark.read.parquet(p)
 
     def zm_models(self) -> dict[int, tuple[float, float, int]]:
         """Per-bucket learned rank(z) ≈ a·z + b models with certified
@@ -659,50 +642,30 @@ class NDStoredIndex:
         """Per-bucket roll-up of (possibly multi-row after incremental
         inserts) manifest entries; array bounds merged element-wise on the
         driver — the manifest is driver-sized by design."""
-        agg: dict[int, dict] = {}
-        for r in self.manifest().collect():
-            b = int(r["bucket"])
-            e = agg.get(b)
-            if e is None:
-                agg[b] = {
-                    "bucket": b, "zmin": int(r["zmin"]), "zmax": int(r["zmax"]),
-                    "n_rows": int(r["n_rows"]), "lows": list(r["lows"]),
-                    "highs": list(r["highs"]), "max_ext": list(r["max_ext"]),
-                }
-            else:
-                e["zmin"] = min(e["zmin"], int(r["zmin"]))
-                e["zmax"] = max(e["zmax"], int(r["zmax"]))
-                e["n_rows"] += int(r["n_rows"])
-                e["lows"] = [min(a, b_) for a, b_ in zip(e["lows"], r["lows"])]
-                e["highs"] = [max(a, b_) for a, b_ in zip(e["highs"], r["highs"])]
-                e["max_ext"] = [
-                    max(a, b_) for a, b_ in zip(e["max_ext"], r["max_ext"])
-                ]
-        return list(agg.values())
+        return M.rollup(
+            self.manifest_rows(),
+            mins=("zmin", "lows"),
+            maxs=("zmax", "highs", "max_ext"),
+        )
 
     def relation(self) -> NDRelation:
+        """Opened with no Spark job, like ``StoredIndex.relation``."""
         rows = self.manifest_totals_rows()
-        boxes = [(r["bucket"], r["lows"], r["highs"]) for r in rows]
+        fm = M.read_rows(self.fs, self.filemap_path) or []
         exts = [0.0] * self.conf.d
         for r in rows:
-            for a in range(self.conf.d):
-                exts[a] = max(exts[a], r["max_ext"][a])
-        fb = []
-        fm = self.file_map()
-        if fm is not None:
-            fb = [
-                (r["path"], r["bucket"], r["zmin"], r["zmax"], r["n_rows"])
-                for r in fm.collect()
-            ]
-        df = self.spark.read.parquet(self.data_path)
+            exts = [max(a, b) for a, b in zip(exts, r["max_ext"])]
         return NDRelation(
-            df=df,
+            df=self.data(),
             conf=self.conf,
             box=self.box,
             z_col="z",
             max_extent=tuple(exts),
-            bucket_boxes=boxes,
-            file_boxes=fb,
+            bucket_boxes=[(r["bucket"], r["lows"], r["highs"]) for r in rows],
+            file_boxes=[
+                (r["path"], r["bucket"], r["zmin"], r["zmax"], r["n_rows"])
+                for r in fm
+            ],
             data_path=self.data_path,
         )
 
@@ -711,26 +674,13 @@ class NDStoredIndex:
         and diff against the manifest roll-up."""
         got = {
             (int(r["bucket"]), int(r["zmin"]), int(r["zmax"]), int(r["n_rows"]))
-            for r in _nd_manifest_for(
-                self.spark.read.parquet(self.data_path), self.box
-            ).collect()
+            for r in _nd_manifest_for(self.data(), self.box).collect()
         }
         want = {
             (r["bucket"], r["zmin"], r["zmax"], r["n_rows"])
             for r in self.manifest_totals_rows()
         }
         return got == want
-
-
-# Explicit manifest schema (mutation rewrites must survive empty frames).
-ND_MANIFEST_COLS = [
-    "bucket", "zmin", "zmax", "n_rows", "lows", "highs", "max_ext", "build_id",
-]
-ND_MANIFEST_SCHEMA = (
-    "bucket long, zmin long, zmax long, n_rows long, "
-    "lows array<double>, highs array<double>, max_ext array<double>, "
-    "build_id string"
-)
 
 
 def _nd_manifest_for(df: DataFrame, box: NDBox, build_id: str = "build-1"):
@@ -847,6 +797,7 @@ def build_index_nd(
         spark=spark, path=path, conf=conf, box=box, shift=shift, spec=spec
     )
     written = spark.read.parquet(data_path)
+    idx._data_schema = written.schema  # inferred here once; queries reuse it
     _nd_manifest_for(written, box, build_id).write.mode("overwrite").parquet(
         idx.manifest_path
     )

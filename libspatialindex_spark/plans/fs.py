@@ -4,7 +4,8 @@ The reference talks to storage through ``IStorageManager``
 (``include/spatialindex/SpatialIndex.h:156-164``) so the same tree runs on
 disk, memory, or user-supplied pages (``src/capi/CustomStorage.cc``).  The
 distributed analog: every driver-side file operation the index layout needs
-(manifest swap, bucket sweep, spec read/write) goes through this interface,
+(manifest swap, bucket sweep, spec read/write, the driver-side manifest
+read) goes through this interface,
 so the index can live on local disk in tests and on HDFS/S3A on a cluster —
 Spark itself already reads/writes any Hadoop-FS URI; this closes the gap
 for the *driver-side* metadata ops.
@@ -72,9 +73,12 @@ class LocalFS:
 
         shutil.move(src, dst)
 
-    def read_text(self, path: str) -> str:
-        with open(path) as f:
+    def read_bytes(self, path: str) -> bytes:
+        with open(path, "rb") as f:
             return f.read()
+
+    def read_text(self, path: str) -> str:
+        return self.read_bytes(path).decode()
 
     def write_text(self, path: str, text: str) -> None:
         import os
@@ -129,20 +133,17 @@ class HadoopFS:
         if not ok:
             raise OSError(f"rename failed: {src} -> {dst}")
 
-    def read_text(self, path: str) -> str:
-        fs = self._fs(path)
-        stream = fs.open(self._path(path))
+    def read_bytes(self, path: str) -> bytes:
+        stream = self._fs(path).open(self._path(path))
         try:
-            out = bytearray()
-            buf_cls = self._jvm.java.io.BufferedReader
-            rdr = buf_cls(self._jvm.java.io.InputStreamReader(stream, "UTF-8"))
-            line = rdr.readLine()
-            while line is not None:
-                out.extend((line + "\n").encode())
-                line = rdr.readLine()
-            return out.decode().rstrip("\n")
+            return bytes(
+                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            )
         finally:
             stream.close()
+
+    def read_text(self, path: str) -> str:
+        return self.read_bytes(path).decode()
 
     def write_text(self, path: str, text: str) -> None:
         parent = path.rsplit("/", 1)[0]

@@ -30,6 +30,7 @@ def test_hadoop_fs_roundtrip(spark, tmp_path):
     assert fs.isdir(FS.join(base, "d1"))
     fs.write_text(FS.join(base, "d1", "x.json"), json.dumps({"a": 1}))
     assert json.loads(fs.read_text(FS.join(base, "d1", "x.json"))) == {"a": 1}
+    assert fs.read_bytes(FS.join(base, "d1", "x.json")) == b'{"a": 1}'
     assert "x.json" in fs.listdir(FS.join(base, "d1"))
     fs.rename(FS.join(base, "d1"), FS.join(base, "d2"))
     assert not fs.exists(FS.join(base, "d1")) and fs.isdir(FS.join(base, "d2"))
