@@ -40,10 +40,11 @@ class EngineConfig:
     hot_cell_salt:
         Max salt fan-out applied to skewed cells in spatial joins
         (LISA tie-advance precedent, ``BulkLoader.cc:543-556``).
-    knn_ring_init / knn_ring_growth:
-        Initial half-width and growth factor of the kNN ring expansion.
     tile_bits:
         Per-axis bits of the raster tile grid used by the tiling stage.
+
+    The kNN ring schedule is not a knob: every kNN starts at
+    ``knn.RING_INIT`` and grows by ``knn.RING_GROWTH``.
     """
 
     grid_bits: int = 16
@@ -52,8 +53,6 @@ class EngineConfig:
     sample_fraction: float = 0.05
     max_sample_rows: int = 200_000
     hot_cell_salt: int = 16
-    knn_ring_init: float = 1.0 / 64.0
-    knn_ring_growth: float = 2.0
     tile_bits: int = 6  # 64×64 tiles
     extra_spark_conf: dict = field(default_factory=dict)
 

@@ -301,6 +301,9 @@ class StoredRelation(SpatialRelation):
     meets the cover (the ZM learned index's in-node skip,
     ``LearnedIndex.cc:1494-1507``, expressed as driver-side file
     selection).
+
+    kNN runs the same ring core as on any relation (``knn._ring_knn``);
+    this pruning plans each ring's window.
     """
 
     bucket_shift: int | None = None
@@ -309,52 +312,6 @@ class StoredRelation(SpatialRelation):
     # a bucket because the build sorts by z before splitting files
     file_boxes: list = field(default_factory=list)
     data_path: str | None = None
-
-    def seed_knn_radius_box(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float, k: int
-    ) -> float | None:
-        """Certified kNN radius from the manifest (VERDICT r1 #7), for a
-        point OR box query shape: sort buckets by min query↔bucket-MBR
-        distance, accumulate row counts to ≥ k, take the max far distance
-        over the used buckets — every accumulated row provably lies within
-        that radius, so the ring loop collapses to a single pass.  This is
-        the root-node descent of the reference's best-first kNN
-        (RTree.cc:748-762) priced off header metadata instead of count
-        jobs.  Far bound: dist((px,py), query box)² separates per axis and
-        each axis term is convex in the coordinate, so the max over the
-        bucket MBR is attained at a corner — take the per-axis max over
-        the bucket's two edge coordinates (degenerates to the old
-        point-query |px−x0|/|px−x1| form)."""
-        if not self.bucket_boxes or not any(
-            len(t) >= 6 for t in self.bucket_boxes
-        ):
-            return None
-
-        def axis_near(lo, hi, qlo, qhi):
-            return max(lo - qhi, qlo - hi, 0.0)
-
-        def axis_far(lo, hi, qlo, qhi):
-            return max(
-                max(qlo - lo, lo - qhi, 0.0), max(qlo - hi, hi - qhi, 0.0)
-            )
-
-        stats = []
-        for b, x0, y0, x1, y1, n in self.bucket_boxes:
-            dx = axis_near(x0, x1, qxmin, qxmax)
-            dy = axis_near(y0, y1, qymin, qymax)
-            near = (dx * dx + dy * dy) ** 0.5
-            fx = axis_far(x0, x1, qxmin, qxmax)
-            fy = axis_far(y0, y1, qymin, qymax)
-            far = (fx * fx + fy * fy) ** 0.5
-            stats.append((near, far, n))
-        stats.sort()
-        acc, radius = 0, None
-        for near, far, n in stats:
-            acc += n
-            radius = far if radius is None else max(radius, far)
-            if acc >= k:
-                return radius
-        return None  # fewer than k rows in the whole index
 
     def _box_plan(
         self, qxmin: float, qymin: float, qxmax: float, qymax: float

@@ -7,17 +7,20 @@ k-th distance is returned**, so the result can exceed k rows
 (``RTree.cc:760-762``: stop only when the next node's minDist strictly
 exceeds the current k-th bound).
 
-Distributed shape (no global priority queue):
+Distributed shape (no global priority queue): every single-query kNN —
+2-D point, box, segment and custom comparator, and the N-d point and box
+in ``nd.py`` — runs the one ring core :func:`_ring_knn`:
 
-1. **Ring expansion** (driver loop): grow a square window around the query
-   point until ≥ k entries lie within true distance r (cheap pruned
-   count jobs — the analog of descending the tree until the queue holds k
-   leaves).  Entries outside the window have dist > r ≥ d_k, so the window
-   is a certified superset.
-2. **Threshold**: d_k = k-th smallest distance among candidates (a top-k
-   ``orderBy().limit(k)`` on the pruned set — tiny).
-3. **Tie-inclusive emit**: ``filter(dist2 <= d_k)`` — NOT ``rank() <= k``,
+1. **Ring probe** (driver loop): grow a window around the query until ≥ k
+   entries lie within distance r (the analog of descending the tree until
+   the queue holds k leaves).  Entries outside the window have dist > r ≥
+   d_k, so the window is a certified superset.  One top-k aggregate per
+   ring returns both the count that certifies and the k-th distance d_k.
+2. **Tie-inclusive emit**: ``filter(dist2 <= d_k)`` — NOT ``rank() <= k``,
    which would drop ties.
+
+The batch :func:`knn_join` certifies per query the same way, through one
+window resolve (:func:`_resolve_per_query`) shared with ``nd.knn_join_nd``.
 """
 
 from __future__ import annotations
@@ -33,33 +36,52 @@ from pyspark.sql import types as T
 from libspatialindex_spark.functions import geometry as G
 from libspatialindex_spark.operators.relation import SpatialRelation
 
-
-def _dist2(rel: SpatialRelation, px: float, py: float):
-    b = rel.box
-    return G.min_dist2_point(
-        F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax), px, py
-    )
+RING_INIT = 1.0 / 64.0  # first ring's half-width, in world units
+RING_GROWTH = 2.0
 
 
-def _emit_tie_inclusive(cand: DataFrame, k: int, dist_col: str) -> DataFrame:
-    """Phases 2-3 shared by every kNN variant: exact k-th distance bound
-    (top-k on the pruned set), then the tie-inclusive threshold
-    (RTree.cc:760-762 semantics).  The result is ≤ k + ties rows, so an
-    eager localCheckpoint is cheap and lets us unpersist the (large)
-    candidate cache instead of leaking it into a long-lived session
-    (VERDICT r1 #7)."""
-    cand = cand.persist()
-    try:
-        kth_rows = (
-            cand.select(dist_col).orderBy(dist_col).limit(k)
-            .agg(F.max(dist_col).alias("kth")).collect()
-        )
-        kth = kth_rows[0]["kth"]
-        if kth is None:  # empty relation
-            return cand.filter(F.lit(False)).localCheckpoint()
-        return cand.filter(F.col(dist_col) <= F.lit(kth)).localCheckpoint()
-    finally:
-        cand.unpersist()
+def _ring_radii(world_r: float):
+    """Ring half-widths below the world extent: RING_INIT, ×RING_GROWTH, …"""
+    r = RING_INIT
+    while r < world_r:
+        yield r
+        r *= RING_GROWTH
+
+
+def _ring_knn(candidates, k: int, dist_col: str, radii) -> DataFrame:
+    """The one kNN core: certified ring probe + tie-inclusive emit.
+
+    ``candidates(r)`` returns the window-pruned rows with ``dist_col``
+    projected, filtered at most by a cheap lower bound of the distance;
+    ``r=None`` means every row.  Each radius in ``radii`` and then None is
+    tried in turn.  The candidates are persisted and capped at
+    ``dist_col <= r²`` on the cache, so a count ≥ k certifies d_k ≤ r² ≤ any
+    out-of-window distance, and the emit is exact.  With ``r=None``
+    (saturation: fewer than k entries within the rings, or entries outside
+    the world box) the answer is min(k, N) rows; an empty relation gives a
+    null d_k and no rows.  The result is ≤ k + ties rows, so an eager
+    localCheckpoint is cheap and lets the candidate cache be released
+    instead of leaking into a long-lived session."""
+    for r in [*radii, None]:
+        cand = candidates(r).persist()
+        try:
+            capped = cand if r is None else cand.filter(
+                F.col(dist_col) <= F.lit(r * r)
+            )
+            row = (
+                capped.select(dist_col).orderBy(dist_col).limit(k)
+                .agg(
+                    F.max(dist_col).alias("kth"),
+                    F.count(F.lit(1)).alias("n"),
+                ).collect()[0]
+            )
+            if row["n"] >= k or r is None:
+                # a null kth (empty relation) keeps no rows
+                return capped.filter(
+                    F.col(dist_col) <= F.lit(row["kth"])
+                ).localCheckpoint()
+        finally:
+            cand.unpersist()
 
 
 def knn_box_query(
@@ -81,66 +103,29 @@ def knn_box_query(
     (``test/gtest/sidx_api_test.h:87``).  A point query is the degenerate
     box, so :func:`knn_query` delegates here.
 
-    Same distributed shape as the point version: ring-expand the box's
-    window until ≥ k entries certify within radius r (everything outside
-    the expanded window is farther than r), then tie-inclusive threshold.
+    Ring r grows the box's window by r on every side: everything outside
+    the expanded window is farther than r (see :func:`_ring_knn`).
     """
-    conf = rel.conf
-    wxmin, wymin, wxmax, wymax = conf.world
-    world_r = max(wxmax - wxmin, wymax - wymin)
+    wxmin, wymin, wxmax, wymax = rel.conf.world
     b = rel.box
     d2 = G.min_dist2_box(
         F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
         qxmin, qymin, qxmax, qymax,
     )
 
-    def candidates(radius: float, cap: bool = True) -> DataFrame:
-        if radius < world_r:
-            df = rel.pruned_for_box(
-                qxmin - radius, qymin - radius, qxmax + radius, qymax + radius
-            )
-        else:
-            df = rel.df
-        df = df.withColumn(dist_col, d2)
-        return df.filter(F.col(dist_col) <= radius * radius) if cap else df
+    def candidates(r):
+        if r is None:
+            return rel.df.withColumn(dist_col, d2)
+        # the exact cap stays below the persist: caching the uncapped
+        # window measured slower, and would cache a whole plain relation
+        return rel.pruned_for_box(
+            qxmin - r, qymin - r, qxmax + r, qymax + r
+        ).withColumn(dist_col, d2).filter(F.col(dist_col) <= r * r)
 
-    # Phase 1: certified superset window.  A stored index seeds the radius
-    # from manifest row counts (single pass, no count jobs — the header-
-    # metadata analog of the best-first descent); otherwise ring-expand
-    # until the window certifies ≥ k candidates.
-    seeded = rel.seed_knn_radius_box(qxmin, qymin, qxmax, qymax, k)
-    if seeded is not None:
-        # ≥ k rows certified within the radius
-        return _emit_tie_inclusive(candidates(seeded), k, dist_col)
-    # Combined ring probe (r6, guide §1.2 fewer passes): ONE top-k agg per
-    # ring returns both the candidate count (certification) and the k-th
-    # distance (threshold) — the separate ``limit(k).count()`` probe job
-    # the old loop paid per ring is gone.  Candidates are capped at the
-    # ring radius, so a count ≥ k certifies kth ≤ r² ≤ any out-of-window
-    # distance — the tie-inclusive emit is exact.
-    radius = conf.knn_ring_init
-    while radius < world_r:
-        cand = candidates(radius).persist()
-        try:
-            row = (
-                cand.select(dist_col).orderBy(dist_col).limit(k)
-                .agg(
-                    F.max(dist_col).alias("kth"),
-                    F.count(F.lit(1)).alias("n"),
-                ).collect()[0]
-            )
-            if row["n"] >= k:
-                return cand.filter(
-                    F.col(dist_col) <= F.lit(row["kth"])
-                ).localCheckpoint()
-        finally:
-            cand.unpersist()
-        radius *= conf.knn_ring_growth
-    # Ring saturated: fewer than k entries within world_r.  In-world
-    # distances still reach sqrt(2)·world_r, and entries may lie
-    # outside the configured world box — drop the distance cap and
-    # consider ALL entries (the reference returns min(k, N) rows).
-    return _emit_tie_inclusive(candidates(world_r, cap=False), k, dist_col)
+    return _ring_knn(
+        candidates, k, dist_col,
+        _ring_radii(max(wxmax - wxmin, wymax - wymin)),
+    )
 
 
 def knn_query(
@@ -158,49 +143,6 @@ def knn_query(
     ``min_dist2_point`` term for term, so results are unchanged.
     """
     return knn_box_query(rel, px, py, px, py, k, dist_col=dist_col)
-
-
-def _pt_seg_dist(px, py, x1, y1, x2, y2) -> float:
-    """Driver-side clamped point↔segment distance (seed bounds)."""
-    dx, dy = x2 - x1, y2 - y1
-    l2 = dx * dx + dy * dy
-    t = 0.0 if l2 == 0.0 else max(0.0, min(1.0, ((px - x1) * dx + (py - y1) * dy) / l2))
-    ex, ey = x1 + t * dx, y1 + t * dy
-    return math.hypot(px - ex, py - ey)
-
-
-def _seed_radius_segment(rel, x1, y1, x2, y2, k) -> float | None:
-    """Certified seed radius for a SEGMENT query from bucket metadata.
-
-    The box seed cannot be reused: dist(entry, segment) ≥ dist(entry,
-    segment MBR), so a radius certified for the MBR does NOT certify ≥ k
-    rows within it of the segment.  Valid far bound: dist(p, segment) is
-    convex in p, so its max over a bucket MBR is at a corner — far(bucket)
-    = max corner↔segment distance bounds every row in the bucket."""
-    boxes = getattr(rel, "bucket_boxes", None) or []
-    if not boxes or not any(len(t) >= 6 for t in boxes):
-        return None
-    sxmin, sxmax = min(x1, x2), max(x1, x2)
-    symin, symax = min(y1, y2), max(y1, y2)
-    stats = []
-    for b, bx0, by0, bx1, by1, n in boxes:
-        dxn = max(bx0 - sxmax, sxmin - bx1, 0.0)
-        dyn = max(by0 - symax, symin - by1, 0.0)
-        near = math.hypot(dxn, dyn)  # box↔segment-MBR: ordering heuristic
-        far = max(
-            _pt_seg_dist(cx, cy, x1, y1, x2, y2)
-            for cx in (bx0, bx1)
-            for cy in (by0, by1)
-        )
-        stats.append((near, far, n))
-    stats.sort()
-    acc, radius = 0, None
-    for near, far, n in stats:
-        acc += n
-        radius = far if radius is None else max(radius, far)
-        if acc >= k:
-            return radius
-    return None
 
 
 def knn_segment_query(
@@ -221,9 +163,7 @@ def knn_segment_query(
     the exact metric, as it did for Ball).  Ring expansion grows the
     segment's MBR: anything outside the MBR expanded by r is farther than
     r from the MBR, hence farther from the segment — certified."""
-    conf = rel.conf
-    wxmin, wymin, wxmax, wymax = conf.world
-    world_r = max(wxmax - wxmin, wymax - wymin)
+    wxmin, wymin, wxmax, wymax = rel.conf.world
     sxmin, sxmax = min(x1, x2), max(x1, x2)
     symin, symax = min(y1, y2), max(y1, y2)
     b = rel.box
@@ -238,65 +178,23 @@ def knn_segment_query(
         sxmin, symin, sxmax, symax,
     )
 
-    def projected(radius) -> DataFrame:
-        """Window-pruned, prefiltered candidates with the segment distance
-        PROJECTED but not yet filtered on.  The exact segment↔box
-        expression is too large for FilterExec's predicate codegen (a
-        Filter condition cannot be method-split the way a Project can), so
-        filtering on the derived column directly runs INTERPRETED — 20-30×
-        slower measured at sf0.1.  Project the distance (codegen, split
-        across methods) and PERSIST; the cap filter then reads a plain
-        cached attribute.  persist/unpersist per ring is deterministic —
-        the previous scheme's per-ring ``localCheckpoint`` blocks leaked
-        into a long-lived session (ADVICE r4)."""
-        if radius is not None:
-            df = rel.pruned_for_box(
-                sxmin - radius, symin - radius, sxmax + radius, symax + radius
-            ).filter(pre <= radius * radius)
-        else:
-            df = rel.df
-        return df.withColumn(dist_col, d2)
+    def candidates(r):
+        """The segment distance is PROJECTED, never filtered on here: the
+        exact segment↔box expression is too large for FilterExec's
+        predicate codegen (a Filter condition cannot be method-split the
+        way a Project can), so a filter on it runs INTERPRETED — 20-30×
+        slower measured at sf0.1.  The ring core's cap then reads a plain
+        cached attribute."""
+        if r is None:
+            return rel.df.withColumn(dist_col, d2)
+        return rel.pruned_for_box(
+            sxmin - r, symin - r, sxmax + r, symax + r
+        ).filter(pre <= r * r).withColumn(dist_col, d2)
 
-    def emit(cand: DataFrame, radius) -> DataFrame:
-        capped = cand if radius is None else cand.filter(
-            F.col(dist_col) <= F.lit(radius * radius)
-        )
-        return _emit_tie_inclusive(capped, k, dist_col)
-
-    seeded = _seed_radius_segment(rel, x1, y1, x2, y2, k)
-    if seeded is not None:
-        cand = projected(seeded).persist()
-        try:
-            return emit(cand, seeded)
-        finally:
-            cand.unpersist()
-    # Combined ring probe (r6): one top-k agg per ring yields both the
-    # certification count and the k-th distance — the separate
-    # ``limit(k).count()`` job per ring is gone (guide §1.2).
-    radius = conf.knn_ring_init
-    while radius < world_r:
-        cand = projected(radius).persist()
-        try:
-            capped = cand.filter(F.col(dist_col) <= F.lit(radius * radius))
-            row = (
-                capped.select(dist_col).orderBy(dist_col).limit(k)
-                .agg(
-                    F.max(dist_col).alias("kth"),
-                    F.count(F.lit(1)).alias("n"),
-                ).collect()[0]
-            )
-            if row["n"] >= k:
-                return capped.filter(
-                    F.col(dist_col) <= F.lit(row["kth"])
-                ).localCheckpoint()
-        finally:
-            cand.unpersist()
-        radius *= conf.knn_ring_growth
-    cand = projected(None).persist()
-    try:
-        return emit(cand, None)
-    finally:
-        cand.unpersist()
+    return _ring_knn(
+        candidates, k, dist_col,
+        _ring_radii(max(wxmax - wxmin, wymax - wymin)),
+    )
 
 
 def knn_query_custom(
@@ -315,8 +213,8 @@ def knn_query_custom(
     relation — one distributed codegen pass + a top-k, which is also what
     the reference degenerates to when the comparator disagrees with MBR
     geometry."""
-    return _emit_tie_inclusive(
-        rel.df.withColumn(dist_col, dist2_expr), k, dist_col
+    return _ring_knn(
+        lambda r: rel.df.withColumn(dist_col, dist2_expr), k, dist_col, ()
     )
 
 
@@ -398,7 +296,6 @@ def _knn_join_seed_round(
     k: int,
     d2,
     dist_col: str,
-    win,
     world_r: float,
     qid_col: str,
     _cells_of_box,
@@ -415,9 +312,9 @@ def _knn_join_seed_round(
     centers outside the world are CLAMPED into edge cells
     (F.least/F.greatest below), for which the far-corner bound does NOT
     hold — the radius is a heuristic there, and the downstream
-    ``_cnt >= k`` filter in :func:`knn_join` is the actual certification
-    (queries whose seed window under-collects fall through to the
-    doubling rounds).  Do not rely on the seed alone in refactors
+    ``_cnt >= k`` filter in :func:`_resolve_per_query` is the actual
+    certification (queries whose seed window under-collects fall through
+    to the doubling rounds).  Do not rely on the seed alone in refactors
     (ADVICE r4).  Radii are computed per query in an Arrow-batched pandas
     UDF over the broadcast histogram, so the operator stays distributed
     at any query count.
@@ -447,7 +344,7 @@ def _knn_join_seed_round(
         seeded.unpersist()
         return None
     rows = _knn_join_seed_core(
-        rel, seeded, float(med), k, d2, dist_col, win, world_r, qid_col,
+        rel, seeded, float(med), k, d2, dist_col, world_r, qid_col,
         _cells_of_box, _cell_of_point,
     )
     # a certified query (_cnt >= k >= 1) emits >= 1 row, so the resolved
@@ -517,31 +414,46 @@ def _knn_join_candidates(
     )
 
 
+def _resolve_per_query(
+    cand: DataFrame, k: int, dist_col: str, qid_col: str, certify: bool = True
+) -> DataFrame:
+    """The one per-query resolve of the kNN joins (2-D and N-d): rank each
+    query's (``_qid``, ``id``, ``dist_col``) candidates in a window, take
+    the k-th distance, and emit the tie-inclusive rows of every query that
+    certified ≥ k candidates (all queries when ``certify`` is False — the
+    no-cap fallback, min(k, N) rows).  Returns the rows as (``qid_col``,
+    id, ``dist_col``), MATERIALIZED via localCheckpoint; a certified query
+    always emits rows, so callers derive the resolved qids from them
+    instead of running a second window pass over the candidates."""
+    win = Window.partitionBy("_qid")
+    rn = F.row_number().over(win.orderBy(dist_col, "id"))
+    scored = cand.withColumn("_rn", rn).withColumn(
+        "_kth", F.max(F.when(F.col("_rn") <= k, F.col(dist_col))).over(win)
+    ).withColumn("_cnt", F.count(F.lit(1)).over(win))
+    if certify:
+        scored = scored.filter(F.col("_cnt") >= k)
+    return scored.filter(F.col(dist_col) <= F.col("_kth")).select(
+        F.col("_qid").alias(qid_col), "id", dist_col
+    ).localCheckpoint()
+
+
 def _knn_join_seed_core(
-    rel, seeded, med, k, d2, dist_col, win, world_r, qid_col,
+    rel, seeded, med, k, d2, dist_col, world_r, qid_col,
     _cells_of_box, _cell_of_point,
 ):
     """Shared body of the seeded round: cell-join candidates within each
-    query's seed radius, window rank, tie-inclusive emit of certified
-    queries.  ``seeded`` carries (_qid, _qx, _qy, _r); returns the
-    localCheckpointed result rows."""
+    query's seed radius, then the per-query resolve.  ``seeded`` carries
+    (_qid, _qx, _qy, _r); returns the localCheckpointed result rows."""
     bits = max(1, min(8, int(math.floor(math.log2(world_r / max(med, 1e-9))))))
     n = 1 << bits
     # no persist on the candidate stream (r6): it feeds exactly ONE action
-    # (the localCheckpoint below) — caching it only added a full extra
+    # (the resolve's localCheckpoint) — caching it only added a full extra
     # materialization pass of the widest intermediate (guide §5: persist
     # pays only when an intermediate is reused)
     cand = _knn_join_candidates(
         rel, seeded, n, d2, dist_col, _cells_of_box, _cell_of_point
     )
-    rn = F.row_number().over(win.orderBy(dist_col, "id"))
-    scored = cand.withColumn("_rn", rn).withColumn(
-        "_kth", F.max(F.when(F.col("_rn") <= k, F.col(dist_col))).over(win)
-    ).withColumn("_cnt", F.count(F.lit(1)).over(win))
-    ok = scored.filter(F.col("_cnt") >= k)
-    return ok.filter(F.col(dist_col) <= F.col("_kth")).select(
-        F.col("_qid").alias(qid_col), "id", dist_col
-    ).localCheckpoint()
+    return _resolve_per_query(cand, k, dist_col, qid_col)
 
 
 def knn_join(
@@ -602,7 +514,7 @@ def knn_join(
     hist = _center_cell_histogram(rel)
     n_rows = sum(row["count"] for row in hist)
     r = max(
-        conf.knn_ring_init,
+        RING_INIT,
         1.5 * world_r * math.sqrt(k / max(n_rows, 1)),
     )
 
@@ -610,7 +522,6 @@ def knn_join(
         F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
         F.col("_qx"), F.col("_qy"),
     )
-    win = Window.partitionBy("_qid")
     out: DataFrame | None = None
     spark = queries.sparkSession
     pschema = T.StructType([
@@ -621,9 +532,9 @@ def knn_join(
 
     # ---- histogram-seeded round 0 (single-pass for nearly every query) --
     # One cheap center-cell histogram (≤ 4096 rows to the driver) prices a
-    # CERTIFIED per-query radius the way the stored index's manifest seed
-    # does (RTree.cc:748-762 root descent off header metadata): accumulate
-    # cells by min query↔cell distance until ≥ k entries, radius = max
+    # CERTIFIED per-query radius (RTree.cc:748-762 root descent off header
+    # metadata): accumulate cells by min query↔cell distance until ≥ k
+    # entries, radius = max
     # far-corner distance over the used cells (an entry's box distance ≤
     # its center distance ≤ the cell's far corner).  The doubling loop
     # below remains as the completeness fallback (k > N, float edges).
@@ -651,7 +562,7 @@ def knn_join(
             sschema,
         )
         out = _knn_join_seed_core(
-            rel, seeded_df, med, k, d2, dist_col, win, world_r, qid_col,
+            rel, seeded_df, med, k, d2, dist_col, world_r, qid_col,
             _cells_of_box, _cell_of_point,
         )
         resolved = {
@@ -672,7 +583,7 @@ def knn_join(
             F.col(qy_col).alias("_qy"),
         ).persist()
         seeded = _knn_join_seed_round(
-            rel, pending, k, d2, dist_col, win, world_r, qid_col,
+            rel, pending, k, d2, dist_col, world_r, qid_col,
             _cells_of_box, _cell_of_point, hist=hist,
         )
         if seeded is not None:
@@ -684,29 +595,15 @@ def knn_join(
             pending.unpersist()
             pending = new_pending
 
-    def resolve(cand: DataFrame, certified) -> tuple[DataFrame, DataFrame]:
-        """Split candidates into resolved result rows (MATERIALIZED via
-        localCheckpoint) + resolved qids.  qids derive from the
-        checkpointed rows — a certified query (_cnt >= k >= 1) always
-        emits rows, so no second window pass over the candidates runs."""
-        rn = F.row_number().over(win.orderBy(dist_col, "id"))
-        scored = cand.withColumn("_rn", rn).withColumn(
-            "_kth", F.max(F.when(F.col("_rn") <= k, F.col(dist_col))).over(win)
-        ).withColumn("_cnt", F.count(F.lit(1)).over(win))
-        ok = scored.filter(certified(F.col("_cnt")))
-        rows = ok.filter(F.col(dist_col) <= F.col("_kth")).select(
-            F.col("_qid").alias(qid_col), "id", dist_col
-        ).localCheckpoint()
-        qids = rows.select(F.col(qid_col).alias("_qid")).distinct()
-        return rows, qids
-
     while True:
         if pending.limit(1).count() == 0:
             break
         if r >= world_r:
             # fallback: no distance cap — min(k, N) semantics
             cand = pending.crossJoin(rel.df).withColumn(dist_col, d2)
-            rows, _ = resolve(cand, lambda cnt: F.lit(True))
+            rows = _resolve_per_query(
+                cand, k, dist_col, qid_col, certify=False
+            )
             out = rows if out is None else out.unionByName(rows)
             break
         # cell size ≈ radius: each query covers a handful of cells
@@ -720,10 +617,11 @@ def knn_join(
             pending.withColumn("_r", F.lit(float(r))),
             n, d2, dist_col, _cells_of_box, _cell_of_point,
         )
-        rows, done_qids = resolve(cand, lambda cnt: cnt >= k)
-        # rows is already materialized inside resolve(); out stays a
-        # shallow union of checkpointed slices (≤ ~8 rounds deep)
+        rows = _resolve_per_query(cand, k, dist_col, qid_col)
+        # rows is already materialized; out stays a shallow union of
+        # checkpointed slices (≤ ~8 rounds deep)
         out = rows if out is None else out.unionByName(rows)
+        done_qids = rows.select(F.col(qid_col).alias("_qid")).distinct()
         new_pending = pending.join(done_qids, on="_qid", how="left_anti").persist()
         pending.unpersist()
         pending = new_pending

@@ -21,12 +21,14 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from libspatialindex_spark.functions import curves
 from libspatialindex_spark.functions import geometry as G
+from libspatialindex_spark.operators import knn
 from libspatialindex_spark.plans import fs as FS
 from libspatialindex_spark.plans import manifest as M
 from libspatialindex_spark.plans.cover import Cover, z_cover_nd
@@ -174,80 +176,32 @@ def point_location_query_nd(rel: NDRelation, pt: list[float]) -> DataFrame:
 
 
 def _knn_shape_nd(
-    rel: NDRelation,
-    qlo: list[float],
-    qhi: list[float],
-    k: int,
-    dist_col: str,
-    ring_init: float,
-    ring_growth: float,
+    rel: NDRelation, qlo: list[float], qhi: list[float], k: int, dist_col: str
 ) -> DataFrame:
-    """Shared d-dim kNN core for any box-shaped query (a point is the
-    degenerate box): cube-ring expansion around [qlo, qhi] + tie-inclusive
-    threshold (RTree.cc:744-812 semantics; the kNN distance is the
-    dimension-generic Region↔Region delta loop, Region.cc:312-338)."""
-    world_r = max(hi - lo for lo, hi in rel.conf.axes)
+    """d-dim kNN for any box-shaped query (a point is the degenerate box):
+    cube rings around [qlo, qhi] through the one ring core
+    (:func:`knn._ring_knn`; RTree.cc:744-812 semantics; the kNN distance is
+    the dimension-generic Region↔Region delta loop, Region.cc:312-338)."""
     d2 = G.min_dist2_box_nd(rel.box.lows(), rel.box.highs(), qlo, qhi)
 
-    def candidates(radius: float, cap: bool = True) -> DataFrame:
-        if radius < world_r:
-            df = rel.pruned_for_box(
-                [p - radius for p in qlo], [p + radius for p in qhi]
-            )
-        else:
-            df = rel.df
-        df = df.withColumn(dist_col, d2)
-        return df.filter(F.col(dist_col) <= radius * radius) if cap else df
+    def candidates(r):
+        if r is None:
+            return rel.df.withColumn(dist_col, d2)
+        return rel.pruned_for_box(
+            [p - r for p in qlo], [p + r for p in qhi]
+        ).withColumn(dist_col, d2).filter(F.col(dist_col) <= r * r)
 
-    # Combined ring probe (r6): one top-k agg per ring yields both the
-    # certification count and the k-th distance — the separate
-    # ``limit(k).count()`` job per ring is gone (guide §1.2; same shape
-    # as the 2-D ``knn_box_query``).
-    radius = ring_init
-    while radius < world_r:
-        cand = candidates(radius).persist()
-        try:
-            row = (
-                cand.select(dist_col).orderBy(dist_col).limit(k)
-                .agg(
-                    F.max(dist_col).alias("kth"),
-                    F.count(F.lit(1)).alias("n"),
-                ).collect()[0]
-            )
-            if row["n"] >= k:
-                return cand.filter(
-                    F.col(dist_col) <= F.lit(row["kth"])
-                ).localCheckpoint()
-        finally:
-            cand.unpersist()
-        radius *= ring_growth
-
-    cand = candidates(world_r, cap=False).persist()  # saturation: no cap
-    try:
-        kth_rows = (
-            cand.select(dist_col).orderBy(dist_col).limit(k)
-            .agg(F.max(dist_col).alias("kth")).collect()
-        )
-        kth = kth_rows[0]["kth"]
-        if kth is None:
-            return cand.filter(F.lit(False)).localCheckpoint()
-        return cand.filter(F.col(dist_col) <= F.lit(kth)).localCheckpoint()
-    finally:
-        cand.unpersist()
+    return knn._ring_knn(
+        candidates, k, dist_col,
+        knn._ring_radii(max(hi - lo for lo, hi in rel.conf.axes)),
+    )
 
 
 def knn_query_nd(
-    rel: NDRelation,
-    pt: list[float],
-    k: int,
-    dist_col: str = "dist2",
-    ring_init: float = 1.0 / 64.0,
-    ring_growth: float = 2.0,
+    rel: NDRelation, pt: list[float], k: int, dist_col: str = "dist2"
 ) -> DataFrame:
     """Q4 in d dims: tie-inclusive point kNN — the degenerate box."""
-    return _knn_shape_nd(
-        rel, list(pt), list(pt), k, dist_col, ring_init, ring_growth
-    )
+    return _knn_shape_nd(rel, list(pt), list(pt), k, dist_col)
 
 
 def knn_box_query_nd(
@@ -256,15 +210,11 @@ def knn_box_query_nd(
     qhi: list[float],
     k: int,
     dist_col: str = "dist2",
-    ring_init: float = 1.0 / 64.0,
-    ring_growth: float = 2.0,
 ) -> DataFrame:
     """kNN with a d-dim REGION query shape (``nearestNeighborQuery``
     accepts any IShape at any dimension, RTree.cc:744-746 + 306-308) —
     the 2-D ``knn_box_query`` generalized."""
-    return _knn_shape_nd(
-        rel, list(qlo), list(qhi), k, dist_col, ring_init, ring_growth
-    )
+    return _knn_shape_nd(rel, list(qlo), list(qhi), k, dist_col)
 
 
 def knn_join_nd(
@@ -274,26 +224,26 @@ def knn_join_nd(
     q_cols: list[str] | None = None,
     qid_col: str = "qid",
     dist_col: str = "dist2",
-    ring_init: float = 1.0 / 64.0,
 ) -> DataFrame:
     """Batch kNN in d dims (the 2-D ``knn.knn_join`` shape generalized):
     iterative radius doubling over the unresolved query subset, d-cube
-    cell equi-join candidates sized to the radius, per-query tie-inclusive
-    threshold, nearest-point-cell dedup (a (query, entry) pair is emitted
-    only from the cell containing the entry box's nearest point to the
-    query — exactly one cell, no dropDuplicates).  Unbounded loop, but the
-    radius doubles per round and the ``r >= world_r`` terminal branch
-    resolves every remaining query with min(k, N) semantics.
+    cell equi-join candidates sized to the radius, the per-query
+    tie-inclusive resolve shared with the 2-D join
+    (:func:`knn._resolve_per_query`), nearest-point-cell dedup (a (query,
+    entry) pair is emitted only from the cell containing the entry box's
+    nearest point to the query — exactly one cell, no dropDuplicates).
+    Unbounded loop, but the radius doubles per round and the
+    ``r >= world_r`` terminal branch resolves every remaining query with
+    min(k, N) semantics.
 
     ``q_cols``: the d query-point columns (default q0..q{d-1}).
     Output: (qid, id, dist2), tie-inclusive per query."""
-    from pyspark.sql import Window
-
     d = rel.conf.d
+    axes = rel.conf.axes
     q_cols = q_cols or [f"q{i}" for i in range(d)]
-    world_r = max(hi - lo for lo, hi in rel.conf.axes)
+    world_r = max(hi - lo for lo, hi in axes)
     n_rows = rel.df.count()
-    r = max(ring_init, 1.5 * world_r * (k / max(n_rows, 1)) ** (1.0 / d))
+    r = max(knn.RING_INIT, 1.5 * world_r * (k / max(n_rows, 1)) ** (1.0 / d))
 
     pend_cols = [F.col(qid_col).alias("_qid")] + [
         F.col(c).alias(f"_q{i}") for i, c in enumerate(q_cols)
@@ -301,87 +251,39 @@ def knn_join_nd(
     pending = queries.select(*pend_cols).persist()
     qpt = [F.col(f"_q{i}") for i in range(d)]
     d2 = G.min_dist2_point_nd(rel.box.lows(), rel.box.highs(), qpt)
-    win = Window.partitionBy("_qid")
+    # nearest point of the entry box to the query, per axis
+    near = [
+        F.greatest(F.col(lo_c), F.least(q, F.col(hi_c)))
+        for q, (lo_c, hi_c) in zip(qpt, rel.box.dims)
+    ]
     out: DataFrame | None = None
-
-    def resolve(cand: DataFrame, certified):
-        rn = F.row_number().over(win.orderBy(dist_col, "id"))
-        scored = cand.withColumn("_rn", rn).withColumn(
-            "_kth", F.max(F.when(F.col("_rn") <= k, F.col(dist_col))).over(win)
-        ).withColumn("_cnt", F.count(F.lit(1)).over(win))
-        ok = scored.filter(certified(F.col("_cnt")))
-        rows = ok.filter(F.col(dist_col) <= F.col("_kth")).select(
-            F.col("_qid").alias(qid_col), "id", dist_col
-        )
-        return rows, ok.select("_qid").distinct()
 
     while True:
         if pending.limit(1).count() == 0:
             break
         if r >= world_r:
             cand = pending.crossJoin(rel.df).withColumn(dist_col, d2)
-            rows, _ = resolve(cand, lambda cnt: F.lit(True))
+            rows = knn._resolve_per_query(
+                cand, k, dist_col, qid_col, certify=False
+            )
             out = rows if out is None else out.unionByName(rows)
             break
-        bits = max(1, min(6, int(math.floor(math.log2(world_r / r)))))
-        n = 1 << bits
-        steps = [(hi - lo) / n for lo, hi in rel.conf.axes]
-
-        def cell_of(coords):
-            cell = None
-            for a, ((wlo, _), s) in enumerate(zip(rel.conf.axes, steps)):
-                i = _idx_col(coords[a], wlo, s, n)
-                cell = i if cell is None else cell * F.lit(n) + i
-            return cell
-
-        ecells = rel.df
-        tmp = []
-        ecell = None
-        for a, ((lo_c, hi_c), (wlo, _), s) in enumerate(
-            zip(rel.box.dims, rel.conf.axes, steps)
-        ):
-            i0 = _idx_col(F.col(lo_c), wlo, s, n)
-            i1 = _idx_col(F.col(hi_c), wlo, s, n)
-            ecells = ecells.withColumn(f"_i{a}", F.explode(F.sequence(i0, i1)))
-            tmp.append(f"_i{a}")
-            ecell = (
-                F.col(f"_i{a}") if ecell is None
-                else ecell * F.lit(n) + F.col(f"_i{a}")
-            )
-        ecells = ecells.withColumn("cell", ecell).drop(*tmp)
-
-        qcells = pending
-        tmp = []
-        qcell = None
-        for a, ((wlo, _), s) in enumerate(zip(rel.conf.axes, steps)):
-            i0 = _idx_col(F.col(f"_q{a}") - F.lit(r), wlo, s, n)
-            i1 = _idx_col(F.col(f"_q{a}") + F.lit(r), wlo, s, n)
-            qcells = qcells.withColumn(f"_i{a}", F.explode(F.sequence(i0, i1)))
-            tmp.append(f"_i{a}")
-            qcell = (
-                F.col(f"_i{a}") if qcell is None
-                else qcell * F.lit(n) + F.col(f"_i{a}")
-            )
-        qcells = qcells.withColumn("cell", qcell).drop(*tmp)
-
-        # nearest point of the entry box to the query, per axis
-        near = [
-            F.greatest(
-                F.col(lo_c), F.least(F.col(f"_q{a}"), F.col(hi_c))
-            )
-            for a, (lo_c, hi_c) in enumerate(rel.box.dims)
-        ]
+        n = 1 << max(1, min(6, int(math.floor(math.log2(world_r / r)))))
+        ecells = _cells_nd(rel.df, rel.box.lows(), rel.box.highs(), axes, n)
+        qcells = _cells_nd(
+            pending, [q - F.lit(r) for q in qpt], [q + F.lit(r) for q in qpt],
+            axes, n,
+        )
+        # single-action candidate stream: no persist (as in knn.knn_join)
         cand = (
             qcells.join(ecells, on="cell")
             .withColumn(dist_col, d2)
             .filter(F.col(dist_col) <= F.lit(r * r))
-            .filter(cell_of(near) == F.col("cell"))
-            .persist()
+            .filter(_cell_nd(near, axes, n) == F.col("cell"))
         )
-        rows, done_qids = resolve(cand, lambda cnt: cnt >= k)
+        rows = knn._resolve_per_query(cand, k, dist_col, qid_col)
         out = rows if out is None else out.unionByName(rows)
-        out = out.localCheckpoint()
-        cand.unpersist()
+        done_qids = rows.select(F.col(qid_col).alias("_qid")).distinct()
         new_pending = pending.join(done_qids, on="_qid", how="left_anti").persist()
         pending.unpersist()
         pending = new_pending
@@ -399,6 +301,31 @@ def _idx_col(c, lo: float, step: float, n: int):
     return F.least(F.greatest(i, F.lit(0)), F.lit(n - 1)).cast("long")
 
 
+def _cell_key(idxs: list, n: int):
+    """Row-major cell id of per-axis cell indices on an n^d grid."""
+    return reduce(lambda cell, i: cell * F.lit(n) + i, idxs)
+
+
+def _cell_nd(coords: list, axes, n: int):
+    """Cell id of the d-dim point ``coords`` on the n^d grid over ``axes``."""
+    idxs = [
+        _idx_col(c, lo, (hi - lo) / n, n) for c, (lo, hi) in zip(coords, axes)
+    ]
+    return _cell_key(idxs, n)
+
+
+def _cells_nd(df: DataFrame, lows: list, highs: list, axes, n: int) -> DataFrame:
+    """One row of ``df`` per n^d grid cell its box [lows, highs] meets,
+    keyed by the cell id in column ``cell``."""
+    tmp = [f"_i{a}" for a in range(len(axes))]
+    for t, lo_c, hi_c, (lo, hi) in zip(tmp, lows, highs, axes):
+        s = (hi - lo) / n
+        i0, i1 = _idx_col(lo_c, lo, s, n), _idx_col(hi_c, lo, s, n)
+        df = df.withColumn(t, F.explode(F.sequence(i0, i1)))
+    cell = _cell_key([F.col(t) for t in tmp], n)
+    return df.withColumn("cell", cell).drop(*tmp)
+
+
 def self_join_query_nd(
     rel: NDRelation,
     qlo: list[float],
@@ -414,28 +341,11 @@ def self_join_query_nd(
     corner (which lies in exactly one cell — no dropDuplicates shuffle)."""
     d = rel.conf.d
     n = 1 << join_bits
-    steps = [(hi - lo) / n for lo, hi in rel.conf.axes]
 
     base = rel.pruned_for_box(qlo, qhi).filter(
         G.intersects_nd(rel.box.lows(), rel.box.highs(), qlo, qhi)
     ).select(id_col, *[c for p in rel.box.dims for c in p]).persist()
-
-    cells = base
-    cell = None
-    tmp = []
-    for a, ((lo_c, hi_c), (wlo, _), s) in enumerate(
-        zip(rel.box.dims, rel.conf.axes, steps)
-    ):
-        i0 = _idx_col(F.col(lo_c), wlo, s, n)
-        i1 = _idx_col(F.col(hi_c), wlo, s, n)
-        cells = cells.withColumn(f"_i{a}", F.explode(F.sequence(i0, i1)))
-        tmp.append(f"_i{a}")
-        cell = (
-            F.col(f"_i{a}")
-            if cell is None
-            else cell * F.lit(n) + F.col(f"_i{a}")
-        )
-    cells = cells.withColumn("cell", cell).drop(*tmp)
+    cells = _cells_nd(base, rel.box.lows(), rel.box.highs(), rel.conf.axes, n)
 
     def side(tag: str):
         sel = [F.col(id_col).alias(f"id{tag}")]
@@ -453,11 +363,10 @@ def self_join_query_nd(
         )
     joined = left.join(right, on="cell", how="inner").filter(pair_ok)
 
-    ref_cell = None
-    for a, ((wlo, _), s) in enumerate(zip(rel.conf.axes, steps)):
-        r = F.greatest(F.col(f"_1lo{a}"), F.col(f"_2lo{a}"))
-        i = _idx_col(r, wlo, s, n)
-        ref_cell = i if ref_cell is None else ref_cell * F.lit(n) + i
+    ref_cell = _cell_nd(
+        [F.greatest(F.col(f"_1lo{a}"), F.col(f"_2lo{a}")) for a in range(d)],
+        rel.conf.axes, n,
+    )
     return joined.filter(ref_cell == F.col("cell")).select("id1", "id2")
 
 
@@ -508,8 +417,6 @@ class NDPartitionSpec:
         if self.kind == "zprefix":
             return F.shiftright(z, self.shift)
         if self.kind == "cutlist":
-            from functools import reduce
-
             inds = [(z > F.lit(int(c))).cast("long") for c in self.cuts]
             return reduce(lambda a, b: a + b, inds, F.lit(0).cast("long"))
         if self.kind == "kd":

@@ -60,19 +60,6 @@ class SpatialRelation:
 
     # -- planning helpers ---------------------------------------------------
 
-    def seed_knn_radius(self, px: float, py: float, k: int) -> float | None:
-        """Smallest certified kNN search radius derivable from metadata, or
-        None when no metadata exists (plain relations start from the ring
-        default).  StoredRelation overrides using manifest row counts."""
-        return self.seed_knn_radius_box(px, py, px, py, k)
-
-    def seed_knn_radius_box(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float, k: int
-    ) -> float | None:
-        """Box-query variant of :meth:`seed_knn_radius` (the point is the
-        degenerate box).  None = no metadata."""
-        return None
-
     def expand_radius(self) -> float | None:
         """Half-extent to expand query windows by when pruning on center-Z."""
         if self.max_extent is None:

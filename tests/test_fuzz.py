@@ -10,7 +10,11 @@ recomputed from the same arrays, so the check stays EXACT at any seed.
 Seed policy: ``SPARK_GRAFT_FUZZ_SEED`` pins a run for reproduction;
 otherwise the seed derives from the calendar day, so every CI day
 exercises fresh workloads while a red run is reproducible from the
-printed seed.  Three seeds run per invocation.
+printed seed.  Three fresh seeds run per invocation under the stable ids
+``fresh0``-``fresh2`` (the ids must not follow the day, or a test's name
+would change every midnight).  ``PINNED`` seeds run on every invocation
+too, under ``seed<N>`` ids: fresh-seed draws kept as fixed regression
+workloads.
 
 Any failure found here should be pinned as a fixed regression fixture in
 the main differential suites.
@@ -35,7 +39,12 @@ def _base_seed() -> int:
 
 
 BASE = _base_seed()
-SEEDS = [BASE * 3 + j for j in range(3)]
+FRESH = [BASE * 3 + j for j in range(3)]
+# The lane's draws for day 20743 (2026-10-17), pinned so their exact
+# workloads are re-proved on every run.
+PINNED = [62229, 62230, 62231]
+SEEDS = PINNED + FRESH
+SEED_IDS = [f"seed{s}" for s in PINNED] + [f"fresh{j}" for j in range(3)]
 
 N = 3_000
 EXTENT = 0.002  # tiny boxes, like the generator's point-ish data
@@ -61,10 +70,11 @@ def _gen(seed: int):
     }, rng
 
 
-@pytest.fixture(scope="module", params=SEEDS, ids=[f"seed{s}" for s in SEEDS])
+@pytest.fixture(scope="module", params=SEEDS, ids=SEED_IDS)
 def workload(request, spark):
     seed = request.param
-    print(f"\n[fuzz] SPARK_GRAFT_FUZZ_SEED={BASE} (worker seed {seed})")
+    origin = "pinned" if seed in PINNED else f"SPARK_GRAFT_FUZZ_SEED={BASE}"
+    print(f"\n[fuzz] {origin} (worker seed {seed})")
     arrs, rng = _gen(seed)
     df = spark.createDataFrame(
         [tuple(int(arrs["id"][i]) if c == "id" else float(arrs[c][i])

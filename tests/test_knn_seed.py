@@ -1,16 +1,20 @@
-"""Manifest-seeded kNN on the stored index (VERDICT r1 #7): the radius
-derived from bucket row counts must be certified (≥ k rows inside) and the
-single-pass result must equal both the ring-loop answer and brute force."""
+"""kNN on the stored index and on plain relations: every single-query
+shape runs the one certified ring core (``knn._ring_knn``), so a stored
+index's answer must equal both the plain relation's and brute force; the
+batch kNN join resolves per query with the same tie rule."""
 
 import numpy as np
 import pytest
 
-from libspatialindex_spark.operators import index_build, knn
+from pyspark.sql import functions as F
+
+from libspatialindex_spark.operators import index_build, knn, mutations, nd
 from libspatialindex_spark.operators.relation import SpatialRelation
 from libspatialindex_spark.sources import testdata as td
 from tests.conftest import SF_DIR
 
 P, K = (0.5, 0.5), 10
+SEG = (0.45, 0.40, 0.55, 0.62)
 
 
 @pytest.fixture(scope="module")
@@ -18,18 +22,6 @@ def stored(spark, conf, tmp_path_factory):
     df = td.rects(spark, SF_DIR)
     path = str(tmp_path_factory.mktemp("knnidx") / "idx")
     return index_build.build_index(df, path, conf), df
-
-
-def test_seed_radius_is_certified(stored, rects_pdf):
-    idx, _ = stored
-    rel = idx.relation()
-    r = rel.seed_knn_radius(*P, K)
-    assert r is not None and r > 0
-    p = rects_pdf
-    dx = np.maximum.reduce([p.xmin - P[0], P[0] - p.xmax, np.zeros(len(p))])
-    dy = np.maximum.reduce([p.ymin - P[1], P[1] - p.ymax, np.zeros(len(p))])
-    d2 = np.asarray(dx * dx + dy * dy)
-    assert int((d2 <= r * r).sum()) >= K  # the radius really holds ≥ k rows
 
 
 def test_seeded_knn_matches_bruteforce(stored, rects_pdf, conf):
@@ -50,15 +42,87 @@ def test_seeded_knn_matches_bruteforce(stored, rects_pdf, conf):
 def test_knn_cache_released(stored, spark):
     """The kNN candidate persist must be released per call: over 3 calls
     the persistent-RDD count may grow only by the (tiny) localCheckpoint
-    blocks (≤ 1 each), never by the full candidate caches too (2 each)."""
-    idx, _ = stored
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    before = jmap.size()
+    blocks (≤ 1 each), never by the full candidate caches too (2 each) —
+    for the point, segment and N-d point shapes alike."""
+    idx, df = stored
     rel = idx.relation()
-    for _ in range(3):
-        knn.knn_query(rel, *P, K).collect()
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after - before <= 3
+    reln = nd.NDRelation(df, nd.NDConfig(), nd.NDBox())
+    calls = [
+        lambda: knn.knn_query(rel, *P, K),
+        lambda: knn.knn_segment_query(rel, *SEG, K),
+        lambda: nd.knn_query_nd(reln, list(P), K),
+    ]
+    for call in calls:
+        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        for _ in range(3):
+            call().collect()
+        after = spark.sparkContext._jsc.getPersistentRDDs().size()
+        assert after - before <= 3
+
+
+SAT_ROWS = [
+    (1, 0.1, 0.1, 0.2, 0.2), (2, 0.8, 0.8, 0.9, 0.9), (3, 0.4, 0.5, 0.45, 0.55)
+]
+SAT_SHAPES = {
+    "point": lambda rel, k: knn.knn_query(rel, *P, k),
+    "box": lambda rel, k: knn.knn_box_query(rel, *BOXQ, k),
+    "segment": lambda rel, k: knn.knn_segment_query(rel, *SEG, k),
+    "custom": lambda rel, k: knn.knn_query_custom(
+        rel, F.abs(F.col("xmin") - P[0]), k
+    ),
+    "nd_point": lambda rel, k: nd.knn_query_nd(rel, list(P), k),
+}
+
+
+@pytest.fixture(scope="module")
+def sat_rels(spark, conf, tmp_path_factory):
+    """{(dims, kind): (3-row relation, empty relation)} — plain relations,
+    and stored indexes whose every row was then deleted for the empty one."""
+    df = spark.createDataFrame(
+        SAT_ROWS, "id long, xmin double, ymin double, xmax double, ymax double"
+    )
+    base = tmp_path_factory.mktemp("knnsat")
+
+    def emptied(idx):
+        mutations.delete_rows(idx, df.select("id"))
+        return idx.relation()
+
+    def stored2(name):
+        return index_build.build_index(df, str(base / name), conf)
+
+    def stored_nd(name):
+        return nd.build_index_nd(df, str(base / name), nd.NDConfig())
+
+    return {
+        ("2d", "plain"): (
+            SpatialRelation(df, conf, max_extent=(0.1, 0.1)),
+            SpatialRelation(df.filter(F.lit(False)), conf),
+        ),
+        ("2d", "stored"): (
+            stored2("s2").relation(), emptied(stored2("s2e"))
+        ),
+        ("nd", "plain"): (
+            nd.NDRelation(df, nd.NDConfig(), nd.NDBox()),
+            nd.NDRelation(df.filter(F.lit(False)), nd.NDConfig(), nd.NDBox()),
+        ),
+        ("nd", "stored"): (
+            stored_nd("n2").relation(), emptied(stored_nd("n2e"))
+        ),
+    }
+
+
+@pytest.mark.parametrize("kind", ["plain", "stored"])
+@pytest.mark.parametrize("shape", sorted(SAT_SHAPES))
+def test_knn_saturation_and_empty(sat_rels, shape, kind):
+    """Every single-query kNN shape saturates past the rings: with k > N it
+    returns all N rows (the reference's min(k, N)), and on an empty
+    relation no rows, with the operator's columns."""
+    full, empty = sat_rels["nd" if shape.startswith("nd") else "2d", kind]
+    got = SAT_SHAPES[shape](full, 5)
+    assert sorted(r.id for r in got.collect()) == [1, 2, 3]
+    none = SAT_SHAPES[shape](empty, 5)
+    assert none.collect() == []
+    assert none.columns == empty.df.columns + ["dist2"]
 
 
 def test_knn_join_matches_per_query_bruteforce(spark, conf, rects_pdf):
@@ -104,7 +168,7 @@ def test_knn_join_fallback_min_k_n(spark):
 
 def test_knn_join_non_unit_world_terminates_complete(spark):
     """ADVICE r2: on a non-unit world (1000 wide) the absolute r0 =
-    knn_ring_init needs ~16+ doublings to reach world_r — the loop must
+    RING_INIT needs ~16+ doublings to reach world_r — the loop must
     keep going until every query resolves (no silent drops)."""
     from libspatialindex_spark.config import EngineConfig
 

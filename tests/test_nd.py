@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from libspatialindex_spark.config import EngineConfig
 from libspatialindex_spark.functions import curves
-from libspatialindex_spark.operators import nd, range_query
+from libspatialindex_spark.operators import knn, nd, range_query
 from libspatialindex_spark.operators.relation import SpatialRelation
 from libspatialindex_spark.plans.cover import z_cover, z_cover_nd
 from libspatialindex_spark.sources import testdata as td
@@ -141,6 +141,18 @@ def test_nd_d2_queries_match_2d_operators(spark, conf):
         ).collect()
     }
     assert a == b
+
+    # kNN through the shared ring core: same (id, dist2) rows at d=2
+    def rows(df):
+        return {(r.id, r.dist2) for r in df.collect()}
+
+    p, k = (0.5, 0.5), 10
+    assert rows(knn.knn_query(rel2, *p, k)) == rows(
+        nd.knn_query_nd(reln, list(p), k)
+    )
+    assert rows(knn.knn_box_query(rel2, *w, k)) == rows(
+        nd.knn_box_query_nd(reln, [w[0], w[1]], [w[2], w[3]], k)
+    )
 
 
 def test_3d_index_build_parity_and_pruning(spark, r3, r3_pdf, tmp_path):
