@@ -177,6 +177,20 @@ class StoredIndex(M.StoredLayout):
     conf: EngineConfig
     spec: PartitionSpec
 
+    axes = (("xmin", "xmax"), ("ymin", "ymax"))
+    extent_cols = ("max_ex", "max_ey")
+
+    @staticmethod
+    def extent_row(ext) -> dict:
+        return {"max_ex": ext[0], "max_ey": ext[1]}
+
+    @staticmethod
+    def bounds_row(lo: dict, hi: dict) -> dict:
+        return {
+            "xmin": lo.get("xmin"), "ymin": lo.get("ymin"),
+            "xmax": hi.get("xmax"), "ymax": hi.get("ymax"),
+        }
+
     def zm_models(self) -> dict[int, tuple[float, float, int]]:
         """Per-bucket learned rank model {bucket: (a, b, max_err)} — the
         ZM per-node regression analog (``LearnedIndex.cc:1494-1507``):
@@ -279,7 +293,7 @@ class StoredIndex(M.StoredLayout):
         """``isIndexValid()`` analog (``SpatialIndex.h:209``): recompute
         per-bucket aggregates from data and diff against manifest totals."""
         cols = ["bucket", "zmin", "zmax", "xmin", "ymin", "xmax", "ymax", "n_rows"]
-        got = M.manifest_for(self.data(), build_id="check").select(cols)
+        got = M.manifest_for(self.data()).select(cols)
         want = self.manifest_totals().select(cols)
         return got.exceptAll(want).count() + want.exceptAll(got).count() == 0
 
@@ -402,7 +416,6 @@ def build_index(
     path: str,
     conf: EngineConfig,
     box: BoxCols | None = None,
-    bytes_col: str | None = None,
     build_id: str = "build-1",
     resume: bool = False,
     partitioner: str = "zprefix",
@@ -491,6 +504,8 @@ def build_index(
 
     # The "external sort": one range shuffle on z, then in-partition sort —
     # rows land clustered so parquet row-group zone maps on z are tight.
+    # The max entry extents ride on the write as an Observation.
+    keyed, extent = M.observe_extent(keyed, idx.axes)
     writer = (
         keyed.repartitionByRange(conf.target_partitions, "z")
         # sort by (bucket, z), not z alone: the dynamic-partition writer
@@ -510,22 +525,22 @@ def build_index(
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.parquet(data_path)
 
-    # Commit point: manifest rows are derived from the *written* files, so a
-    # manifest row certifies durable data (write data → then commit).  Read
-    # only the newly-written bucket dirs — on resume the committed ones may
-    # dwarf them.
-    new_dirs = [
-        FS.join(data_path, name)
-        for name in fs.listdir(data_path)
-        if name.startswith("bucket=")
-        and int(name.split("=", 1)[1]) not in done
-    ]
-    if not new_dirs:
+    # Commit point: manifest rows are derived from the *written* files'
+    # footers, so a manifest row certifies durable data (write data → then
+    # commit).  Only the newly-written buckets — on resume the committed
+    # ones may dwarf them.
+    new = [b for b in idx.live_buckets() if b not in done]
+    if not new:
         return idx
-    written = spark.read.option("basePath", data_path).parquet(*new_dirs)
-    idx._data_schema = written.schema  # inferred here once; queries reuse it
-    mdf = M.manifest_for(written, bytes_col=bytes_col, build_id=build_id)
-    mdf.write.mode("append").parquet(M.manifest_path(path))
+    idx._data_schema = (  # inferred here once; queries reuse it
+        spark.read.option("basePath", data_path)
+        .parquet(*[FS.join(data_path, f"bucket={b}") for b in new])
+        .schema
+    )
+    ext = idx.extent_row(extent())
+    idx.append_manifest(
+        idx.footer_manifest(data_path, new, dict.fromkeys(new, ext), build_id)
+    )
     if max_records_per_file:
         refresh_file_map(idx)
     return idx
@@ -539,10 +554,12 @@ def refresh_file_map(idx) -> None:
     long whatever the dimension, so the map and the models are
     dimension-blind).
 
-    File zone map: one scan grouped by ``input_file_name()`` → (path,
-    bucket, zmin, zmax, n_rows).  Files within a bucket are z-disjoint
-    (the build sorts by z before ``maxRecordsPerFile`` splits), so the map
-    is a third pruning level below buckets.
+    File zone map: one row per data file, (path, bucket, zmin, zmax,
+    n_rows), read from each file's parquet footer on the driver (no Spark
+    job) and written with pyarrow; ``path`` is the URI Spark names the
+    file by.  Files within a bucket are z-disjoint (the build sorts by z
+    before ``maxRecordsPerFile`` splits), so the map is a third pruning
+    level below buckets.
 
     Learned models: per bucket, least-squares fit ``rank(z) ≈ a·z + b``
     over the exact CDF points at file boundaries, with a certified
@@ -550,32 +567,25 @@ def refresh_file_map(idx) -> None:
     prediction are both monotone between boundaries, so the bound holds
     everywhere in the bucket).  The models answer selectivity questions
     driver-side with zero IO (:meth:`StoredIndex.estimate_rows`)."""
-    spark = idx.spark
     fs = idx.fs
-    df = idx.data()
-    fm = (
-        df.groupBy(
-            F.input_file_name().alias("path"),
-            F.col("bucket").cast("long").alias("bucket"),
-        )
-        .agg(
-            F.min("z").alias("zmin"),
-            F.max("z").alias("zmax"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-    rows = fm.collect()
+    rows = [
+        {
+            "path": fs.uri(z["path"]), "bucket": z["bucket"],
+            "zmin": z["min"]["z"], "zmax": z["max"]["z"], "n_rows": z["n_rows"],
+        }
+        for z in M.file_zones(fs, idx.data_path, idx.live_buckets(), {"z"})
+        if z["n_rows"]
+    ]
     tmp = idx.filemap_path + ".new"
-    spark.createDataFrame(
-        rows, schema="path string, bucket long, zmin long, zmax long, n_rows long"
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
+    fs.delete(tmp)
+    M.write_table(fs, FS.join(tmp, M.part_name()), rows, M.FILEMAP_SCHEMA)
     fs.delete(idx.filemap_path)
     fs.rename(tmp, idx.filemap_path)
 
     by_bucket: dict[int, list] = {}
     for r in rows:
-        by_bucket.setdefault(int(r["bucket"]), []).append(
-            (int(r["zmin"]), int(r["zmax"]), int(r["n_rows"]))
+        by_bucket.setdefault(r["bucket"], []).append(
+            (r["zmin"], r["zmax"], r["n_rows"])
         )
     models: dict[int, tuple[float, float, int]] = {}
     for b, files in by_bucket.items():

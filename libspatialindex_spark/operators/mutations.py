@@ -8,14 +8,23 @@ disappears: an insert is an append into the right bucket directories; a
 delete is an anti-join rewrite of only the buckets that contain the
 victims.  Both update the manifest so lineage/validity stay consistent.
 
+Every mutation commits on the driver, with no Spark job after its data
+write: the touched buckets' manifest rows come from the written files'
+parquet footers (``StoredLayout.footer_manifest``) and the manifest is
+written with pyarrow.  The max entry extents are upper bounds: an insert
+records its batch max, observed on the data write, on each of its bucket
+rows; a delete or compaction carries each touched bucket's prior max
+forward (see ``plans/manifest.py``).
+
 Crash-safety protocol (single writer assumed — the reference is likewise
 single-writer per tree):
 
 * **insert** stages the batch under ``_staging_insert_<build_id>``, moves
   the staged files into live bucket dirs under build_id-prefixed names,
-  then appends the manifest.  The manifest row is the commit point; a
-  replay of the same ``build_id`` (streaming epoch redelivery) first checks
-  the manifest — committed epochs are skipped — and otherwise sweeps any
+  then appends a manifest file (written under a hidden name and renamed
+  in).  That rename is the commit point; a replay of the same
+  ``build_id`` (streaming epoch redelivery) first checks the manifest —
+  committed epochs are skipped — and otherwise sweeps any
   ``<build_id>-*`` debris before re-running, so the insert is idempotent.
 * **delete** rewrites each touched bucket via rename-aside
   (``bucket=N`` → ``bucket=N.old`` → staged in), commits the manifest,
@@ -45,39 +54,15 @@ def _safe(build_id: str) -> str:
     return re.sub(r"[^A-Za-z0-9_.-]", "_", build_id)
 
 
-# --- index-kind dispatch: the same mutation protocol serves the 2-D
-# StoredIndex and the dimension-generic NDStoredIndex (the reference's
-# insert/delete API is dimension-generic, RTree.cc:306-308); only the
-# manifest aggregation/schema and the box column names differ.
-
-
-def _is_nd(idx) -> bool:
-    # positive structural test: the ND index's box is per-axis dims (the
-    # old "no spec attribute" probe broke the moment NDStoredIndex gained
-    # its own partitioner spec)
-    return hasattr(idx, "box") and hasattr(idx.box, "dims")
-
-
-def _manifest_for_idx(idx, df: DataFrame, bytes_col, build_id: str):
-    if _is_nd(idx):
-        from libspatialindex_spark.operators import nd
-
-        return nd._nd_manifest_for(df, idx.box, build_id)
-    return M.manifest_for(df, bytes_col=bytes_col, build_id=build_id)
-
-
-def _manifest_cols(idx) -> list[str]:
-    if _is_nd(idx):
-        from libspatialindex_spark.operators import nd
-
-        return nd.ND_MANIFEST_COLS
-    return M.MANIFEST_COLS
+# The same mutation protocol serves the 2-D StoredIndex and the
+# dimension-generic NDStoredIndex (the reference's insert/delete API is
+# dimension-generic, RTree.cc:306-308); the layout supplies its manifest
+# columns (``StoredLayout.footer_manifest``) and its box column names.
 
 
 def _default_box(idx):
-    if _is_nd(idx):
-        return idx.box
-    return BoxCols()
+    # the N-d index persists its per-axis box; the 2-D one uses BoxCols
+    return getattr(idx, "box", None) or BoxCols()
 
 
 def _box_col_names(box) -> set[str]:
@@ -129,16 +114,14 @@ def insert_batch(
     idx,
     rows: DataFrame,
     box=None,
-    bytes_col: str | None = None,
     build_id: str = "insert",
     idempotent: bool = False,
 ):
     """M1 — append a batch of entries; only touched buckets change.
-    Works on 2-D and N-d stored indexes alike (dispatch above).
+    Works on 2-D and N-d stored indexes alike.
 
     With ``idempotent=True`` a ``build_id`` already present in the manifest
     is a no-op (exactly-once under streaming epoch replay)."""
-    spark = idx.spark
     fs = idx.fs
     tag = _safe(build_id)
 
@@ -150,7 +133,7 @@ def insert_batch(
     staging = FS.join(idx.path, f"_staging_insert_{tag}")
     fs.delete(staging)
 
-    keyed = idx.keyed(rows, box)
+    keyed, extent = M.observe_extent(idx.keyed(rows, box), idx.axes)
     (
         keyed.repartitionByRange(idx.conf.target_partitions, "z")
         # (bucket, z): keeps the writer from inserting its own partition
@@ -161,34 +144,32 @@ def insert_batch(
         .mode("overwrite")
         .parquet(staging)
     )
-    staged = spark.read.schema(keyed.schema).parquet(staging)  # no inference
-    mdf = _manifest_for_idx(idx, staged, bytes_col, build_id)
-    mrows = mdf.select(*_manifest_cols(idx)).collect()  # one row per bucket
+    buckets = [
+        int(n[len("bucket="):]) for n in fs.listdir(staging)
+        if n.startswith("bucket=")
+    ]
+    ext = dict.fromkeys(buckets, idx.extent_row(extent()) if buckets else None)
+    mrows = idx.footer_manifest(staging, buckets, ext, build_id)
 
     # Move staged files into live bucket dirs under build_id-prefixed names
     # (sweepable on replay).  Readers may observe rows before the manifest
     # commit — same single-writer caveat as the reference's dirty pages.
-    for bname in fs.listdir(staging):
-        if not bname.startswith("bucket="):
-            continue
-        src_dir = FS.join(staging, bname)
-        dst_dir = FS.join(idx.data_path, bname)
+    for b in buckets:
+        src_dir = FS.join(staging, f"bucket={b}")
+        dst_dir = FS.join(idx.data_path, f"bucket={b}")
         fs.mkdirs(dst_dir)
-        for fname in fs.listdir(src_dir):
-            if not fname.endswith(".parquet"):
-                continue
+        for fname in M.parquet_files(fs, src_dir):
             fs.rename(
                 FS.join(src_dir, fname), FS.join(dst_dir, f"{tag}-{fname}")
             )
     fs.delete(staging)
 
-    # Commit point: manifest append (explicit schema — never inferred).
-    # The file map goes stale FIRST (fail-safe: losing it only loses the
-    # refinement; keeping a stale one would lose rows from pruned scans).
+    # Commit point: manifest append.  The file map goes stale FIRST
+    # (fail-safe: losing it only loses the refinement; keeping a stale one
+    # would lose rows from pruned scans).
     _invalidate_file_map(idx)
-    spark.createDataFrame(
-        mrows, schema=idx.manifest_schema
-    ).coalesce(1).write.mode("append").parquet(idx.manifest_path)
+    if mrows:
+        idx.append_manifest(mrows)
     return idx
 
 
@@ -209,8 +190,8 @@ def recover(idx) -> None:
        finished and all-deleted buckets with no live dir — and the
        interrupted mutation can simply be re-run.
 
-    The row-count probe reads only the touched buckets' parquet footers —
-    recovery-path-only cost.
+    The row-count probe reads only the touched buckets' parquet footers
+    (``num_rows``), on the driver — no Spark job.
     """
     fs = idx.fs
     mpath = idx.manifest_path
@@ -234,30 +215,33 @@ def recover(idx) -> None:
         aside = FS.join(idx.data_path, name)
         live = FS.join(idx.data_path, name[: -len(".old")])
         b = int(name[len("bucket="): -len(".old")])
-        want = counts.get(b, 0)
-        has_live = bool(M.parquet_files(fs, live))
-        live_rows = idx.spark.read.parquet(live).count() if has_live else 0
-        if m is not None and live_rows == want:
+        live_rows = sum(
+            M.footer(fs, FS.join(live, f)).num_rows
+            for f in M.parquet_files(fs, live)
+        )
+        if m is not None and live_rows == counts.get(b, 0):
             fs.delete(aside)  # forward: manifest already describes live
         else:
             fs.delete(live)  # back: restore the pre-mutation copy
             fs.rename(aside, live)
 
 
-def _replace_manifest(idx, fresh: DataFrame) -> None:
-    """Atomically replace the manifest (write new → aside → swap → drop)."""
+def _replace_manifest(idx, rows: list[dict]) -> None:
+    """Atomically replace the manifest with ``rows`` (write new → aside →
+    swap → drop)."""
     fs = idx.fs
     mpath = idx.manifest_path
-    fresh.coalesce(1).write.mode("overwrite").parquet(mpath + ".new")
+    fs.delete(mpath + ".new")
+    M.write_table(
+        fs, FS.join(mpath + ".new", M.part_name()), rows, idx.manifest_schema
+    )
     if fs.isdir(mpath):
         fs.rename(mpath, mpath + ".old")
     fs.rename(mpath + ".new", mpath)
     fs.delete(mpath + ".old")
 
 
-def _swap_and_commit(
-    idx, staged: str, touched: list, bytes_col, build_id: str
-) -> None:
+def _swap_and_commit(idx, staged: str, touched: list, build_id: str) -> None:
     """Swap the staged rewrite of the ``touched`` buckets in and commit.
 
     Per bucket: aside → move in.  The ``.old`` aside copies are NOT
@@ -267,10 +251,11 @@ def _swap_and_commit(
     manifest commit, recover() can restore the aside consistently with the
     still-old manifest; after it, recover() just drops asides.
 
-    Commit: drop the touched buckets' manifest rows and append one fresh
-    aggregate per touched bucket that still has data — staged + atomic
-    swap, explicit schema (survives an all-deleted case).  The stale file
-    map goes first: it must never survive."""
+    Commit: drop the touched buckets' manifest rows and add one row per
+    touched bucket that still has data, from its new files' footers, with
+    the bucket's prior max extents carried forward (a rewrite only removes
+    or keeps rows, so they stay upper bounds) — then an atomic manifest
+    swap.  The stale file map goes first: it must never survive."""
     fs = idx.fs
     for b in touched:
         live = FS.join(idx.data_path, f"bucket={b}")
@@ -283,24 +268,15 @@ def _swap_and_commit(
             fs.rename(src, live)
     fs.delete(staged)
 
-    cols = _manifest_cols(idx)
-    keep = [
-        tuple(r[c] for c in cols)
-        for r in idx.manifest_rows() if r["bucket"] not in touched
-    ]
-    still = [
-        b for b in touched
-        if M.parquet_files(fs, FS.join(idx.data_path, f"bucket={b}"))
-    ]
-    fresh = []
-    if still:
-        fresh = _manifest_for_idx(
-            idx, _read_buckets(idx, still), bytes_col, build_id
-        ).select(*cols).collect()
+    rows = idx.manifest_rows()
+    prior = {
+        r["bucket"]: {c: r[c] for c in idx.extent_cols}
+        for r in M.rollup(rows, maxs=idx.extent_cols, sums=())
+    }
+    keep = [r for r in rows if r["bucket"] not in touched]
+    fresh = idx.footer_manifest(idx.data_path, touched, prior, build_id)
     _invalidate_file_map(idx)
-    _replace_manifest(
-        idx, idx.spark.createDataFrame(keep + fresh, schema=idx.manifest_schema)
-    )
+    _replace_manifest(idx, keep + fresh)
     # Only now — past the commit point — drop the aside copies.  A crash in
     # this window leaves harmless ``.old`` debris that recover() sweeps.
     for b in touched:
@@ -312,11 +288,10 @@ def delete_rows(
     victims: DataFrame,
     id_col: str = "id",
     box=None,
-    bytes_col: str | None = None,
     build_id: str = "delete",
 ):
     """M2 — remove entries by id; rewrites ONLY buckets holding victims.
-    Works on 2-D and N-d stored indexes alike (dispatch above).
+    Works on 2-D and N-d stored indexes alike.
 
     ``victims`` must carry the id column (and box columns if available, to
     route directly; otherwise victim buckets are discovered by semi-join).
@@ -350,7 +325,7 @@ def delete_rows(
         "bucket"
     ).mode("overwrite").parquet(staged)
 
-    _swap_and_commit(idx, staged, touched, bytes_col, build_id)
+    _swap_and_commit(idx, staged, touched, build_id)
     return idx
 
 
@@ -358,7 +333,6 @@ def compact(
     idx,
     max_files_per_bucket: int = 1,
     max_records_per_file: int | None = None,
-    bytes_col: str | None = None,
     build_id: str = "compact",
 ):
     """M3 maintenance — merge each bucket's accumulated insert files back
@@ -384,13 +358,11 @@ def compact(
     fs = idx.fs
     recover(idx)
 
-    touched = []
-    for name in fs.listdir(idx.data_path):
-        if not name.startswith("bucket=") or name.endswith(".old"):
-            continue
-        files = M.parquet_files(fs, FS.join(idx.data_path, name))
-        if len(files) > max_files_per_bucket:
-            touched.append(int(name[len("bucket="):]))
+    touched = [
+        b for b in idx.live_buckets()
+        if len(M.parquet_files(fs, FS.join(idx.data_path, f"bucket={b}")))
+        > max_files_per_bucket
+    ]
     if not touched:
         return idx
 
@@ -409,5 +381,5 @@ def compact(
 
     # Touched buckets collapse to ONE fresh manifest row each (insert had
     # appended one row per batch).
-    _swap_and_commit(idx, staged, touched, bytes_col, build_id)
+    _swap_and_commit(idx, staged, touched, build_id)
     return idx

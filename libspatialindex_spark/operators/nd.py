@@ -478,10 +478,8 @@ def kd_partition_tree_nd(sample: "np_like", levels: int) -> list:
     return build(sample, 0)
 
 
-# Explicit manifest schema (mutation rewrites must survive empty frames).
-ND_MANIFEST_COLS = [
-    "bucket", "zmin", "zmax", "n_rows", "lows", "highs", "max_ext", "build_id",
-]
+# Explicit manifest schema: Spark reads never infer, and the driver writes
+# the manifest with the same types (``manifest.arrow_schema``).
 ND_MANIFEST_SCHEMA = (
     "bucket long, zmin long, zmax long, n_rows long, "
     "lows array<double>, highs array<double>, max_ext array<double>, "
@@ -502,6 +500,21 @@ class NDStoredIndex(M.StoredLayout):
     spec: NDPartitionSpec | None = None
 
     manifest_schema = ND_MANIFEST_SCHEMA
+    extent_cols = ("max_ext",)
+
+    @property
+    def axes(self):
+        return self.box.dims
+
+    @staticmethod
+    def extent_row(ext) -> dict:
+        return {"max_ext": list(ext)}
+
+    def bounds_row(self, lo: dict, hi: dict) -> dict:
+        return {
+            "lows": [lo.get(c) for c, _ in self.box.dims],
+            "highs": [hi.get(c) for _, c in self.box.dims],
+        }
 
     def _spec(self) -> NDPartitionSpec:
         return self.spec or NDPartitionSpec(kind="zprefix", shift=self.shift)
@@ -590,19 +603,17 @@ class NDStoredIndex(M.StoredLayout):
         return got == want
 
 
-def _nd_manifest_for(df: DataFrame, box: NDBox, build_id: str = "build-1"):
-    aggs = [
+def _nd_manifest_for(df: DataFrame, box: NDBox):
+    """Per-bucket z bounds, per-axis box bounds and row count of ``df``
+    aggregated by Spark — :meth:`NDStoredIndex.validate`'s independent
+    recompute of what the footers committed."""
+    return df.groupBy(F.col("bucket").cast("long").alias("bucket")).agg(
         F.min("z").alias("zmin"),
         F.max("z").alias("zmax"),
         F.count(F.lit(1)).alias("n_rows"),
         F.array(*[F.min(lo) for lo, _ in box.dims]).alias("lows"),
         F.array(*[F.max(hi) for _, hi in box.dims]).alias("highs"),
-        F.array(
-            *[F.max(F.col(hi) - F.col(lo)) for lo, hi in box.dims]
-        ).alias("max_ext"),
-        F.lit(build_id).alias("build_id"),
-    ]
-    return df.groupBy(F.col("bucket").cast("long").alias("bucket")).agg(*aggs)
+    )
 
 
 def build_index_nd(
@@ -689,6 +700,10 @@ def build_index_nd(
         ),
     )
     data_path = FS.join(path, "data")
+    idx = NDStoredIndex(
+        spark=spark, path=path, conf=conf, box=box, shift=shift, spec=spec
+    )
+    keyed, extent = M.observe_extent(keyed, box.dims)
     writer = (
         keyed.repartitionByRange(conf.target_partitions, "z")
         # (bucket, z) — see index_build note: a bare z sort is eliminated
@@ -700,14 +715,12 @@ def build_index_nd(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.parquet(data_path)
-    idx = NDStoredIndex(
-        spark=spark, path=path, conf=conf, box=box, shift=shift, spec=spec
-    )
-    written = spark.read.parquet(data_path)
-    idx._data_schema = written.schema  # inferred here once; queries reuse it
-    _nd_manifest_for(written, box, build_id).write.mode("overwrite").parquet(
-        idx.manifest_path
-    )
+    # inferred here once; queries reuse it
+    idx._data_schema = spark.read.parquet(data_path).schema
+    # commit: manifest rows from the written files' footers (no job)
+    buckets = idx.live_buckets()
+    ext = dict.fromkeys(buckets, idx.extent_row(extent()) if buckets else None)
+    idx.append_manifest(idx.footer_manifest(data_path, buckets, ext, build_id))
     if max_records_per_file:
         from libspatialindex_spark.operators.index_build import refresh_file_map
 

@@ -5,7 +5,8 @@ The reference talks to storage through ``IStorageManager``
 disk, memory, or user-supplied pages (``src/capi/CustomStorage.cc``).  The
 distributed analog: every driver-side file operation the index layout needs
 (manifest swap, bucket sweep, spec read/write, the driver-side manifest
-read) goes through this interface,
+read and write, the parquet footer reads that commit a write) goes
+through this interface,
 so the index can live on local disk in tests and on HDFS/S3A on a cluster —
 Spark itself already reads/writes any Hadoop-FS URI; this closes the gap
 for the *driver-side* metadata ops.
@@ -73,21 +74,52 @@ class LocalFS:
 
         shutil.move(src, dst)
 
+    def sizes(self, path: str) -> dict[str, int]:
+        """Byte size of every entry of the directory ``path``."""
+        import os
+
+        if not os.path.isdir(path):
+            return {}
+        with os.scandir(path) as it:
+            return {e.name: e.stat().st_size for e in it}
+
+    def uri(self, path: str) -> str:
+        """``path`` as the scheme-qualified URI Spark names its files by
+        (``inputFiles()``, ``input_file_name()``)."""
+        import os
+
+        return "file://" + os.path.abspath(path)
+
     def read_bytes(self, path: str) -> bytes:
         with open(path, "rb") as f:
+            return f.read()
+
+    def read_tail(self, path: str, n: int) -> bytes:
+        """The last ``n`` bytes of a file (fewer if it is shorter)."""
+        import os
+
+        with open(path, "rb") as f:
+            f.seek(max(0, os.fstat(f.fileno()).st_size - n))
             return f.read()
 
     def read_text(self, path: str) -> str:
         return self.read_bytes(path).decode()
 
-    def write_text(self, path: str, text: str) -> None:
+    def write_bytes(self, path: str, data: bytes) -> None:
+        """Write ``data`` to ``path`` under a hidden temp name, then rename
+        it in: readers (Spark lists ``.``-prefixed names as hidden) never
+        see a partial file, and the rename is the commit point."""
         import os
 
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(text)
+        parent, name = os.path.split(path)
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(parent, f".{name}.tmp")
+        with open(tmp, "wb") as f:
+            f.write(data)
         os.replace(tmp, path)  # atomic on POSIX
+
+    def write_text(self, path: str, text: str) -> None:
+        self.write_bytes(path, text.encode())
 
 
 class HadoopFS:
@@ -133,6 +165,18 @@ class HadoopFS:
         if not ok:
             raise OSError(f"rename failed: {src} -> {dst}")
 
+    def sizes(self, path: str) -> dict[str, int]:
+        p = self._path(path)
+        fs = self._fs(path)
+        if not fs.exists(p) or not fs.getFileStatus(p).isDirectory():
+            return {}
+        return {
+            st.getPath().getName(): st.getLen() for st in fs.listStatus(p)
+        }
+
+    def uri(self, path: str) -> str:
+        return path
+
     def read_bytes(self, path: str) -> bytes:
         stream = self._fs(path).open(self._path(path))
         try:
@@ -142,24 +186,41 @@ class HadoopFS:
         finally:
             stream.close()
 
+    def read_tail(self, path: str, n: int) -> bytes:
+        fs = self._fs(path)
+        p = self._path(path)
+        size = fs.getFileStatus(p).getLen()
+        n = min(n, size)
+        stream = fs.open(p)
+        try:
+            stream.seek(size - n)
+            return bytes(
+                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream, n)
+            )
+        finally:
+            stream.close()
+
     def read_text(self, path: str) -> str:
         return self.read_bytes(path).decode()
 
-    def write_text(self, path: str, text: str) -> None:
-        parent = path.rsplit("/", 1)[0]
+    def write_bytes(self, path: str, data: bytes) -> None:
+        parent, name = path.rsplit("/", 1)
         self.mkdirs(parent)
-        tmp = path + ".tmp"
+        tmp = self._path(f"{parent}/.{name}.tmp")
         fs = self._fs(path)
-        stream = fs.create(self._path(tmp), True)
+        stream = fs.create(tmp, True)
         try:
-            stream.write(bytearray(text.encode()))
+            stream.write(bytearray(data))
         finally:
             stream.close()
         p = self._path(path)
         if fs.exists(p):
             fs.delete(p, False)
-        if not fs.rename(self._path(tmp), p):
+        if not fs.rename(tmp, p):
             raise OSError(f"rename failed: {tmp} -> {path}")
+
+    def write_text(self, path: str, text: str) -> None:
+        self.write_bytes(path, text.encode())
 
 
 def get_fs(spark: SparkSession, path: str):

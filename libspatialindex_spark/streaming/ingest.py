@@ -34,7 +34,6 @@ def stream_into_index(
     schema: str,
     checkpoint_dir: str,
     box: BoxCols | None = None,
-    bytes_col: str | None = None,
     trigger_once: bool = False,
     compact_every: int | None = None,
     compact_max_files: int = 8,
@@ -59,18 +58,12 @@ def stream_into_index(
             idx,
             batch_df,
             box=box,
-            bytes_col=bytes_col,
             build_id=f"stream-{epoch_id}",
             idempotent=True,
         )
         if compact_every and epoch_id % compact_every == compact_every - 1:
-            # bytes_col forwarded (ADVICE r5 #3): without it, compacted
-            # buckets' manifest n_bytes collapsed to 0 on an index whose
-            # inserts tracked bytes — skew metrics drifted and the
-            # manifest-vs-recompute validity check would mismatch.
             compact(
                 idx, max_files_per_bucket=compact_max_files,
-                bytes_col=bytes_col,
                 build_id=f"compact-{epoch_id}",
             )
 
