@@ -280,7 +280,7 @@ def _nd_index(spark, sf_dir):
     import os
     import tempfile
 
-    from libspatialindex_spark.operators import nd
+    from libspatialindex_spark.operators import index_build, nd
 
     if sf_dir in _ND_IDX:
         return _ND_IDX[sf_dir]
@@ -300,11 +300,11 @@ def _nd_index(spark, sf_dir):
     ).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"spark_graft_nd_{tag}")
     try:
-        idx = nd.load_index_nd(spark, path)
+        idx = index_build.load_index(spark, path, conf3)
     except FileNotFoundError:
         td.register_views(spark, sf_dir)
         df = spark.sql(td.RECTS3D_SQL)
-        idx = nd.build_index_nd(df, path, conf3, box, **build_kwargs)
+        idx = index_build.build_index(df, path, conf3, box, **build_kwargs)
     _ND_IDX[sf_dir] = idx
     return idx
 

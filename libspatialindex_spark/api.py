@@ -78,9 +78,10 @@ class Index:
         conf: EngineConfig = DEFAULT,
         box: BoxCols | None = None,
     ) -> "Index":
-        return cls(
-            stored=index_build.load_index(spark, path, conf), box=box or BoxCols()
-        )
+        """Open a stored index; ``box`` defaults to its persisted box
+        columns."""
+        stored = index_build.load_index(spark, path, conf)
+        return cls(stored=stored, box=box or BoxCols.of(stored.box.dims))
 
     def _rel(self):
         return self.stored.relation(self.box)
@@ -138,13 +139,7 @@ class Index:
         the manifest's exact per-bucket MBRs — the reference reads its
         root node's MBR the same way (``RTreeQuery.cc:166-184``), with no
         data scan.  ``(None,) * 4`` for an empty index."""
-        rows = self.stored.manifest_totals_rows()
-        if not rows:
-            return (None,) * 4
-        return (
-            min(r["xmin"] for r in rows), min(r["ymin"] for r in rows),
-            max(r["xmax"] for r in rows), max(r["ymax"] for r in rows),
-        )
+        return self.stored.bounds()
 
     def leaves(self) -> DataFrame:
         """``Index_GetLeaves``: the bucket manifest (id ranges live in the
@@ -186,7 +181,7 @@ class IndexND:
     index family).  Same method surface as :class:`Index`, with per-axis
     lo/hi lists in place of 4-tuples."""
 
-    stored: "object"  # nd.NDStoredIndex
+    stored: index_build.StoredIndex
 
     @classmethod
     def create(cls, df: DataFrame, path: str, axes, dims, **kw) -> "IndexND":
@@ -194,13 +189,13 @@ class IndexND:
 
         conf = nd.NDConfig(axes=tuple(tuple(a) for a in axes))
         box = nd.NDBox(dims=tuple(tuple(d) for d in dims))
-        return cls(stored=nd.build_index_nd(df, path, conf, box, **kw))
+        return cls(stored=index_build.build_index(df, path, conf, box, **kw))
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IndexND":
         from libspatialindex_spark.operators import nd
 
-        return cls(stored=nd.load_index_nd(spark, path))
+        return cls(stored=index_build.load_index(spark, path, nd.NDConfig()))
 
     def _rel(self):
         return self.stored.relation()
@@ -238,13 +233,7 @@ class IndexND:
 
     def bounds(self) -> tuple:
         """Root MBR from the manifest roll-up, as :meth:`Index.bounds`."""
-        rows = self.stored.manifest_totals_rows()
-        d = self.stored.box.d
-        if not rows:
-            return (None,) * (2 * d)
-        return tuple(min(r["lows"][i] for r in rows) for i in range(d)) + tuple(
-            max(r["highs"][i] for r in rows) for i in range(d)
-        )
+        return self.stored.bounds()
 
     # -- mutations (the generic staged protocol in operators/mutations) ------
 

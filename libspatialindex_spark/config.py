@@ -33,10 +33,6 @@ class EngineConfig:
         (xmin, ymin, xmax, ymax) of the indexed space.  The synthetic data
         lives in the unit square, matching the reference generator
         (``test/rtree/Generator.cc:66-91``).
-    sample_fraction:
-        Driver-side sample used to compute range-partition boundaries
-        (the analog of LISA's equal-frequency cuts,
-        ``src/learnedindex/BulkLoader.cc:488-590``).
     hot_cell_salt:
         Max salt fan-out applied to skewed cells in spatial joins
         (LISA tie-advance precedent, ``BulkLoader.cc:543-556``).
@@ -50,11 +46,16 @@ class EngineConfig:
     grid_bits: int = 16
     target_partitions: int = 32
     world: tuple[float, float, float, float] = (0.0, 0.0, 1.0, 1.0)
-    sample_fraction: float = 0.05
-    max_sample_rows: int = 200_000
     hot_cell_salt: int = 16
     tile_bits: int = 6  # 64×64 tiles
     extra_spark_conf: dict = field(default_factory=dict)
+
+    @property
+    def axes(self) -> tuple[tuple[float, float], ...]:
+        """``world`` as per-axis (lo, hi) pairs — the layout of a stored
+        index, which is dimension-generic (``index_build``)."""
+        xmin, ymin, xmax, ymax = self.world
+        return ((xmin, xmax), (ymin, ymax))
 
     @property
     def grid_n(self) -> int:

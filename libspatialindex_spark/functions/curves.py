@@ -92,14 +92,6 @@ def np_z_key(x: np.ndarray, y: np.ndarray, conf: EngineConfig) -> np.ndarray:
     )
 
 
-def z_of_cell(ix: int, iy: int) -> int:
-    """Scalar Morton key of an integer cell (driver-side planning)."""
-    return int(
-        _part1by1_np(np.array([ix], dtype=np.uint64))[0]
-        | (_part1by1_np(np.array([iy], dtype=np.uint64))[0] << np.uint64(1))
-    )
-
-
 # ------------------------------------------------------- N-dimensional side
 #
 # The reference is dimension-generic (``src/rtree/RTree.cc:306-308`` accepts
@@ -179,15 +171,19 @@ def np_z_key_nd(
 
 
 def z_of_cell_nd(cells: tuple[int, ...]) -> int:
-    """Scalar d-way Morton key of an integer cell (driver-side planning)."""
+    """Scalar d-way Morton key of an integer cell (driver-side planning),
+    the key :func:`np_z_key_nd` gives every point of that cell.  Plain
+    Python ints: the cover walk keys every block it emits, and a numpy
+    array per call costs more than the whole bit spread."""
     d = len(cells)
-    arrs = [np.array([c], dtype=np.uint64) for c in cells]
-    if d == 2:
-        return int(_part1by1_np(arrs[0])[0] | (_part1by1_np(arrs[1])[0] << np.uint64(1)))
-    if d == 3:
-        return int(
-            _part1by2_np(arrs[0])[0]
-            | (_part1by2_np(arrs[1])[0] << np.uint64(1))
-            | (_part1by2_np(arrs[2])[0] << np.uint64(2))
-        )
-    raise ValueError(f"z_of_cell_nd supports d in (2, 3), got {d}")
+    if d not in (2, 3):
+        raise ValueError(f"z_of_cell_nd supports d in (2, 3), got {d}")
+    masks = _MASKS if d == 2 else _MASKS3
+    z = 0
+    for a, c in enumerate(cells):
+        if d == 3:
+            c &= 0x1FFFFF
+        for shift, mask in masks:
+            c = (c | (c << shift)) & mask
+        z |= c << a
+    return z

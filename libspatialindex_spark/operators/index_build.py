@@ -26,11 +26,21 @@ Three global partitioners, mirroring the reference's bulk-load variants:
   topDownPartitioning): recursive median splits on a driver-side sample,
   cycling the split dimension per level; leaves become buckets.
 
-Query-time pruning is partitioner-agnostic: the manifest stores each
-bucket's exact data MBR, so the driver intersects the query window with
-bucket MBRs (the "root node" visit) and compiles a ``bucket IN`` partition
-filter; for ``zprefix`` a ``z BETWEEN`` cover disjunction additionally
-prunes parquet row groups inside each bucket.
+``quantile`` is ``cutlist`` with LISA equal-frequency cuts on a sample of
+the key; ``kd`` and ``quantile`` draw the same seeded sample.
+
+The layout is the same at every dimension, as the reference has one tree
+class for every dimension (``RTree.cc:306-308``): the key is the d-way
+Morton interleave of box centers (``curves.z_key_nd``), and
+``boundaries.json`` records the per-axis world (``axes``), the per-axis
+box columns (``dims``), ``grid_bits``, ``target_partitions`` and the
+partition spec.  The 2-D index is this layout at d=2.
+
+Query-time pruning is partitioner-agnostic (``relation.BoxPruning``): the
+manifest stores each bucket's exact per-axis data MBR, so the driver
+intersects the query window with bucket MBRs (the "root node" visit) and
+compiles a ``bucket IN`` partition filter; a ``z BETWEEN`` cover
+disjunction additionally prunes parquet row groups inside each bucket.
 
 Builds are **resumable at bucket granularity**: a bucket is committed iff
 its manifest row exists; a re-run plans only missing buckets and sweeps
@@ -44,7 +54,6 @@ import dataclasses
 import json
 import math
 from dataclasses import dataclass, field
-from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -52,16 +61,23 @@ from pyspark.sql import functions as F
 
 from libspatialindex_spark.config import EngineConfig
 from libspatialindex_spark.functions import curves
+from libspatialindex_spark.operators.nd import NDBox, NDConfig, NDRelation
 from libspatialindex_spark.operators.relation import BoxCols, SpatialRelation
 from libspatialindex_spark.plans import fs as FS
 from libspatialindex_spark.plans import manifest as M
 
+# The one driver-side sample behind the ``quantile`` and ``kd``
+# partitioners: a seeded Bernoulli sample of this fraction, capped in rows.
+SAMPLE_FRACTION = 0.2
+MAX_SAMPLE_ROWS = 200_000
 
-def _bucket_shift(conf: EngineConfig) -> int:
-    """Z right-shift so that #buckets = 4^L ≥ 4 × target_partitions."""
-    level = max(1, math.ceil(math.log(4 * conf.target_partitions, 4)))
+
+def _bucket_shift(conf) -> int:
+    """Z right-shift so that #buckets = (2^d)^L ≥ 4 × target_partitions."""
+    d = len(conf.axes)
+    level = max(1, math.ceil(math.log(4 * conf.target_partitions, 2**d)))
     level = min(level, conf.grid_bits)
-    return 2 * (conf.grid_bits - level)
+    return d * (conf.grid_bits - level)
 
 
 # --------------------------------------------------------------- partition --
@@ -69,72 +85,73 @@ def _bucket_shift(conf: EngineConfig) -> int:
 
 @dataclass
 class PartitionSpec:
-    """Serializable global-partitioner description (the 'root page')."""
+    """Serializable global-partitioner description (the 'root page') at
+    any dimension, closing the fork's 3-D bulk-load targets
+    (``test/CMakeLists.txt``: ``SFCRTreeBulkLoad3d`` = zprefix,
+    ``LISABulkLoad3d`` = quantile, ``PlatonBulkLoad3d`` = cutlist,
+    ``KDTreeLoad3d`` = kd)."""
 
-    kind: str  # zprefix | cutlist | kd
-    shift: int | None = None
+    kind: str = "zprefix"  # zprefix | cutlist | kd  (quantile → cutlist)
+    shift: int = 0
     cuts: list[int] | None = None
     kd_tree: list | None = None  # nested [dim, cut, left, right] | leaf int
 
-    def bucket_expr(self, cx: Column, cy: Column, z: Column) -> Column:
+    def bucket_expr(self, centers: list, z: Column) -> Column:
         if self.kind == "zprefix":
             return F.shiftright(z, self.shift)
         if self.kind == "cutlist":
-            inds = [ (z > F.lit(int(c))).cast("long") for c in self.cuts ]
-            return reduce(lambda a, b: a + b, inds, F.lit(0).cast("long"))
+            inds = [(z > F.lit(int(c))).cast("long") for c in self.cuts]
+            return sum(inds, F.lit(0).cast("long"))
         if self.kind == "kd":
             def walk(node):
                 if isinstance(node, int):
                     return F.lit(node).cast("long")
                 dim, cut, left, right = node
-                c = cx if dim == 0 else cy
-                return F.when(c <= F.lit(float(cut)), walk(left)).otherwise(
-                    walk(right)
-                )
-            return walk(_tuplify(self.kd_tree))
+                return F.when(
+                    centers[dim] <= F.lit(float(cut)), walk(left)
+                ).otherwise(walk(right))
+            return walk(self.kd_tree)
         raise ValueError(self.kind)
 
     def to_json(self) -> dict:
         return {
-            "kind": self.kind, "shift": self.shift, "cuts": self.cuts,
+            "pkind": self.kind, "shift": self.shift, "cuts": self.cuts,
             "kd_tree": self.kd_tree,
         }
 
     @staticmethod
     def from_json(d: dict) -> "PartitionSpec":
         return PartitionSpec(
-            kind=d["kind"], shift=d.get("shift"), cuts=d.get("cuts"),
-            kd_tree=d.get("kd_tree"),
+            kind=d.get("pkind", "zprefix"), shift=int(d.get("shift") or 0),
+            cuts=d.get("cuts"), kd_tree=d.get("kd_tree"),
         )
 
 
-def _tuplify(node):
-    if isinstance(node, list):
-        return (node[0], node[1], _tuplify(node[2]), _tuplify(node[3]))
-    return node
-
-
 def kd_partition_tree(
-    sample_xy: np.ndarray,
+    sample: np.ndarray,
     levels: int,
-    workload: np.ndarray | None = None,
+    workload=None,
 ) -> list:
-    """Top-down median partitioning on a sample, cycling split dims
+    """Top-down median partitioning of an (n, d) sample of box centers,
+    cycling the split dimension through all d axes
     (``kdtree/BulkLoader.cc:327-377``; dim cycling at ``:425``).
 
-    With ``workload`` (array of query boxes ``[xmin, ymin, xmax, ymax]``)
-    this becomes the B5 greedy variant (``kdtree/BulkLoader.cc:579-…``,
-    cost at ``:563-577``): among candidate cuts, pick the one MAXIMIZING
-    the number of workload queries that can skip a side entirely (the
-    reference's ``calculateSkip``), tie-broken toward the median.
+    With ``workload`` (query boxes as ``[lows…, highs…]`` rows) this
+    becomes the B5 greedy variant (``kdtree/BulkLoader.cc:579-…``, cost at
+    ``:563-577``): among candidate cuts, pick the one MAXIMIZING the number
+    of workload queries that can skip a side entirely (the reference's
+    ``calculateSkip``), tie-broken toward the median.
     """
+    d = sample.shape[1]
+    if workload is not None:
+        workload = np.asarray(workload, dtype=float)
     counter = [0]
 
     def best_cut(pts: np.ndarray, dim: int) -> float:
         med = float(np.median(pts[:, dim]))
         if workload is None or len(workload) == 0:
             return med
-        qlo, qhi = workload[:, dim], workload[:, dim + 2]
+        qlo, qhi = workload[:, dim], workload[:, dim + d]
         cands = np.quantile(pts[:, dim], np.linspace(0.2, 0.8, 7))
         best, best_skip = med, -1.0
         for c in cands:
@@ -152,7 +169,7 @@ def kd_partition_tree(
             leaf = counter[0]
             counter[0] += 1
             return leaf
-        dim = depth % 2
+        dim = depth % d
         cut = best_cut(pts, dim)
         left = pts[pts[:, dim] <= cut]
         right = pts[pts[:, dim] > cut]
@@ -162,7 +179,52 @@ def kd_partition_tree(
             return leaf
         return [dim, cut, build(left, depth + 1), build(right, depth + 1)]
 
-    return build(sample_xy, 0)
+    return build(sample, 0)
+
+
+def _sample(df: DataFrame, cols: list) -> np.ndarray:
+    """The seeded driver-side sample of ``cols`` (one column per axis)."""
+    return (
+        df.select(*cols).sample(fraction=SAMPLE_FRACTION, seed=42)
+        .limit(MAX_SAMPLE_ROWS).toPandas().to_numpy()
+    )
+
+
+def _partition_spec(
+    df, conf, box: NDBox, partitioner: str, cuts, kd_levels, workload_boxes
+) -> PartitionSpec:
+    shift = _bucket_shift(conf)
+    if partitioner == "zprefix":
+        return PartitionSpec("zprefix", shift=shift)
+    if partitioner == "cutlist":
+        if not cuts:
+            raise ValueError("cutlist partitioner needs explicit cuts")
+        return PartitionSpec("cutlist", shift=shift, cuts=[int(c) for c in cuts])
+    if partitioner == "quantile":
+        # LISA equal-frequency cuts (``learnedindex/BulkLoader.cc:488-590``)
+        # on the mapped 1-D key — the key IS LISA's multi-dim → 1-D
+        # mapping: sample z, cut at distinct-value quantile borders (the
+        # np.unique is the reference's duplicate-value advance,
+        # ``:550-552``) — delegates to the cutlist machinery.
+        z = curves.z_key_nd(box.centers(), list(conf.axes), conf.grid_bits)
+        zs = _sample(df, [z])[:, 0]
+        qs = np.quantile(
+            zs, np.linspace(0, 1, 4 * conf.target_partitions + 1)[1:-1]
+        )
+        return PartitionSpec(
+            "cutlist", shift=shift,
+            cuts=[int(c) for c in np.unique(qs.astype(np.int64))],
+        )
+    if partitioner == "kd":
+        levels = kd_levels or max(
+            2, math.ceil(math.log2(conf.target_partitions))
+        )
+        tree = kd_partition_tree(
+            _sample(df, box.centers()), levels,
+            workload=workload_boxes,
+        )
+        return PartitionSpec("kd", shift=shift, kd_tree=tree)
+    raise ValueError(partitioner)
 
 
 # ------------------------------------------------------------------- index --
@@ -170,26 +232,26 @@ def kd_partition_tree(
 
 @dataclass
 class StoredIndex(M.StoredLayout):
-    """A persisted two-level spatial index (data dirs + manifest)."""
+    """A persisted two-level spatial index (bucket data dirs + manifest)
+    at any dimension.
+
+    ``conf`` carries the layout (``axes``, ``grid_bits``,
+    ``target_partitions``) and picks the query side: an
+    :class:`~libspatialindex_spark.config.EngineConfig` (whose ``world``
+    is the two axes) opens the 2-D :class:`StoredRelation`, an
+    :class:`~libspatialindex_spark.operators.nd.NDConfig` the N-d
+    :class:`~libspatialindex_spark.operators.nd.NDRelation`.  ``box`` names
+    the per-axis box columns."""
 
     spark: SparkSession
     path: str
-    conf: EngineConfig
+    conf: EngineConfig | NDConfig
+    box: NDBox
     spec: PartitionSpec
-
-    axes = (("xmin", "xmax"), ("ymin", "ymax"))
-    extent_cols = ("max_ex", "max_ey")
-
-    @staticmethod
-    def extent_row(ext) -> dict:
-        return {"max_ex": ext[0], "max_ey": ext[1]}
-
-    @staticmethod
-    def bounds_row(lo: dict, hi: dict) -> dict:
-        return {
-            "xmin": lo.get("xmin"), "ymin": lo.get("ymin"),
-            "xmax": hi.get("xmax"), "ymax": hi.get("ymax"),
-        }
+    # (z, bucket) Column expressions per box, see :meth:`keyed`
+    _keys: dict = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def zm_models(self) -> dict[int, tuple[float, float, int]]:
         """Per-bucket learned rank model {bucket: (a, b, max_err)} — the
@@ -223,199 +285,127 @@ class StoredIndex(M.StoredLayout):
             max(0, int(math.ceil(hi + err) - math.floor(lo - err))),
         )
 
-    @property
-    def bucket_shift(self) -> int:
-        return self.spec.shift if self.spec.kind == "zprefix" else 0
-
-    def manifest_totals(self) -> DataFrame:
-        """Per-bucket totals (a bucket may have several manifest rows after
-        incremental inserts — totals are the roll-up)."""
-        return self.manifest().groupBy("bucket").agg(
-            F.min("zmin").alias("zmin"),
-            F.max("zmax").alias("zmax"),
-            F.min("xmin").alias("xmin"),
-            F.min("ymin").alias("ymin"),
-            F.max("xmax").alias("xmax"),
-            F.max("ymax").alias("ymax"),
-            F.sum("n_rows").alias("n_rows"),
-        )
+    def keyed(self, df: DataFrame, box=None) -> DataFrame:
+        """Attach z + bucket columns per this index's partitioner — the
+        build's and every mutation's router.  ``box`` (an NDBox or a 2-D
+        BoxCols) defaults to the index's.  The Column expressions are built
+        once per handle and box: building the Morton expression through
+        py4j costs about as much driver time as analysing it."""
+        box = NDBox.of(box) or self.box
+        cols = self._keys.get(box)
+        if cols is None:
+            centers = box.centers()
+            z = curves.z_key_nd(centers, list(self.conf.axes), self.conf.grid_bits)
+            cols = self._keys[box] = (
+                z, self.spec.bucket_expr(centers, F.col("z"))
+            )
+        z, bucket = cols
+        return df.withColumn("z", z).withColumn("bucket", bucket)
 
     def manifest_totals_rows(self) -> list[dict]:
-        """:meth:`manifest_totals` rolled up on the driver, plus each
-        bucket's max entry extents (``max_ex``, ``max_ey``)."""
+        """Per-bucket roll-up of the manifest on the driver (a bucket has
+        one row per build or insert batch): z bounds, per-axis MBR
+        (``lows``/``highs``), per-axis max entry extents (``max_ext``) and
+        ``n_rows``."""
         return M.rollup(
             self.manifest_rows(),
-            mins=("zmin", "xmin", "ymin"),
-            maxs=("zmax", "xmax", "ymax", "max_ex", "max_ey"),
+            mins=("zmin", "lows"),
+            maxs=("zmax", "highs", "max_ext"),
         )
 
-    def keyed(self, df: DataFrame, box: BoxCols | None = None) -> DataFrame:
-        """Attach z + bucket columns per this index's partitioner."""
-        box = box or BoxCols()
-        cx = (F.col(box.xmin) + F.col(box.xmax)) / 2
-        cy = (F.col(box.ymin) + F.col(box.ymax)) / 2
-        z = curves.z_key(cx, cy, self.conf)
-        out = df.withColumn("z", z)
-        return out.withColumn(
-            "bucket", self.spec.bucket_expr(cx, cy, F.col("z"))
+    def manifest_totals(self) -> DataFrame:
+        """:meth:`manifest_totals_rows` as a DataFrame."""
+        return self.spark.createDataFrame(
+            self.manifest_totals_rows(),
+            "bucket long, zmin long, zmax long, n_rows long, "
+            "lows array<double>, highs array<double>, max_ext array<double>",
         )
 
-    def relation(self, box: BoxCols | None = None) -> "StoredRelation":
+    def bounds(self) -> tuple:
+        """Root MBR — per-axis lows, then highs — rolled up on the driver
+        from the manifest's exact per-bucket MBRs; the reference reads its
+        root node's MBR the same way (``RTreeQuery.cc:166-184``), with no
+        data scan.  All ``None`` for an empty index."""
+        rows = self.manifest_totals_rows()
+        d = self.box.d
+        if not rows:
+            return (None,) * (2 * d)
+        return tuple(min(r["lows"][a] for r in rows) for a in range(d)) + tuple(
+            max(r["highs"][a] for r in rows) for a in range(d)
+        )
+
+    def relation(self, box=None) -> "StoredRelation | NDRelation":
         """Queryable relation with driver-side manifest-MBR pruning plus
-        (zprefix) pushed z-range row-group pruning.  Opening it runs no
-        Spark job: manifest and file map are read on the driver and the
-        data scan is planned with the memoized schema."""
+        pushed z-range row-group pruning (``relation.BoxPruning``):
+        a :class:`StoredRelation` under an ``EngineConfig``, else an
+        ``NDRelation``.  Opening it runs no Spark job: manifest and file
+        map are read on the driver and the data scan is planned with the
+        memoized schema."""
         rows = self.manifest_totals_rows()
         fm = M.read_rows(self.fs, self.filemap_path) or []
-        return StoredRelation(
+        ext = [max(e) for e in zip(*(r["max_ext"] for r in rows))]
+        kw = dict(
             df=self.data(),
             conf=self.conf,
-            box=box or BoxCols(),
             z_col="z",
-            max_extent=(
-                max((r["max_ex"] for r in rows), default=0.0),
-                max((r["max_ey"] for r in rows), default=0.0),
-            ),
-            bucket_shift=self.spec.shift if self.spec.kind == "zprefix" else None,
-            bucket_boxes=[
-                (r["bucket"], r["xmin"], r["ymin"], r["xmax"], r["ymax"],
-                 r["n_rows"])
-                for r in rows
-            ],
+            max_extent=tuple(ext or [0.0] * self.box.d),
+            bucket_boxes=[(r["bucket"], r["lows"], r["highs"]) for r in rows],
             file_boxes=[
                 (r["path"], r["bucket"], r["zmin"], r["zmax"], r["n_rows"])
                 for r in fm
             ],
             data_path=self.data_path,
         )
+        if isinstance(self.conf, EngineConfig):
+            if not isinstance(box, BoxCols):
+                box = BoxCols.of((NDBox.of(box) or self.box).dims)
+            return StoredRelation(box=box, **kw)
+        return NDRelation(box=NDBox.of(box) or self.box, **kw)
 
     def validate(self) -> bool:
         """``isIndexValid()`` analog (``SpatialIndex.h:209``): recompute
-        per-bucket aggregates from data and diff against manifest totals."""
-        cols = ["bucket", "zmin", "zmax", "xmin", "ymin", "xmax", "ymax", "n_rows"]
-        got = M.manifest_for(self.data()).select(cols)
-        want = self.manifest_totals().select(cols)
-        return got.exceptAll(want).count() + want.exceptAll(got).count() == 0
+        per-bucket z bounds, row count and per-axis MBR from the data (one
+        Spark job) and diff them against the manifest roll-up."""
+        dims = self.box.dims
+        agg = self.data().groupBy(F.col("bucket").cast("long")).agg(
+            F.min("z"), F.max("z"), F.count(F.lit(1)),
+            F.array(*[F.min(lo) for lo, _ in dims]),
+            F.array(*[F.max(hi) for _, hi in dims]),
+        )
+        got = {
+            (b, z0, z1, n, tuple(lo), tuple(hi))
+            for b, z0, z1, n, lo, hi in agg.collect()
+        }
+        want = {
+            (r["bucket"], r["zmin"], r["zmax"], r["n_rows"],
+             tuple(r["lows"]), tuple(r["highs"]))
+            for r in self.manifest_totals_rows()
+        }
+        return got == want
 
 
 @dataclass
 class StoredRelation(SpatialRelation):
-    """SpatialRelation over a stored index.
-
-    Built by :meth:`StoredIndex.relation` with no Spark job: the bucket
-    and file boxes below come from the manifest and file map read on the
-    driver, and every scan (the whole root or a file subset) is planned
-    with the index's memoized data schema, so nothing infers one.
-
-    Pruning = driver-side manifest-MBR intersection (→ ``bucket IN``
-    partition filter, works for every partitioner) composed with the
-    Z-cover BETWEEN disjunction (zprefix only, → parquet row-group stats),
-    and — when the build wrote a file map — a third, sub-bucket level:
-    the scan is re-planned over ONLY the files whose [zmin, zmax] zone
-    meets the cover (the ZM learned index's in-node skip,
-    ``LearnedIndex.cc:1494-1507``, expressed as driver-side file
-    selection).
+    """The 2-D :class:`SpatialRelation` over a stored index, built by
+    :meth:`StoredIndex.relation` with no Spark job.  The fields below come
+    from the manifest and file map read on the driver, and every scan (the
+    whole root or a file subset) is planned with the index's memoized data
+    schema; pruning is the shared :class:`relation.BoxPruning`.
 
     kNN runs the same ring core as on any relation (``knn._ring_knn``);
     this pruning plans each ring's window.
     """
 
-    bucket_shift: int | None = None
-    bucket_boxes: list = field(default_factory=list)
-    # (path, bucket, zmin, zmax, n_rows) per data file — z-disjoint within
-    # a bucket because the build sorts by z before splitting files
+    bucket_boxes: list = field(default_factory=list)  # (bucket, lows, highs)
     file_boxes: list = field(default_factory=list)
     data_path: str | None = None
-
-    def _box_plan(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float
-    ) -> tuple[list | None, list[tuple[int, int]], object, list | None]:
-        """Shared driver-side selection for a query window: (hit buckets
-        or None = no bucket metadata, coalesced z ranges, z predicate,
-        file subset or None = no file-level re-plan)."""
-        hit: list | None = None
-        if self.bucket_boxes:
-            hit = [
-                b for b, x0, y0, x1, y1, *_ in self.bucket_boxes
-                if not (x0 > qxmax or x1 < qxmin or y0 > qymax or y1 < qymin)
-            ]
-        pred = None
-        ranges: list[tuple[int, int]] = []
-        if self.bucket_shift is not None and self.max_extent is not None:
-            from libspatialindex_spark.plans.cover import z_cover
-
-            expand = max(self.max_extent)
-            cov = z_cover(qxmin, qymin, qxmax, qymax, self.conf, expand=expand)
-            ranges = cov.coalesced(max_ranges=16)
-            pred = self.z_range_predicate(cov)
-        files: list | None = None
-        if (
-            self.file_boxes and ranges and self.data_path is not None
-            and (hit is None or hit)
-        ):
-            hset = set(hit) if hit is not None else None
-            cand = [
-                p
-                for p, b, z0, z1, *_ in self.file_boxes
-                if (hset is None or b in hset)
-                and any(not (z0 > rhi or z1 < rlo) for rlo, rhi in ranges)
-            ]
-            if len(cand) < len(self.file_boxes):
-                files = cand
-        return hit, ranges, pred, files
-
-    def pruned_for_box(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float
-    ) -> DataFrame:
-        hit, _ranges, pred, files = self._box_plan(qxmin, qymin, qxmax, qymax)
-        df = self.df
-        if hit is not None:
-            if len(hit) == 0:
-                return df.filter(F.lit(False))
-            if len(hit) < len(self.bucket_boxes):
-                df = df.filter(F.col("bucket").isin(hit))
-        # Third level: file-zone-map refinement — re-plan the scan over
-        # only the files whose z range meets the cover (and whose bucket
-        # survived the MBR prune).
-        if files is not None:
-            if not files:
-                return df.filter(F.lit(False))
-            sub = (
-                self.df.sparkSession.read.schema(self.df.schema)
-                .option("basePath", self.data_path)
-                .parquet(*files)
-            )
-            return sub.filter(pred) if pred is not None else sub
-        if pred is not None:
-            df = df.filter(pred)
-        return df
-
-    def files_planned_for_box(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float
-    ) -> int:
-        """Files the pruned plan can touch AFTER partition pruning.
-        ``pruned.inputFiles()`` ignores the ``bucket IN`` partition filter
-        (it lists the whole relation — ADVICE r3), so this derives the
-        count from the same driver-side selection ``pruned_for_box``
-        executes: the file-map subset when that re-plan fires, else the
-        listing restricted to surviving bucket directories."""
-        hit, _ranges, _pred, files = self._box_plan(qxmin, qymin, qxmax, qymax)
-        if hit is not None and len(hit) == 0:
-            return 0
-        if files is not None:
-            return len(files)
-        all_files = self.df.inputFiles()
-        if hit is not None and len(hit) < len(self.bucket_boxes):
-            tags = tuple(f"/bucket={b}/" for b in hit)
-            return sum(1 for p in all_files if any(t in p for t in tags))
-        return len(all_files)
 
 
 def build_index(
     df: DataFrame,
     path: str,
-    conf: EngineConfig,
-    box: BoxCols | None = None,
+    conf: EngineConfig | NDConfig,
+    box=None,
     build_id: str = "build-1",
     resume: bool = False,
     partitioner: str = "zprefix",
@@ -424,7 +414,15 @@ def build_index(
     workload_boxes=None,
     max_records_per_file: int | None = None,
 ) -> StoredIndex:
-    """Bulk-load ``df`` into a stored index at ``path``.
+    """Bulk-load ``df`` into a stored index at ``path``: d-way Morton key on
+    box centers → range shuffle → partitioned, z-sorted buckets → manifest
+    rows from the written files' footers.  ``conf`` gives the layout (see
+    :class:`StoredIndex`); ``box`` (an NDBox, or a 2-D BoxCols) the
+    per-axis box columns, default ``xmin..ymax``.
+
+    ``partitioner``: ``zprefix`` (default), ``cutlist`` (with ``cuts``),
+    ``quantile``, or ``kd`` (``kd_levels`` deep, cuts steered by
+    ``workload_boxes`` when given).
 
     ``resume=True`` reuses the persisted PartitionSpec, skips committed
     buckets, and sweeps stale uncommitted bucket dirs (crash cleanup).
@@ -432,64 +430,18 @@ def build_index(
     records a per-file zone map + learned rank models (B6 refinement —
     see :func:`refresh_file_map`)."""
     spark = df.sparkSession
-    box = box or BoxCols()
+    box = NDBox.of(box) or NDBox()
+    if box.d != len(conf.axes):
+        raise ValueError(f"box dims {box.d} != conf dims {len(conf.axes)}")
     data_path = FS.join(path, "data")
     fs = FS.get_fs(spark, path)
 
-    spec: PartitionSpec | None = None
-    if resume:
-        spec, _ = _load_spec(fs, path)
-    if spec is None:
-        if partitioner == "zprefix":
-            spec = PartitionSpec("zprefix", shift=_bucket_shift(conf))
-        elif partitioner == "cutlist":
-            if not cuts:
-                raise ValueError("cutlist partitioner needs explicit cuts")
-            spec = PartitionSpec("cutlist", cuts=[int(c) for c in cuts])
-        elif partitioner == "quantile":
-            # LISA equal-frequency cuts (``learnedindex/BulkLoader.cc:
-            # 488-590``): sample z, cut at distinct-value quantile borders
-            # (the np.unique is the reference's duplicate-value advance,
-            # ``:550-552``) — delegates to the cutlist machinery.
-            cx = (F.col(box.xmin) + F.col(box.xmax)) / 2
-            cy = (F.col(box.ymin) + F.col(box.ymax)) / 2
-            zs = (
-                df.select(curves.z_key(cx, cy, conf).alias("z"))
-                .sample(fraction=min(1.0, conf.sample_fraction * 4), seed=42)
-                .limit(conf.max_sample_rows)
-                .toPandas()["z"]
-                .to_numpy()
-            )
-            qs = np.quantile(
-                zs, np.linspace(0, 1, 4 * conf.target_partitions + 1)[1:-1]
-            )
-            spec = PartitionSpec(
-                "cutlist", cuts=[int(c) for c in np.unique(qs.astype(np.int64))]
-            )
-        elif partitioner == "kd":
-            levels = kd_levels or max(
-                2, math.ceil(math.log2(conf.target_partitions))
-            )
-            cx = (F.col(box.xmin) + F.col(box.xmax)) / 2
-            cy = (F.col(box.ymin) + F.col(box.ymax)) / 2
-            sample = (
-                df.select(cx.alias("cx"), cy.alias("cy"))
-                .sample(fraction=min(1.0, conf.sample_fraction * 4), seed=42)
-                .limit(conf.max_sample_rows)
-                .toPandas()
-                .to_numpy()
-            )
-            spec = PartitionSpec(
-                "kd",
-                kd_tree=kd_partition_tree(
-                    sample, levels, workload=workload_boxes
-                ),
-            )
-        else:
-            raise ValueError(partitioner)
-
-    idx = StoredIndex(spark=spark, path=path, conf=conf, spec=spec)
-    keyed = idx.keyed(df, box)
+    layout = _load_layout(fs, path) if resume else None
+    spec = PartitionSpec.from_json(layout) if layout else _partition_spec(
+        df, conf, box, partitioner, cuts, kd_levels, workload_boxes
+    )
+    idx = StoredIndex(spark=spark, path=path, conf=conf, box=box, spec=spec)
+    keyed = idx.keyed(df)
 
     done: set[int] = set()
     if resume:
@@ -500,12 +452,12 @@ def build_index(
     elif fs.isdir(path):
         fs.delete(path)
     fs.mkdirs(path)
-    _save_spec(fs, path, spec, conf)
+    _save_layout(fs, idx)
 
     # The "external sort": one range shuffle on z, then in-partition sort —
     # rows land clustered so parquet row-group zone maps on z are tight.
     # The max entry extents ride on the write as an Observation.
-    keyed, extent = M.observe_extent(keyed, idx.axes)
+    keyed, extent = M.observe_extent(keyed, box.dims)
     writer = (
         keyed.repartitionByRange(conf.target_partitions, "z")
         # sort by (bucket, z), not z alone: the dynamic-partition writer
@@ -537,9 +489,8 @@ def build_index(
         .parquet(*[FS.join(data_path, f"bucket={b}") for b in new])
         .schema
     )
-    ext = idx.extent_row(extent())
     idx.append_manifest(
-        idx.footer_manifest(data_path, new, dict.fromkeys(new, ext), build_id)
+        idx.footer_manifest(data_path, new, dict.fromkeys(new, extent()), build_id)
     )
     if max_records_per_file:
         refresh_file_map(idx)
@@ -549,10 +500,9 @@ def build_index(
 def refresh_file_map(idx) -> None:
     """(Re)build the per-file zone map and the per-bucket learned rank
     models (B6 completion — ``LearnedIndex.cc:1494-1507`` /
-    ``BulkLoader.cc:429-445`` analog) — works on both :class:`StoredIndex`
-    and the dimension-generic ``NDStoredIndex`` (the z key is a scalar
-    long whatever the dimension, so the map and the models are
-    dimension-blind).
+    ``BulkLoader.cc:429-445`` analog).  The z key is a scalar long
+    whatever the dimension, so the map and the models are
+    dimension-blind.
 
     File zone map: one row per data file, (path, bucket, zmin, zmax,
     n_rows), read from each file's parquet footer on the driver (no Spark
@@ -611,55 +561,87 @@ def refresh_file_map(idx) -> None:
 
 
 def load_index(
-    spark: SparkSession, path: str, conf: EngineConfig | None = None
+    spark: SparkSession, path: str, conf: EngineConfig | NDConfig | None = None
 ) -> StoredIndex:
-    """Open a stored index.  The layout-bearing config (world, grid_bits,
-    target_partitions, tile_bits) is restored from the persisted spec — the
-    analog of the reference's header page (``RTree.cc:1505-1551
-    loadHeader``): the stored z column was computed under the build-time
-    grid, so trusting a caller-supplied conf would silently mis-prune.
-    Raises when the spec file is absent (corrupt / not an index)."""
+    """Open a stored index.  The layout (axes, grid_bits,
+    target_partitions, box columns, partitioner) is restored from
+    ``boundaries.json`` — the analog of the reference's header page
+    (``RTree.cc:1505-1551 loadHeader``): the stored z column was computed
+    under the build-time grid, so trusting a caller-supplied conf would
+    silently mis-prune.  ``conf`` supplies the rest and picks the query
+    side (:class:`StoredIndex`): an ``NDConfig``, or any index of d ≠ 2,
+    opens the N-d relation; otherwise ``conf`` (default ``EngineConfig()``)
+    with its world and grid replaced.  Raises when the spec file is absent
+    (corrupt / not an index)."""
     fs = FS.get_fs(spark, path)
-    spec, stored_conf = _load_spec(fs, path)
-    if spec is None:
+    d = _load_layout(fs, path)
+    if d is None:
         raise FileNotFoundError(
             f"no boundaries.json under {path} — not a stored index "
             "(refusing to guess a partition spec: pruning under a wrong "
             "grid silently drops rows)"
         )
     base = conf or EngineConfig()
-    if stored_conf is not None:
-        base = dataclasses.replace(
-            base,
-            world=tuple(stored_conf["world"]),
-            grid_bits=int(stored_conf["grid_bits"]),
-            target_partitions=int(stored_conf["target_partitions"]),
-            tile_bits=int(stored_conf.get("tile_bits", base.tile_bits)),
+    axes = tuple(tuple(a) for a in d.get("axes", base.axes))
+    grid_bits = int(d.get("grid_bits", base.grid_bits))
+    tp = int(d.get("target_partitions", base.target_partitions))
+    if isinstance(base, NDConfig) or len(axes) != 2:
+        layout = NDConfig(axes=axes, grid_bits=grid_bits, target_partitions=tp)
+    else:
+        (x0, x1), (y0, y1) = axes
+        layout = dataclasses.replace(
+            base, world=(x0, y0, x1, y1), grid_bits=grid_bits,
+            target_partitions=tp,
         )
-    return StoredIndex(spark=spark, path=path, conf=base, spec=spec)
+    return StoredIndex(
+        spark=spark, path=path, conf=layout,
+        box=NDBox(tuple(tuple(p) for p in d["dims"])),
+        spec=PartitionSpec.from_json(d),
+    )
 
 
-def _save_spec(fs, path: str, spec: PartitionSpec, conf: EngineConfig) -> None:
-    d = spec.to_json()
-    # Persist the layout-bearing config next to the partitioner (storeHeader
-    # analog, RTree.cc:1445): a loader must use the build-time grid.
-    d["conf"] = {
-        "world": list(conf.world),
-        "grid_bits": conf.grid_bits,
-        "target_partitions": conf.target_partitions,
-        "tile_bits": conf.tile_bits,
-    }
-    fs.write_text(FS.join(path, "boundaries.json"), json.dumps(d))
+def _save_layout(fs, idx: StoredIndex) -> None:
+    # The layout next to the partitioner (storeHeader analog,
+    # RTree.cc:1445): a loader must use the build-time grid.
+    fs.write_text(
+        FS.join(idx.path, "boundaries.json"),
+        json.dumps({
+            "axes": [list(a) for a in idx.conf.axes],
+            "dims": [list(p) for p in idx.box.dims],
+            "grid_bits": idx.conf.grid_bits,
+            "target_partitions": idx.conf.target_partitions,
+            **idx.spec.to_json(),
+        }),
+    )
 
 
-def _load_spec(fs, path: str) -> tuple[PartitionSpec | None, dict | None]:
+def _load_layout(fs, path: str) -> dict | None:
+    """``boundaries.json`` in the form :func:`_save_layout` writes, or
+    ``None`` when there is none.  The 2-D form written before the layout
+    was dimension-generic (partitioner ``kind`` plus the build ``conf``,
+    box columns ``xmin..ymax``) is mapped to it; without a ``conf`` the
+    loader's config supplies the grid."""
     p = FS.join(path, "boundaries.json")
     if not fs.exists(p):
-        return None, None
+        return None
     d = json.loads(fs.read_text(p))
-    if "kind" not in d:  # legacy format
-        return None, None
-    return PartitionSpec.from_json(d), d.get("conf")
+    if "axes" in d:
+        return d
+    if "kind" not in d:
+        return None  # not a layout this engine wrote
+    out = {
+        "dims": [["xmin", "xmax"], ["ymin", "ymax"]],
+        "pkind": d["kind"], "shift": d.get("shift"), "cuts": d.get("cuts"),
+        "kd_tree": d.get("kd_tree"),
+    }
+    c = d.get("conf")
+    if c:
+        w = c["world"]
+        out.update(
+            axes=[[w[0], w[2]], [w[1], w[3]]], grid_bits=c["grid_bits"],
+            target_partitions=c["target_partitions"],
+        )
+    return out
 
 
 def _sweep_uncommitted(fs, data_path: str, committed: set[int]) -> None:

@@ -45,7 +45,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libspatialindex_spark.operators.relation import BoxCols
+from libspatialindex_spark.operators.nd import NDBox
 from libspatialindex_spark.plans import fs as FS
 from libspatialindex_spark.plans import manifest as M
 
@@ -54,29 +54,10 @@ def _safe(build_id: str) -> str:
     return re.sub(r"[^A-Za-z0-9_.-]", "_", build_id)
 
 
-# The same mutation protocol serves the 2-D StoredIndex and the
-# dimension-generic NDStoredIndex (the reference's insert/delete API is
-# dimension-generic, RTree.cc:306-308); the layout supplies its manifest
-# columns (``StoredLayout.footer_manifest``) and its box column names.
-
-
-def _default_box(idx):
-    # the N-d index persists its per-axis box; the 2-D one uses BoxCols
-    return getattr(idx, "box", None) or BoxCols()
-
-
-def _box_col_names(box) -> set[str]:
-    if hasattr(box, "dims"):  # NDBox
-        return {c for pair in box.dims for c in pair}
-    return {box.xmin, box.ymin, box.xmax, box.ymax}
-
-
 def _invalidate_file_map(idx) -> None:
     """Drop the per-file zone map + learned models after a mutation —
     a stale file map would silently exclude newly-inserted files from
     pruned scans.  Rebuild with ``index_build.refresh_file_map``."""
-    if not hasattr(idx, "filemap_path"):
-        return
     fs = idx.fs
     fs.delete(idx.filemap_path)
     fs.delete(FS.join(idx.path, "zm_models.json"))
@@ -118,7 +99,7 @@ def insert_batch(
     idempotent: bool = False,
 ):
     """M1 — append a batch of entries; only touched buckets change.
-    Works on 2-D and N-d stored indexes alike.
+    ``box`` (an NDBox or a 2-D BoxCols) defaults to the index's.
 
     With ``idempotent=True`` a ``build_id`` already present in the manifest
     is a no-op (exactly-once under streaming epoch replay)."""
@@ -133,7 +114,8 @@ def insert_batch(
     staging = FS.join(idx.path, f"_staging_insert_{tag}")
     fs.delete(staging)
 
-    keyed, extent = M.observe_extent(idx.keyed(rows, box), idx.axes)
+    box = NDBox.of(box) or idx.box
+    keyed, extent = M.observe_extent(idx.keyed(rows, box), box.dims)
     (
         keyed.repartitionByRange(idx.conf.target_partitions, "z")
         # (bucket, z): keeps the writer from inserting its own partition
@@ -148,7 +130,7 @@ def insert_batch(
         int(n[len("bucket="):]) for n in fs.listdir(staging)
         if n.startswith("bucket=")
     ]
-    ext = dict.fromkeys(buckets, idx.extent_row(extent()) if buckets else None)
+    ext = dict.fromkeys(buckets, extent() if buckets else None)
     mrows = idx.footer_manifest(staging, buckets, ext, build_id)
 
     # Move staged files into live bucket dirs under build_id-prefixed names
@@ -233,7 +215,7 @@ def _replace_manifest(idx, rows: list[dict]) -> None:
     mpath = idx.manifest_path
     fs.delete(mpath + ".new")
     M.write_table(
-        fs, FS.join(mpath + ".new", M.part_name()), rows, idx.manifest_schema
+        fs, FS.join(mpath + ".new", M.part_name()), rows, M.MANIFEST_SCHEMA
     )
     if fs.isdir(mpath):
         fs.rename(mpath, mpath + ".old")
@@ -270,8 +252,8 @@ def _swap_and_commit(idx, staged: str, touched: list, build_id: str) -> None:
 
     rows = idx.manifest_rows()
     prior = {
-        r["bucket"]: {c: r[c] for c in idx.extent_cols}
-        for r in M.rollup(rows, maxs=idx.extent_cols, sums=())
+        r["bucket"]: r["max_ext"]
+        for r in M.rollup(rows, maxs=("max_ext",), sums=())
     }
     keep = [r for r in rows if r["bucket"] not in touched]
     fresh = idx.footer_manifest(idx.data_path, touched, prior, build_id)
@@ -291,16 +273,15 @@ def delete_rows(
     build_id: str = "delete",
 ):
     """M2 — remove entries by id; rewrites ONLY buckets holding victims.
-    Works on 2-D and N-d stored indexes alike.
 
     ``victims`` must carry the id column (and box columns if available, to
     route directly; otherwise victim buckets are discovered by semi-join).
     """
     fs = idx.fs
-    box = box or _default_box(idx)
+    box = NDBox.of(box) or idx.box
     recover(idx)  # finish any interrupted earlier swap first
 
-    if set(c.name for c in victims.schema) >= _box_col_names(box):
+    if set(victims.columns) >= {c for pair in box.dims for c in pair}:
         vb = idx.keyed(victims, box).select(id_col, "bucket")
     else:
         vb = idx.data().join(
@@ -353,7 +334,6 @@ def compact(
     dropped post-commit; :func:`recover` rolls any torn state to a
     consistent pre- or post-compaction snapshot.  Row sets are identical
     before and after — only physical file count and in-file order change.
-    Works on 2-D and N-d stored indexes alike (shared z/bucket layout).
     """
     fs = idx.fs
     recover(idx)

@@ -20,8 +20,7 @@ from __future__ import annotations
 import itertools
 from dataclasses import dataclass
 
-from libspatialindex_spark.config import EngineConfig
-from libspatialindex_spark.functions.curves import z_of_cell, z_of_cell_nd
+from libspatialindex_spark.functions.curves import z_of_cell_nd
 
 
 @dataclass(frozen=True)
@@ -69,70 +68,6 @@ def _merge(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return out
 
 
-def z_cover(
-    qxmin: float,
-    qymin: float,
-    qxmax: float,
-    qymax: float,
-    conf: EngineConfig,
-    max_cells: int = 256,
-    expand: float = 0.0,
-) -> Cover:
-    """Cover of the (expanded) query window as closed Z-key ranges.
-
-    ``expand`` grows the window by the dataset's max entry extent so that
-    entries indexed by their MBR *center* whose box still reaches into the
-    window are not pruned away (center-indexing compensation).
-
-    The walk is an explicit-stack quadtree descent, mirroring the
-    explicit-stack DFS of ``RTree.cc:1763-1803``; a quadtree block at level
-    L is a *contiguous* Morton range at full resolution, so each emitted
-    block is one ``BETWEEN``.
-    """
-    wxmin, wymin, wxmax, wymax = conf.world
-    qxmin, qymin = qxmin - expand, qymin - expand
-    qxmax, qymax = qxmax + expand, qymax + expand
-    # Degenerate / disjoint windows.
-    if qxmin > wxmax or qxmax < wxmin or qymin > wymax or qymax < wymin:
-        return Cover(full=[], partial=[])
-
-    gb = conf.grid_bits
-    full: list[tuple[int, int]] = []
-    partial: list[tuple[int, int]] = []
-    # Stack of quadtree blocks: (level, ix, iy) where the block spans
-    # grid cells [ix*s, (ix+1)*s) × [iy*s, (iy+1)*s) with s = 2^(gb-level).
-    stack: list[tuple[int, int, int]] = [(0, 0, 0)]
-    sx = (wxmax - wxmin) / conf.grid_n
-    sy = (wymax - wymin) / conf.grid_n
-
-    def block_range(level: int, ix: int, iy: int) -> tuple[int, int]:
-        shift = 2 * (gb - level)
-        base = z_of_cell(ix, iy) << shift
-        return (base, base + (1 << shift) - 1)
-
-    while stack:
-        level, ix, iy = stack.pop()
-        s = 1 << (gb - level)
-        bxmin = wxmin + ix * s * sx
-        bymin = wymin + iy * s * sy
-        bxmax = wxmin + (ix + 1) * s * sx
-        bymax = wymin + (iy + 1) * s * sy
-        # Closed-interval intersection (Region.cc:264-276 semantics).
-        if bxmin > qxmax or bxmax < qxmin or bymin > qymax or bymax < qymin:
-            continue
-        if qxmin <= bxmin and bxmax <= qxmax and qymin <= bymin and bymax <= qymax:
-            full.append(block_range(level, ix, iy))
-            continue
-        if level == gb or len(full) + len(partial) >= max_cells:
-            partial.append(block_range(level, ix, iy))
-            continue
-        for dx in (0, 1):
-            for dy in (0, 1):
-                stack.append((level + 1, 2 * ix + dx, 2 * iy + dy))
-
-    return Cover(full=_merge(sorted(full)), partial=_merge(sorted(partial)))
-
-
 def z_cover_nd(
     qlo: list[float],
     qhi: list[float],
@@ -141,9 +76,19 @@ def z_cover_nd(
     max_cells: int = 256,
     expand: float = 0.0,
 ) -> Cover:
-    """:func:`z_cover` generalized to d dimensions (2^d-ary tree walk —
-    quadtree at d=2, octree at d=3).  A level-L block is a contiguous
-    d-way Morton range, so each emitted block is one ``BETWEEN``."""
+    """Cover of the (expanded) query window ``[qlo, qhi]`` as closed
+    Z-key ranges, over the grid of ``grid_bits`` bits per axis on
+    ``axes`` (per-axis (lo, hi) world extents).
+
+    ``expand`` grows the window by the dataset's max entry extent so that
+    entries indexed by their MBR *center* whose box still reaches into the
+    window are not pruned away (center-indexing compensation).
+
+    The walk is an explicit-stack 2^d-ary tree descent (quadtree at d=2,
+    octree at d=3), mirroring the explicit-stack DFS of
+    ``RTree.cc:1763-1803``; a level-L block is a *contiguous* d-way Morton
+    range at full resolution, so each emitted block is one ``BETWEEN``.
+    Blocks stop splitting once ``max_cells`` are emitted."""
     d = len(axes)
     qlo = [q - expand for q in qlo]
     qhi = [q + expand for q in qhi]

@@ -3,10 +3,17 @@
 The reference persists a header page (rootID, capacities, stats —
 ``src/rtree/RTree.cc:1445-1551``) plus an index-node hierarchy whose entries
 are (child MBR, child page id).  The distributed analog is a small manifest
-table with one row per range bucket and write (build or insert batch):
+table with one row per range bucket and write (build or insert batch),
+at every dimension:
 
-    bucket, zmin, zmax, xmin, ymin, xmax, ymax, n_rows, n_bytes,
-    max_ex, max_ey, build_id
+    bucket, zmin, zmax, n_rows, n_bytes, lows, highs, max_ext, build_id
+
+``lows`` / ``highs`` / ``max_ext`` hold one value per axis (the bucket's
+MBR and max entry extents).  A manifest written before the layout was
+dimension-generic has the 2-D scalar columns ``xmin, ymin, xmax, ymax,
+max_ex, max_ey`` instead; :meth:`StoredLayout.manifest_rows` reads such
+rows as per-axis lists, file by file, so a manifest mixing both forms
+after an append reads as one.
 
 It serves four roles at once (SURVEY.md §2.2 M3/M4, §2.5 A3):
 * **root/index nodes** — driver prunes buckets whose [zmin, zmax] misses the
@@ -29,11 +36,11 @@ files' on-disk size — reading only each file's tail (:func:`footer`), and
 :func:`write_table` writes the manifest with pyarrow.  No Spark job runs
 after the data write, and no data page is read.
 
-A footer holds no per-row extent, so the max entry extents (``max_ex``,
-``max_ey``; N-d ``max_ext``) are **upper bounds**, not exact maxima: a
-build or insert records its batch-wide max (an ``Observation`` that rides
-on the data write, :func:`observe_extent`) on each of the batch's bucket
-rows, and a delete or compaction, which only removes or keeps rows,
+A footer holds no per-row extent, so the max entry extents (``max_ext``)
+are **upper bounds**, not exact maxima: a build or insert records its
+batch-wide max (an ``Observation`` that rides on the data write,
+:func:`observe_extent`) on each of the batch's bucket rows, and a delete
+or compaction, which only removes or keeps rows,
 carries each touched bucket's prior max forward.  Query planning uses only
 the max over all rows, so pruning is exact on a fresh build and after
 inserts, and conservative (never wrong) after deletes.
@@ -51,12 +58,12 @@ from pyspark.sql.types import StructType
 
 from libspatialindex_spark.plans import fs as FS
 
-# Explicit schema — Spark reads of the manifest never infer, and the
-# driver writes it with the same types (:func:`arrow_schema`).
+# Explicit schema — the driver writes the manifest with these types
+# (:func:`arrow_schema`) and :meth:`StoredLayout.manifest` frames its rows
+# with it.
 MANIFEST_SCHEMA = (
-    "bucket long, zmin long, zmax long, "
-    "xmin double, ymin double, xmax double, ymax double, "
-    "n_rows long, n_bytes long, max_ex double, max_ey double, "
+    "bucket long, zmin long, zmax long, n_rows long, n_bytes long, "
+    "lows array<double>, highs array<double>, max_ext array<double>, "
     "build_id string"
 )
 
@@ -75,22 +82,6 @@ def arrow_schema(ddl: str) -> pa.Schema:
     :data:`MANIFEST_SCHEMA`."""
     fields = (f.strip().split(" ", 1) for f in ddl.split(","))
     return pa.schema([pa.field(n, _ARROW_TYPES[t]) for n, t in fields])
-
-
-def manifest_for(df: DataFrame) -> DataFrame:
-    """Per-bucket z bounds, MBR and row count of ``df`` aggregated by
-    Spark — :meth:`StoredIndex.validate`'s independent recompute of what
-    the footers committed."""
-    # Cast: a re-read bucket is a partition-dir column (int32).
-    return df.groupBy(F.col("bucket").cast("long").alias("bucket")).agg(
-        F.min("z").alias("zmin"),
-        F.max("z").alias("zmax"),
-        F.min("xmin").alias("xmin"),
-        F.min("ymin").alias("ymin"),
-        F.max("xmax").alias("xmax"),
-        F.max("ymax").alias("ymax"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 def observe_extent(df: DataFrame, axes):
@@ -256,21 +247,31 @@ def committed_buckets(spark: SparkSession, index_path: str) -> set[int]:
     return {r["bucket"] for r in rows or []}
 
 
+def _per_axis(row: dict) -> dict:
+    """A manifest row in the per-axis form; a 2-D scalar row (the form
+    written before the layout was dimension-generic) is mapped."""
+    if "lows" in row:
+        return row
+    return {
+        "bucket": row["bucket"], "zmin": row["zmin"], "zmax": row["zmax"],
+        "n_rows": row["n_rows"], "n_bytes": row.get("n_bytes"),
+        "lows": [row["xmin"], row["ymin"]],
+        "highs": [row["xmax"], row["ymax"]],
+        "max_ext": [row["max_ex"], row["max_ey"]],
+        "build_id": row["build_id"],
+    }
+
+
 class StoredLayout:
-    """Driver-side view of a stored index's directory layout, shared by
-    the 2-D and N-d index handles (which supply ``spark`` and ``path``).
+    """Driver-side view of a stored index's directory layout (the index
+    handle supplies ``spark``, ``path`` and ``box``, its per-axis box
+    columns).
 
     Opening the index for a query runs no Spark job: the manifest and
     the file map are read on the driver (:func:`read_rows`) and the data
     root is scanned with a schema inferred once per handle.  Committing a
     write runs none either (:meth:`footer_manifest`,
-    :meth:`append_manifest`).
-
-    A layout names its box columns per axis (``axes``), its max-extent
-    manifest columns (``extent_cols``, filled by :meth:`extent_row`) and
-    its bound columns (:meth:`bounds_row`)."""
-
-    manifest_schema = MANIFEST_SCHEMA
+    :meth:`append_manifest`)."""
 
     @property
     def fs(self):
@@ -319,9 +320,10 @@ class StoredLayout:
     ) -> list[dict]:
         """One manifest row per bucket of ``buckets`` that has data files
         under ``root``, from those files' footers: no Spark job, no data
-        page read.  ``ext[b]`` holds bucket ``b``'s max-extent columns
-        (an upper bound, see the module docstring)."""
-        cols = {"z", *(c for pair in self.axes for c in pair)}
+        page read.  ``ext[b]`` is bucket ``b``'s per-axis max extent (an
+        upper bound, see the module docstring)."""
+        dims = self.box.dims
+        cols = {"z", *(c for pair in dims for c in pair)}
         zones = bucket_zones(file_zones(self.fs, root, buckets, cols))
         return [
             {
@@ -330,8 +332,9 @@ class StoredLayout:
                 "zmax": z["max"].get("z"),
                 "n_rows": z["n_rows"],
                 "n_bytes": z["n_bytes"],
-                **self.bounds_row(z["min"], z["max"]),
-                **ext[b],
+                "lows": [z["min"].get(lo) for lo, _ in dims],
+                "highs": [z["max"].get(hi) for _, hi in dims],
+                "max_ext": ext[b],
                 "build_id": build_id,
             }
             for b, z in sorted(zones.items())
@@ -342,26 +345,23 @@ class StoredLayout:
         is the commit point."""
         write_table(
             self.fs, FS.join(self.manifest_path, part_name()), rows,
-            self.manifest_schema,
+            MANIFEST_SCHEMA,
         )
 
     def data(self) -> DataFrame:
         return self.spark.read.schema(self.data_schema()).parquet(self.data_path)
 
     def manifest_rows(self) -> list[dict]:
+        """The manifest's rows in the per-axis form, read on the driver —
+        the one manifest reader."""
         rows = read_rows(self.fs, self.manifest_path)
         if rows is None:
             raise FileNotFoundError(f"no manifest under {self.path}")
-        return rows
+        return [_per_axis(r) for r in rows]
 
     def manifest(self) -> DataFrame:
-        """The manifest as a DataFrame (read with its fixed schema, so no
-        inference job)."""
-        if not parquet_files(self.fs, self.manifest_path):
-            raise FileNotFoundError(f"no manifest under {self.path}")
-        return self.spark.read.schema(self.manifest_schema).parquet(
-            self.manifest_path
-        )
+        """The manifest as a DataFrame, framed from the driver's rows."""
+        return self.spark.createDataFrame(self.manifest_rows(), MANIFEST_SCHEMA)
 
     def file_map(self) -> DataFrame | None:
         """Per-FILE zone map (path, bucket, zmin, zmax, n_rows) — the

@@ -33,9 +33,10 @@ from libspatialindex_spark.operators.index_build import StoredIndex
 
 
 def index_statistics(idx: StoredIndex) -> dict:
-    """Structural stats of a stored index (Statistics.cc analog)."""
-    m = idx.manifest_totals().toPandas()
-    rows = m.n_rows.to_numpy(dtype=np.float64)
+    """Structural stats of a stored index (Statistics.cc analog), from
+    the manifest roll-up on the driver."""
+    m = idx.manifest_totals_rows()
+    rows = np.array([r["n_rows"] for r in m], dtype=np.float64)
     return {
         "tree_height": 2,  # driver manifest level + bucket leaves
         "n_index_entries": int(len(m)),  # "index nodes" = buckets
@@ -47,10 +48,7 @@ def index_statistics(idx: StoredIndex) -> dict:
             rows.max() / max(np.percentile(rows, 50), 1.0)
         ),
         "utilization": float(rows.mean() / rows.max()) if rows.max() else 1.0,
-        "world_bounds": (
-            float(m.xmin.min()), float(m.ymin.min()),
-            float(m.xmax.max()), float(m.ymax.max()),
-        ),
+        "world_bounds": idx.bounds(),  # per-axis lows, then highs
     }
 
 
@@ -94,29 +92,14 @@ def observed_query(rel, qxmin, qymin, qxmax, qymax, predicate="intersects"):
         out_obs, F.count(F.lit(1)).alias("rows_returned")
     )
 
-    boxes = getattr(rel, "bucket_boxes", None) or []
-    hit = [
-        t[0]
-        for t in boxes
-        if not (t[1] > qxmax or t[3] < qxmin or t[2] > qymax or t[4] < qymin)
-    ]
+    hit = rel.box_plan([qxmin, qymin], [qxmax, qymax])[0]
 
     def io() -> dict:
-        # files the pruned plan can touch AFTER partition pruning; stored
-        # relations derive it from the same driver-side selection the plan
-        # uses (inputFiles() on the filtered frame would list the whole
-        # relation — the partition filter is applied at execution, not in
-        # the relation's file listing)
-        fp = getattr(rel, "files_planned_for_box", None)
-        files_planned = (
-            fp(qxmin, qymin, qxmax, qymax)
-            if fp is not None
-            else len(pruned.inputFiles())
-        )
         return {
-            "buckets_total": len(boxes) or None,
-            "buckets_scanned": len(hit) if boxes else None,
-            "files_planned": files_planned,
+            "buckets_total": len(rel.bucket_boxes) or None,
+            "buckets_scanned": len(hit) if hit is not None else None,
+            # files the pruned plan can touch AFTER partition pruning
+            "files_planned": rel.files_planned_for_box(qxmin, qymin, qxmax, qymax),
             "rows_scanned": scan_obs.get["rows_scanned"],
             "rows_returned": out_obs.get["rows_returned"],
         }

@@ -1,12 +1,19 @@
-"""Pure-Python planner tests: quadtree Z cover properties."""
+"""Pure-Python planner tests: quadtree Z cover properties (the d=2 walk of
+``z_cover_nd``)."""
 
 import numpy as np
 
 from libspatialindex_spark.config import EngineConfig
 from libspatialindex_spark.functions.curves import np_z_key
-from libspatialindex_spark.plans.cover import z_cover
+from libspatialindex_spark.plans.cover import z_cover_nd
 
 CONF = EngineConfig(grid_bits=8)  # small grid → exhaustive checks feasible
+
+
+def z_cover(qxmin, qymin, qxmax, qymax, conf, **kw):
+    return z_cover_nd(
+        [qxmin, qymin], [qxmax, qymax], list(conf.axes), conf.grid_bits, **kw
+    )
 
 
 def _in_ranges(z, ranges):

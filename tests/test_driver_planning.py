@@ -94,11 +94,12 @@ def _check_state(spark, index: Index, live: pd.DataFrame) -> None:
     stored = index.stored
     rel = stored.relation(index.box)
     want_boxes = sorted(
-        (r.bucket, r.xmin, r.ymin, r.xmax, r.ymax, r.n_rows)
-        for r in stored.manifest_totals().collect()
+        (r.bucket, r.lows, r.highs) for r in stored.manifest_totals().collect()
     )
     assert sorted(rel.bucket_boxes) == want_boxes
-    ext = stored.manifest().agg(F.max("max_ex"), F.max("max_ey")).collect()[0]
+    ext = stored.manifest().agg(
+        F.max(F.col("max_ext")[0]), F.max(F.col("max_ext")[1])
+    ).collect()[0]
     assert rel.max_extent == (ext[0], ext[1])
     fm = stored.file_map()
     want_files = sorted(
@@ -193,7 +194,7 @@ def _true_extents(stored) -> pd.DataFrame:
     """Per-bucket max ``hi - lo`` per axis, from the data."""
     cols = [F.col("bucket").cast("long").alias("bucket")] + [
         (F.col(hi) - F.col(lo)).alias(f"e{i}")
-        for i, (lo, hi) in enumerate(stored.axes)
+        for i, (lo, hi) in enumerate(stored.box.dims)
     ]
     return stored.data().select(*cols).toPandas().groupby("bucket").max()
 
@@ -202,15 +203,13 @@ def _check_commit(stored, local_path: str, exact_extent: bool) -> None:
     """Footer-derived manifest and file map vs. the data they describe."""
     assert stored.validate()
     rows = stored.manifest_rows()
-    if "n_bytes" in stored.manifest_schema:  # the 2-D layout keeps it
-        got = {r["bucket"]: r["n_bytes"] for r in M.rollup(rows, sums=("n_bytes",))}
-        assert got == _dir_bytes(os.path.join(local_path, "data"))
+    got = {r["bucket"]: r["n_bytes"] for r in M.rollup(rows, sums=("n_bytes",))}
+    assert got == _dir_bytes(os.path.join(local_path, "data"))
     true = _true_extents(stored)
     totals = {r["bucket"]: r for r in stored.manifest_totals_rows()}
     assert set(totals) == set(true.index)
     for b, r in totals.items():
-        ext = [r[c] for c in stored.extent_cols]
-        ext = ext[0] if len(ext) == 1 else ext
+        ext = r["max_ext"]
         assert all(e >= t for e, t in zip(ext, true.loc[b])), (b, ext)
     if exact_extent:
         assert tuple(stored.relation().max_extent) == tuple(true.max())
@@ -276,7 +275,7 @@ def test_footer_manifest_parity_nd(spark, tmp_path):
     base = pd.DataFrame(cols)
     conf3 = nd.NDConfig(axes=((0.0, 1.0),) * 3, grid_bits=10, target_partitions=4)
     local = str(tmp_path / "i3")
-    index = IndexND(stored=nd.build_index_nd(
+    index = IndexND(stored=index_build.build_index(
         spark.createDataFrame(base), local, conf3, nd.NDBox(dims),
         max_records_per_file=150,
     ))

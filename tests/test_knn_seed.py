@@ -91,7 +91,7 @@ def sat_rels(spark, conf, tmp_path_factory):
         return index_build.build_index(df, str(base / name), conf)
 
     def stored_nd(name):
-        return nd.build_index_nd(df, str(base / name), nd.NDConfig())
+        return index_build.build_index(df, str(base / name), nd.NDConfig())
 
     return {
         ("2d", "plain"): (
