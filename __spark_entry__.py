@@ -247,7 +247,7 @@ def _rects3_rel(spark, sf_dir, mat: bool = False):
         # ring queries are few-job, the exchange costs more than it buys)
         df = df.localCheckpoint(eager=False)
     box = nd.NDBox((("xmin", "xmax"), ("ymin", "ymax"), ("wmin", "wmax")))
-    return nd.NDRelation(
+    return SpatialRelation(
         df, nd.NDConfig(axes=((0.0, 1.0),) * 3, grid_bits=10), box
     )
 
@@ -255,18 +255,14 @@ def _rects3_rel(spark, sf_dir, mat: bool = False):
 def q16_3d_range(spark, sf_dir):
     """3-D range intersection (dimension-generic Q1; RTree.cc:306-308
     accepts any dim, fork ships RTreeQuery3d)."""
-    from libspatialindex_spark.operators import nd
-
     rel = _rects3_rel(spark, sf_dir)
-    return nd.intersects_query_nd(rel, list(W3_LO), list(W3_HI)).select("id")
+    return range_query.intersects_query(rel, *W3_LO, *W3_HI).select("id")
 
 
 def q17_3d_knn(spark, sf_dir):
     """3-D tie-inclusive kNN (dimension-generic Q4)."""
-    from libspatialindex_spark.operators import nd
-
     rel = _rects3_rel(spark, sf_dir, mat=True)
-    return nd.knn_query_nd(rel, list(P3), K).select("id", "dist2")
+    return knn.knn_query(rel, *P3, K).select("id", "dist2")
 
 
 # Per-process memo of the stored 3-D index (build-once/query-many, like
@@ -314,11 +310,9 @@ def q56_3d_range_stored(spark, sf_dir):
     octree-prefix buckets + per-axis array manifest (driver MBR prune) +
     the learned per-file z zone map (ZMQuery3d analog) — results ≡ the
     derived-relation q16, so the same oracle holds."""
-    from libspatialindex_spark.operators import nd
-
     idx = _nd_index(spark, sf_dir)
     rel = idx.relation()
-    return nd.intersects_query_nd(rel, list(W3_LO), list(W3_HI)).select("id")
+    return range_query.intersects_query(rel, *W3_LO, *W3_HI).select("id")
 
 
 def q55_3d_knn_box(spark, sf_dir):
@@ -326,12 +320,8 @@ def q55_3d_knn_box(spark, sf_dir):
     any IShape at any dimension (RTree.cc:744-746 + 306-308); distance is
     the dimension-generic Region↔Region delta loop (Region.cc:312-338).
     Tie-inclusive like q17."""
-    from libspatialindex_spark.operators import nd
-
     rel = _rects3_rel(spark, sf_dir, mat=True)
-    return nd.knn_box_query_nd(rel, list(B3_LO), list(B3_HI), K).select(
-        "id", "dist2"
-    )
+    return knn.knn_box_query(rel, *B3_LO, *B3_HI, K).select("id", "dist2")
 
 
 TQ = (200.0, 260.0)  # Q9 time interval [t0, t1)

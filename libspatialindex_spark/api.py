@@ -39,7 +39,7 @@ from libspatialindex_spark.operators import (
     mutations,
     range_query,
 )
-from libspatialindex_spark.operators.relation import BoxCols
+from libspatialindex_spark.operators.nd import NDBox, NDConfig
 
 Window = tuple[float, float, float, float]
 
@@ -49,7 +49,7 @@ class Index:
     """A stored spatial index handle (the ``IndexH`` analog)."""
 
     stored: index_build.StoredIndex
-    box: BoxCols
+    box: NDBox
 
     # -- lifecycle -----------------------------------------------------------
 
@@ -59,12 +59,12 @@ class Index:
         df: DataFrame,
         path: str,
         conf: EngineConfig = DEFAULT,
-        box: BoxCols | None = None,
+        box: NDBox | None = None,
         **build_kwargs,
     ) -> "Index":
         """Bulk load (``Index_CreateWithStream``); see
         :func:`operators.index_build.build_index` for partitioner options."""
-        box = box or BoxCols()
+        box = box or NDBox()
         return cls(
             stored=index_build.build_index(df, path, conf, box=box, **build_kwargs),
             box=box,
@@ -76,12 +76,12 @@ class Index:
         spark: SparkSession,
         path: str,
         conf: EngineConfig = DEFAULT,
-        box: BoxCols | None = None,
+        box: NDBox | None = None,
     ) -> "Index":
         """Open a stored index; ``box`` defaults to its persisted box
         columns."""
         stored = index_build.load_index(spark, path, conf)
-        return cls(stored=stored, box=box or BoxCols.of(stored.box.dims))
+        return cls(stored=stored, box=box or stored.box)
 
     def _rel(self):
         return self.stored.relation(self.box)
@@ -179,56 +179,42 @@ class IndexND:
     honored beyond 2 (``Index_Create`` accepts any dimension > 1,
     ``src/rtree/RTree.cc:306-308``; the fork ships 3-D drivers for every
     index family).  Same method surface as :class:`Index`, with per-axis
-    lo/hi lists in place of 4-tuples."""
+    lo/hi lists in place of 4-tuples; both run the same query bodies."""
 
     stored: index_build.StoredIndex
 
     @classmethod
     def create(cls, df: DataFrame, path: str, axes, dims, **kw) -> "IndexND":
-        from libspatialindex_spark.operators import nd
-
-        conf = nd.NDConfig(axes=tuple(tuple(a) for a in axes))
-        box = nd.NDBox(dims=tuple(tuple(d) for d in dims))
+        conf = NDConfig(axes=tuple(tuple(a) for a in axes))
+        box = NDBox(dims=tuple(tuple(d) for d in dims))
         return cls(stored=index_build.build_index(df, path, conf, box, **kw))
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IndexND":
-        from libspatialindex_spark.operators import nd
-
-        return cls(stored=index_build.load_index(spark, path, nd.NDConfig()))
+        return cls(stored=index_build.load_index(spark, path, NDConfig()))
 
     def _rel(self):
         return self.stored.relation()
 
     def intersects(self, qlo, qhi, offset: int = 0, limit: int | None = None,
                    order_by: str = "id") -> DataFrame:
-        from libspatialindex_spark.operators import nd
-
-        out = nd.intersects_query_nd(self._rel(), list(qlo), list(qhi))
+        out = range_query.intersects_query(self._rel(), *qlo, *qhi)
         return Index._page(out, order_by, offset, limit)
 
     def contains(self, qlo, qhi) -> DataFrame:
-        from libspatialindex_spark.operators import nd
-
-        return nd.contains_what_query_nd(self._rel(), list(qlo), list(qhi))
+        return range_query.contains_what_query(self._rel(), *qlo, *qhi)
 
     def nearest(self, pt, k: int) -> DataFrame:
-        from libspatialindex_spark.operators import nd
-
-        return nd.knn_query_nd(self._rel(), list(pt), k)
+        return knn.knn_query(self._rel(), *pt, k)
 
     def nearest_box(self, qlo, qhi, k: int) -> DataFrame:
         """kNN against a d-dim Region query shape (RTree.cc:744-746 at
         any dimension)."""
-        from libspatialindex_spark.operators import nd
-
-        return nd.knn_box_query_nd(self._rel(), list(qlo), list(qhi), k)
+        return knn.knn_box_query(self._rel(), *qlo, *qhi, k)
 
     def intersects_count(self, qlo, qhi) -> int:
-        from libspatialindex_spark.operators import nd
-
-        return nd.count_intersects_nd(
-            self._rel(), list(qlo), list(qhi)
+        return range_query.count_intersects(
+            self._rel(), *qlo, *qhi
         ).collect()[0]["n"]
 
     def bounds(self) -> tuple:

@@ -281,8 +281,10 @@ def min_dist2_segment_box(
 #
 # The reference's Region kernel is dimension-generic (per-dim loops over
 # m_pLow/m_pHigh — Region.cc:264-276, 278-290, 374-386, 407-429); these are
-# the same predicates parameterized by dimension lists.  The 2-D functions
-# above remain the codegen-friendly specialization.
+# the same predicates parameterized by dimension lists, and every query
+# that exists at any dimension (range family, kNN, self-join) uses them.
+# At d=2 they execute the same plans as the 2-D functions above, which
+# serve the 2-D-only shapes (ball, segment, touches, temporal, moving).
 
 
 def _reduce_and(preds: list[Column]) -> Column:

@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from libspatialindex_spark.functions import geometry as G
+from libspatialindex_spark.operators import nd
 from libspatialindex_spark.operators.relation import SpatialRelation
-from libspatialindex_spark.operators.spatial_join import _cells_of_box
 
 
 def batch_intersects(
@@ -36,33 +36,22 @@ def batch_intersects(
     the query boxes are grown by max_extent before cell assignment, so an
     entry's single cell is enough (no data-side explode of fat boxes; the
     exact predicate removes false positives)."""
-    conf = rel.conf
+    axes = rel.conf.axes
     n = 1 << join_bits
     ex, ey = rel.max_extent or (0.0, 0.0)
 
-    qcells = _cells_of_box(
-        queries.select(
-            F.col("qid"),
-            (F.col("qxmin") - F.lit(ex)).alias("cxmin"),
-            (F.col("qymin") - F.lit(ey)).alias("cymin"),
-            F.col("qxmax").alias("cxmax"),
-            F.col("qymax").alias("cymax"),
-            "qxmin", "qymin", "qxmax", "qymax",
-        ),
-        type("B", (), {"xmin": "cxmin", "ymin": "cymin",
-                       "xmax": "cxmax", "ymax": "cymax"})(),
-        n,
-        conf.world,
-    ).select("qid", "qxmin", "qymin", "qxmax", "qymax", "cell")
+    q = queries.select("qid", "qxmin", "qymin", "qxmax", "qymax")
+    qcells = nd.cells(
+        q,
+        [F.col("qxmin") - F.lit(ex), F.col("qymin") - F.lit(ey)],
+        [F.col("qxmax"), F.col("qymax")],
+        axes, n,
+    )
     if broadcast_queries:
         qcells = F.broadcast(qcells)
 
     b = rel.box
-    from libspatialindex_spark.operators.spatial_join import _cell_of_point
-
-    ents = rel.df.withColumn(
-        "cell", _cell_of_point(F.col(b.xmin), F.col(b.ymin), n, conf.world)
-    )
+    ents = rel.df.withColumn("cell", nd.cell_of(b.lows(), axes, n))
     hit = G.intersects(
         F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
         F.col("qxmin"), F.col("qymin"), F.col("qxmax"), F.col("qymax"),

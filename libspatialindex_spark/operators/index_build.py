@@ -36,7 +36,7 @@ Morton interleave of box centers (``curves.z_key_nd``), and
 box columns (``dims``), ``grid_bits``, ``target_partitions`` and the
 partition spec.  The 2-D index is this layout at d=2.
 
-Query-time pruning is partitioner-agnostic (``relation.BoxPruning``): the
+Query-time pruning is partitioner-agnostic (``SpatialRelation.box_plan``): the
 manifest stores each bucket's exact per-axis data MBR, so the driver
 intersects the query window with bucket MBRs (the "root node" visit) and
 compiles a ``bucket IN`` partition filter; a ``z BETWEEN`` cover
@@ -61,8 +61,8 @@ from pyspark.sql import functions as F
 
 from libspatialindex_spark.config import EngineConfig
 from libspatialindex_spark.functions import curves
-from libspatialindex_spark.operators.nd import NDBox, NDConfig, NDRelation
-from libspatialindex_spark.operators.relation import BoxCols, SpatialRelation
+from libspatialindex_spark.operators.nd import NDBox, NDConfig
+from libspatialindex_spark.operators.relation import SpatialRelation
 from libspatialindex_spark.plans import fs as FS
 from libspatialindex_spark.plans import manifest as M
 
@@ -236,11 +236,10 @@ class StoredIndex(M.StoredLayout):
     at any dimension.
 
     ``conf`` carries the layout (``axes``, ``grid_bits``,
-    ``target_partitions``) and picks the query side: an
+    ``target_partitions``): an
     :class:`~libspatialindex_spark.config.EngineConfig` (whose ``world``
-    is the two axes) opens the 2-D :class:`StoredRelation`, an
-    :class:`~libspatialindex_spark.operators.nd.NDConfig` the N-d
-    :class:`~libspatialindex_spark.operators.nd.NDRelation`.  ``box`` names
+    is the two axes) or an
+    :class:`~libspatialindex_spark.operators.nd.NDConfig`.  ``box`` names
     the per-axis box columns."""
 
     spark: SparkSession
@@ -287,11 +286,11 @@ class StoredIndex(M.StoredLayout):
 
     def keyed(self, df: DataFrame, box=None) -> DataFrame:
         """Attach z + bucket columns per this index's partitioner — the
-        build's and every mutation's router.  ``box`` (an NDBox or a 2-D
-        BoxCols) defaults to the index's.  The Column expressions are built
+        build's and every mutation's router.  ``box`` defaults to the
+        index's.  The Column expressions are built
         once per handle and box: building the Morton expression through
         py4j costs about as much driver time as analysing it."""
-        box = NDBox.of(box) or self.box
+        box = box or self.box
         cols = self._keys.get(box)
         if cols is None:
             centers = box.centers()
@@ -334,19 +333,20 @@ class StoredIndex(M.StoredLayout):
             max(r["highs"][a] for r in rows) for a in range(d)
         )
 
-    def relation(self, box=None) -> "StoredRelation | NDRelation":
+    def relation(self, box=None) -> SpatialRelation:
         """Queryable relation with driver-side manifest-MBR pruning plus
-        pushed z-range row-group pruning (``relation.BoxPruning``):
-        a :class:`StoredRelation` under an ``EngineConfig``, else an
-        ``NDRelation``.  Opening it runs no Spark job: manifest and file
-        map are read on the driver and the data scan is planned with the
-        memoized schema."""
+        pushed z-range row-group pruning (``SpatialRelation.box_plan``).
+        Opening it runs no Spark job: manifest and file map are read on
+        the driver and every scan (the whole root or a file subset) is
+        planned with the memoized data schema.  ``box`` defaults to the
+        index's."""
         rows = self.manifest_totals_rows()
         fm = M.read_rows(self.fs, self.filemap_path) or []
         ext = [max(e) for e in zip(*(r["max_ext"] for r in rows))]
-        kw = dict(
+        return SpatialRelation(
             df=self.data(),
             conf=self.conf,
+            box=box or self.box,
             z_col="z",
             max_extent=tuple(ext or [0.0] * self.box.d),
             bucket_boxes=[(r["bucket"], r["lows"], r["highs"]) for r in rows],
@@ -356,11 +356,6 @@ class StoredIndex(M.StoredLayout):
             ],
             data_path=self.data_path,
         )
-        if isinstance(self.conf, EngineConfig):
-            if not isinstance(box, BoxCols):
-                box = BoxCols.of((NDBox.of(box) or self.box).dims)
-            return StoredRelation(box=box, **kw)
-        return NDRelation(box=NDBox.of(box) or self.box, **kw)
 
     def validate(self) -> bool:
         """``isIndexValid()`` analog (``SpatialIndex.h:209``): recompute
@@ -384,23 +379,6 @@ class StoredIndex(M.StoredLayout):
         return got == want
 
 
-@dataclass
-class StoredRelation(SpatialRelation):
-    """The 2-D :class:`SpatialRelation` over a stored index, built by
-    :meth:`StoredIndex.relation` with no Spark job.  The fields below come
-    from the manifest and file map read on the driver, and every scan (the
-    whole root or a file subset) is planned with the index's memoized data
-    schema; pruning is the shared :class:`relation.BoxPruning`.
-
-    kNN runs the same ring core as on any relation (``knn._ring_knn``);
-    this pruning plans each ring's window.
-    """
-
-    bucket_boxes: list = field(default_factory=list)  # (bucket, lows, highs)
-    file_boxes: list = field(default_factory=list)
-    data_path: str | None = None
-
-
 def build_index(
     df: DataFrame,
     path: str,
@@ -417,8 +395,8 @@ def build_index(
     """Bulk-load ``df`` into a stored index at ``path``: d-way Morton key on
     box centers → range shuffle → partitioned, z-sorted buckets → manifest
     rows from the written files' footers.  ``conf`` gives the layout (see
-    :class:`StoredIndex`); ``box`` (an NDBox, or a 2-D BoxCols) the
-    per-axis box columns, default ``xmin..ymax``.
+    :class:`StoredIndex`); ``box`` the per-axis box columns, default
+    ``xmin..ymax``.
 
     ``partitioner``: ``zprefix`` (default), ``cutlist`` (with ``cuts``),
     ``quantile``, or ``kd`` (``kd_levels`` deep, cuts steered by
@@ -430,7 +408,7 @@ def build_index(
     records a per-file zone map + learned rank models (B6 refinement —
     see :func:`refresh_file_map`)."""
     spark = df.sparkSession
-    box = NDBox.of(box) or NDBox()
+    box = box or NDBox()
     if box.d != len(conf.axes):
         raise ValueError(f"box dims {box.d} != conf dims {len(conf.axes)}")
     data_path = FS.join(path, "data")
@@ -568,9 +546,9 @@ def load_index(
     ``boundaries.json`` — the analog of the reference's header page
     (``RTree.cc:1505-1551 loadHeader``): the stored z column was computed
     under the build-time grid, so trusting a caller-supplied conf would
-    silently mis-prune.  ``conf`` supplies the rest and picks the query
-    side (:class:`StoredIndex`): an ``NDConfig``, or any index of d ≠ 2,
-    opens the N-d relation; otherwise ``conf`` (default ``EngineConfig()``)
+    silently mis-prune.  ``conf`` supplies the rest: under an
+    ``NDConfig``, or for any index of d ≠ 2, the layout is an
+    ``NDConfig``; otherwise it is ``conf`` (default ``EngineConfig()``)
     with its world and grid replaced.  Raises when the spec file is absent
     (corrupt / not an index)."""
     fs = FS.get_fs(spark, path)

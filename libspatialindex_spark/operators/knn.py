@@ -8,8 +8,8 @@ k-th distance is returned**, so the result can exceed k rows
 exceeds the current k-th bound).
 
 Distributed shape (no global priority queue): every single-query kNN —
-2-D point, box, segment and custom comparator, and the N-d point and box
-in ``nd.py`` — runs the one ring core :func:`_ring_knn`:
+point and box at any dimension, and the 2-D segment and custom
+comparator — runs the one ring core :func:`_ring_knn`:
 
 1. **Ring probe** (driver loop): grow a window around the query until ≥ k
    entries lie within distance r (the analog of descending the tree until
@@ -20,20 +20,18 @@ in ``nd.py`` — runs the one ring core :func:`_ring_knn`:
    which would drop ties.
 
 The batch :func:`knn_join` certifies per query the same way, through one
-window resolve (:func:`_resolve_per_query`) shared with ``nd.knn_join_nd``.
+window resolve (:func:`_resolve_per_query`), at any dimension.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from libspatialindex_spark.functions import geometry as G
+from libspatialindex_spark.operators import nd
 from libspatialindex_spark.operators.relation import SpatialRelation
 
 RING_INIT = 1.0 / 64.0  # first ring's half-width, in world units
@@ -85,33 +83,27 @@ def _ring_knn(candidates, k: int, dist_col: str, radii) -> DataFrame:
 
 
 def knn_box_query(
-    rel: SpatialRelation,
-    qxmin: float,
-    qymin: float,
-    qxmax: float,
-    qymax: float,
-    k: int,
+    rel: SpatialRelation, *w: float, k: int | None = None,
     dist_col: str = "dist2",
 ) -> DataFrame:
-    """kNN with a REGION query shape (VERDICT r3 missing #1).
+    """kNN with a REGION query shape at any dimension:
+    ``knn_box_query(rel, *lows, *highs, k)``.
 
     The reference's ``nearestNeighborQuery`` takes any ``IShape``
-    (``src/rtree/RTree.cc:744-746``) with distance
-    ``query.getMinimumDistance(entry MBR)`` — Region↔Region closed-form
-    per-dim deltas at ``src/spatialindex/Region.cc:314-338`` — and the C
-    API's ``Index_NearestNeighbors_obj`` passes a min/max box
+    (``src/rtree/RTree.cc:744-746``, any dimension per ``:306-308``) with
+    distance ``query.getMinimumDistance(entry MBR)`` — the Region↔Region
+    per-dim delta loop at ``src/spatialindex/Region.cc:312-338`` — and the
+    C API's ``Index_NearestNeighbors_obj`` passes a min/max box
     (``test/gtest/sidx_api_test.h:87``).  A point query is the degenerate
     box, so :func:`knn_query` delegates here.
 
     Ring r grows the box's window by r on every side: everything outside
     the expanded window is farther than r (see :func:`_ring_knn`).
     """
-    wxmin, wymin, wxmax, wymax = rel.conf.world
-    b = rel.box
-    d2 = G.min_dist2_box(
-        F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
-        qxmin, qymin, qxmax, qymax,
-    )
+    if k is None:
+        *w, k = w
+    qlo, qhi = rel.window(w)
+    d2 = G.min_dist2_box_nd(rel.box.lows(), rel.box.highs(), qlo, qhi)
 
     def candidates(r):
         if r is None:
@@ -119,30 +111,30 @@ def knn_box_query(
         # the exact cap stays below the persist: caching the uncapped
         # window measured slower, and would cache a whole plain relation
         return rel.pruned_for_box(
-            qxmin - r, qymin - r, qxmax + r, qymax + r
+            *[q - r for q in qlo], *[q + r for q in qhi]
         ).withColumn(dist_col, d2).filter(F.col(dist_col) <= r * r)
 
     return _ring_knn(
         candidates, k, dist_col,
-        _ring_radii(max(wxmax - wxmin, wymax - wymin)),
+        _ring_radii(max(hi - lo for lo, hi in rel.conf.axes)),
     )
 
 
 def knn_query(
-    rel: SpatialRelation,
-    px: float,
-    py: float,
-    k: int,
+    rel: SpatialRelation, *pt: float, k: int | None = None,
     dist_col: str = "dist2",
 ) -> DataFrame:
-    """All entries with point↔MBR distance ≤ the k-th smallest (ties kept).
+    """All entries with point↔box distance ≤ the k-th smallest (ties
+    kept): ``knn_query(rel, *point, k)``.
 
     Returns the input columns plus ``dist_col`` (squared distance — sqrt is
     monotone, so ordering/ties are identical to the reference's Euclidean).
-    Degenerate-box delegation: ``min_dist2_box`` with a point-box equals
-    ``min_dist2_point`` term for term, so results are unchanged.
+    Degenerate-box delegation: the box↔box distance with a point-box equals
+    the point↔box distance term for term, so results are unchanged.
     """
-    return knn_box_query(rel, px, py, px, py, k, dist_col=dist_col)
+    if k is None:
+        *pt, k = pt
+    return knn_box_query(rel, *pt, *pt, k, dist_col=dist_col)
 
 
 def knn_segment_query(
@@ -163,7 +155,6 @@ def knn_segment_query(
     the exact metric, as it did for Ball).  Ring expansion grows the
     segment's MBR: anything outside the MBR expanded by r is farther than
     r from the MBR, hence farther from the segment — certified."""
-    wxmin, wymin, wxmax, wymax = rel.conf.world
     sxmin, sxmax = min(x1, x2), max(x1, x2)
     symin, symax = min(y1, y2), max(y1, y2)
     b = rel.box
@@ -193,7 +184,7 @@ def knn_segment_query(
 
     return _ring_knn(
         candidates, k, dist_col,
-        _ring_radii(max(wxmax - wxmin, wymax - wymin)),
+        _ring_radii(max(hi - lo for lo, hi in rel.conf.axes)),
     )
 
 
@@ -218,208 +209,12 @@ def knn_query_custom(
     )
 
 
-_KNN_HIST_N = 64  # per-axis cells of the seed histogram (≤ 4096 rows)
-
-
-def _center_cell_histogram(rel: SpatialRelation):
-    """Center-cell histogram rows for the kNN-join seed (one groupBy job,
-    ≤ ``_KNN_HIST_N``² rows to the driver).  Shared by :func:`knn_join`,
-    which also derives the total row count from it — the separate
-    ``rel.df.count()`` full-scan job the r5 shape paid is gone (guide
-    §1.2: fewer passes)."""
-    conf = rel.conf
-    b = rel.box
-    wxmin, wymin, wxmax, wymax = conf.world
-    nh = _KNN_HIST_N
-    sx = (wxmax - wxmin) / nh
-    sy = (wymax - wymin) / nh
-    ccx = (F.col(b.xmin) + F.col(b.xmax)) / 2
-    ccy = (F.col(b.ymin) + F.col(b.ymax)) / 2
-    hx = F.least(
-        F.lit(nh - 1),
-        F.greatest(F.lit(0), F.floor((ccx - F.lit(wxmin)) / F.lit(sx))),
-    ).cast("long")
-    hy = F.least(
-        F.lit(nh - 1),
-        F.greatest(F.lit(0), F.floor((ccy - F.lit(wymin)) / F.lit(sy))),
-    ).cast("long")
-    return rel.df.groupBy(hx.alias("hx"), hy.alias("hy")).count().collect()
-
-
-def _seed_radius_fn(hist, conf, k: int):
-    """Certified-radius kernel over the collected center-cell histogram:
-    ``f(X, Y) → radii`` such that accumulating cells by min query↔cell
-    distance until ≥ k entries and taking the max far-corner distance
-    bounds each query's k-th neighbor (for in-world centers; see
-    :func:`_knn_join_seed_round` for the clamped-edge caveat).  Shared by
-    the distributed pandas-UDF seed and the driver-tier seed of
-    :func:`knn_join`.  None when the histogram cannot certify (empty, or
-    total rows < k)."""
-    if not hist:
-        return None
-    wxmin, wymin, wxmax, wymax = conf.world
-    nh = _KNN_HIST_N
-    sx = (wxmax - wxmin) / nh
-    sy = (wymax - wymin) / nh
-    hxa = np.array([r["hx"] for r in hist], dtype=np.int64)
-    hya = np.array([r["hy"] for r in hist], dtype=np.int64)
-    cnt = np.array([r["count"] for r in hist], dtype=np.int64)
-    if int(cnt.sum()) < k:
-        return None  # k ≥ N: the doubling loop's min(k, N) fallback applies
-    cx0 = wxmin + hxa * sx
-    cx1 = cx0 + sx
-    cy0 = wymin + hya * sy
-    cy1 = cy0 + sy
-
-    def radii(X, Y):
-        out = np.empty(len(X))
-        for i in range(len(X)):
-            px, py = X[i], Y[i]
-            dx = np.maximum(np.maximum(cx0 - px, px - cx1), 0.0)
-            dy = np.maximum(np.maximum(cy0 - py, py - cy1), 0.0)
-            near2 = dx * dx + dy * dy
-            fx = np.maximum(np.abs(px - cx0), np.abs(px - cx1))
-            fy = np.maximum(np.abs(py - cy0), np.abs(py - cy1))
-            far2 = fx * fx + fy * fy
-            order = np.argsort(near2, kind="stable")
-            csum = np.cumsum(cnt[order])
-            idx = int(np.searchsorted(csum, k))
-            out[i] = float(np.sqrt(far2[order[: idx + 1]].max()))
-        return out
-
-    return radii
-
-
-def _knn_join_seed_round(
-    rel: SpatialRelation,
-    pending: DataFrame,
-    k: int,
-    d2,
-    dist_col: str,
-    world_r: float,
-    qid_col: str,
-    _cells_of_box,
-    _cell_of_point,
-    hist=None,
-):
-    """Histogram-seeded single-pass round for :func:`knn_join`.
-
-    A center-cell histogram (one groupBy, ≤ 64×64 rows to the driver)
-    gives every query a seed radius: order cells by min query↔cell
-    distance, accumulate counts to ≥ k, take the max far-corner distance
-    over the used cells.  For entries whose centers lie INSIDE the world
-    the bound is certified (box dist ≤ center dist ≤ cell far corner);
-    centers outside the world are CLAMPED into edge cells
-    (F.least/F.greatest below), for which the far-corner bound does NOT
-    hold — the radius is a heuristic there, and the downstream
-    ``_cnt >= k`` filter in :func:`_resolve_per_query` is the actual
-    certification (queries whose seed window under-collects fall through
-    to the doubling rounds).  Do not rely on the seed alone in refactors
-    (ADVICE r4).  Radii are computed per query in an Arrow-batched pandas
-    UDF over the broadcast histogram, so the operator stays distributed
-    at any query count.
-    Returns (result_rows, resolved_qids) — both localCheckpointed — or
-    None when seeding cannot certify (empty relation, k ≥ N)."""
-    from pyspark.sql.functions import pandas_udf
-
-    conf = rel.conf
-    b = rel.box
-    if hist is None:
-        hist = _center_cell_histogram(rel)
-    radii_fn = _seed_radius_fn(hist, conf, k)
-    if radii_fn is None:
-        return None
-
-    @pandas_udf("double")
-    def seed_r(qx: pd.Series, qy: pd.Series) -> pd.Series:
-        return pd.Series(
-            radii_fn(qx.to_numpy(dtype=float), qy.to_numpy(dtype=float))
-        )
-
-    seeded = pending.withColumn(
-        "_r", seed_r(F.col("_qx"), F.col("_qy"))
-    ).persist()
-    med = seeded.agg(F.percentile_approx("_r", 0.5).alias("m")).collect()[0]["m"]
-    if med is None:
-        seeded.unpersist()
-        return None
-    rows = _knn_join_seed_core(
-        rel, seeded, float(med), k, d2, dist_col, world_r, qid_col,
-        _cells_of_box, _cell_of_point,
-    )
-    # a certified query (_cnt >= k >= 1) emits >= 1 row, so the resolved
-    # qid set is derivable from the MATERIALIZED rows — no second window
-    # pass over the candidate cache (one whole job saved per round)
-    qids = rows.select(F.col(qid_col).alias("_qid")).distinct()
-    seeded.unpersist()
-    return rows, qids
-
-
-def _knn_join_candidates(
-    rel, qr, n, d2, dist_col, _cells_of_box, _cell_of_point
-):
-    """Candidate (query, entry) pairs within each query's radius.  ``qr``
-    carries (_qid, _qx, _qy, _r) — per-query radii (the seed round) or a
-    constant column (the doubling rounds).
-
-    With a known max entry extent, this is the ``batch_query`` shape (r6,
-    guide §2.3): entries key by their LOWER-LEFT-corner cell only — no
-    data-side explode — and each query's cover expands by (r + extent),
-    which provably contains the LL corner of every box within distance r
-    (xmin ≥ qx − r − width per axis).  Each (query, entry) pair then
-    matches in exactly ONE cell, so the nearest-point-cell dedup filter
-    disappears too.  Measured 2.5 s → 1.1 s warm on the q19 seed round at
-    sf0.1, identical rows.  Without extent metadata the r5 both-side
-    explode + corner-dedup shape runs unchanged."""
-    conf = rel.conf
-    b = rel.box
-    from libspatialindex_spark.operators.relation import BoxCols
-
-    ext = max(rel.max_extent) if rel.max_extent else None
-    if ext is not None and ext >= 0.0:
-        qbox = (
-            qr.withColumn("cxmin", F.col("_qx") - F.col("_r") - F.lit(ext))
-            .withColumn("cymin", F.col("_qy") - F.col("_r") - F.lit(ext))
-            .withColumn("cxmax", F.col("_qx") + F.col("_r"))
-            .withColumn("cymax", F.col("_qy") + F.col("_r"))
-        )
-        qcells = _cells_of_box(
-            qbox, BoxCols("cxmin", "cymin", "cxmax", "cymax"), n, conf.world
-        ).drop("cxmin", "cymin", "cxmax", "cymax")
-        ents = rel.df.withColumn(
-            "cell", _cell_of_point(F.col(b.xmin), F.col(b.ymin), n, conf.world)
-        )
-        return (
-            ents.join(qcells, on="cell")
-            .withColumn(dist_col, d2)
-            .filter(F.col(dist_col) <= F.col("_r") * F.col("_r"))
-        )
-    ecells = _cells_of_box(rel.df, b, n, conf.world)
-    qbox = (
-        qr.withColumn("qxmin", F.col("_qx") - F.col("_r"))
-        .withColumn("qymin", F.col("_qy") - F.col("_r"))
-        .withColumn("qxmax", F.col("_qx") + F.col("_r"))
-        .withColumn("qymax", F.col("_qy") + F.col("_r"))
-    )
-    qcells = _cells_of_box(
-        qbox, BoxCols("qxmin", "qymin", "qxmax", "qymax"), n, conf.world
-    ).drop("qxmin", "qymin", "qxmax", "qymax")
-    nx = F.greatest(F.col(b.xmin), F.least(F.col("_qx"), F.col(b.xmax)))
-    ny = F.greatest(F.col(b.ymin), F.least(F.col("_qy"), F.col(b.ymax)))
-    return (
-        qcells.join(ecells, on="cell")
-        .withColumn(dist_col, d2)
-        .filter(F.col(dist_col) <= F.col("_r") * F.col("_r"))
-        .filter(_cell_of_point(nx, ny, n, conf.world) == F.col("cell"))
-    )
-
-
 def _resolve_per_query(
     cand: DataFrame, k: int, dist_col: str, qid_col: str, certify: bool = True
 ) -> DataFrame:
-    """The one per-query resolve of the kNN joins (2-D and N-d): rank each
-    query's (``_qid``, ``id``, ``dist_col``) candidates in a window, take
-    the k-th distance, and emit the tie-inclusive rows of every query that
+    """The one per-query resolve of the kNN join: rank each query's
+    (``_qid``, ``id``, ``dist_col``) candidates in a window, take the k-th
+    distance, and emit the tie-inclusive rows of every query that
     certified ≥ k candidates (all queries when ``certify`` is False — the
     no-cap fallback, min(k, N) rows).  Returns the rows as (``qid_col``,
     id, ``dist_col``), MATERIALIZED via localCheckpoint; a certified query
@@ -437,169 +232,66 @@ def _resolve_per_query(
     ).localCheckpoint()
 
 
-def _knn_join_seed_core(
-    rel, seeded, med, k, d2, dist_col, world_r, qid_col,
-    _cells_of_box, _cell_of_point,
-):
-    """Shared body of the seeded round: cell-join candidates within each
-    query's seed radius, then the per-query resolve.  ``seeded`` carries
-    (_qid, _qx, _qy, _r); returns the localCheckpointed result rows."""
-    bits = max(1, min(8, int(math.floor(math.log2(world_r / max(med, 1e-9))))))
-    n = 1 << bits
-    # no persist on the candidate stream (r6): it feeds exactly ONE action
-    # (the resolve's localCheckpoint) — caching it only added a full extra
-    # materialization pass of the widest intermediate (guide §5: persist
-    # pays only when an intermediate is reused)
-    cand = _knn_join_candidates(
-        rel, seeded, n, d2, dist_col, _cells_of_box, _cell_of_point
-    )
-    return _resolve_per_query(cand, k, dist_col, qid_col)
-
-
 def knn_join(
     rel: SpatialRelation,
     queries: DataFrame,
     k: int,
     qid_col: str = "qid",
-    qx_col: str = "qx",
-    qy_col: str = "qy",
+    q_cols: tuple[str, ...] | list[str] = ("qx", "qy"),
     dist_col: str = "dist2",
-    driver_seed_cap: int = 65_536,
 ) -> DataFrame:
-    """Batch kNN (kNN JOIN): for EVERY query point, all entries within the
-    k-th smallest point↔MBR distance (ties kept) — the reference's actual
-    test workload shape (``test/rtree/test1/run``: 1000 queries × 10NN,
-    one ``nearestNeighborQuery`` each) as ONE distributed job.
+    """Batch kNN (kNN JOIN) at any dimension: for EVERY query point (the
+    ``q_cols`` columns, one per axis), all entries within the k-th
+    smallest point↔box distance (ties kept) — the reference's actual test
+    workload shape (``test/rtree/test1/run``: 1000 queries × 10NN, one
+    ``nearestNeighborQuery`` each) as ONE distributed job.
 
-    Shape: iterative radius doubling over the *unresolved* query subset.
-    Each round joins pending queries to entries through a grid-cell
-    equi-join sized to the current radius (cells ≈ radius → ≤ ~9 cells per
-    query), keeps candidates within the radius, and resolves every query
-    that certified ≥ k candidates (any non-candidate is farther than the
-    radius ≥ its k-th distance, so the candidate set provably contains the
-    true top-k).  The starting radius is seeded from global density
-    (√(k/N) · world — uniform-case one-pass; skewed queries just take
-    another doubling).  Queries still pending past the world radius get
-    the no-cap fallback (min(k, N) rows, like the single-point kNN).
+    Shape: iterative radius doubling over the *unresolved* query subset
+    (the grid-cell, radius-certified shape of "Distributed Stream KNN
+    Join", SIGMOD'21).  The first radius comes from the global density,
+    1.5 · world · (k/N)^(1/d) — the row count N is the join's one sizing
+    job.  Each round joins pending queries to entries through a d-cube
+    cell equi-join sized to the radius (both sides explode to the cells
+    their box meets), keeps candidates within the radius, and resolves
+    every query that certified ≥ k candidates (any non-candidate is
+    farther than the radius ≥ its k-th distance, so the candidate set
+    provably contains the true top-k).  A (query, entry) pair is emitted
+    only from the cell holding the entry box's nearest point to the
+    query — exactly one cell, so no dropDuplicates.
 
-    The loop is unbounded but provably terminates: the radius doubles each
-    round, so after ceil(log2(world_r / r0)) rounds the ``r >= world_r``
-    terminal branch resolves every remaining query (min(k, N) semantics) —
-    no query can be silently dropped regardless of world size or how small
-    the density-seeded r0 is.
-
-    **Two-tier seed** (r6 — the connected-components driver/distributed
-    split applied here): seed radii are pure metadata work (histogram ×
-    query coords).  Up to ``driver_seed_cap`` queries they are computed
-    DRIVER-side from one ``limit(cap+1).collect()`` — no Python-worker
-    stage, no percentile job, and when the seed round resolves everything
-    (the common case) zero anti-join/pending-probe jobs follow.  Above
-    the cap the r5 distributed shape runs unchanged: radii in an
-    Arrow-batched pandas UDF over the broadcast histogram, pending
-    tracked by anti-joins — fully distributed at any query count.
+    The loop is unbounded but terminates: the radius doubles each round,
+    and the ``r >= world_r`` terminal branch resolves every remaining
+    query with min(k, N) semantics, like the single-point kNN — no query
+    is silently dropped, whatever the world size.
 
     Output: (qid, id, dist2), tie-inclusive per query.
     """
-    from libspatialindex_spark.operators.spatial_join import (
-        _cell_of_point,
-        _cells_of_box,
-    )
+    d = rel.box.d
+    axes = rel.conf.axes
+    if len(q_cols) != d:
+        raise ValueError(f"{len(q_cols)} query columns for a {d}-d relation")
+    world_r = max(hi - lo for lo, hi in axes)
+    n_rows = rel.df.count()
+    r = max(RING_INIT, 1.5 * world_r * (k / max(n_rows, 1)) ** (1.0 / d))
 
-    conf = rel.conf
-    b = rel.box
-    wxmin, wymin, wxmax, wymax = conf.world
-    world_r = max(wxmax - wxmin, wymax - wymin)
-    # One pass does double duty: the seed histogram's count sum IS the
-    # relation row count — the separate full-scan count() job is gone.
-    hist = _center_cell_histogram(rel)
-    n_rows = sum(row["count"] for row in hist)
-    r = max(
-        RING_INIT,
-        1.5 * world_r * math.sqrt(k / max(n_rows, 1)),
-    )
-
-    d2 = G.min_dist2_point(
-        F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
-        F.col("_qx"), F.col("_qy"),
-    )
+    pending = queries.select(
+        F.col(qid_col).alias("_qid"),
+        *[F.col(c).alias(f"_q{i}") for i, c in enumerate(q_cols)],
+    ).persist()
+    qpt = [F.col(f"_q{i}") for i in range(d)]
+    d2 = G.min_dist2_point_nd(rel.box.lows(), rel.box.highs(), qpt)
+    # nearest point of the entry box to the query, per axis
+    near = [
+        F.greatest(lo, F.least(q, hi))
+        for q, lo, hi in zip(qpt, rel.box.lows(), rel.box.highs())
+    ]
     out: DataFrame | None = None
-    spark = queries.sparkSession
-    pschema = T.StructType([
-        T.StructField("_qid", queries.schema[qid_col].dataType, True),
-        T.StructField("_qx", T.DoubleType(), True),
-        T.StructField("_qy", T.DoubleType(), True),
-    ])
-
-    # ---- histogram-seeded round 0 (single-pass for nearly every query) --
-    # One cheap center-cell histogram (≤ 4096 rows to the driver) prices a
-    # CERTIFIED per-query radius (RTree.cc:748-762 root descent off header
-    # metadata): accumulate cells by min query↔cell distance until ≥ k
-    # entries, radius = max
-    # far-corner distance over the used cells (an entry's box distance ≤
-    # its center distance ≤ the cell's far corner).  The doubling loop
-    # below remains as the completeness fallback (k > N, float edges).
-    radii_fn = _seed_radius_fn(hist, conf, k)
-    head: list = []
-    if driver_seed_cap and radii_fn is not None:
-        head = queries.select(qid_col, qx_col, qy_col).limit(
-            driver_seed_cap + 1
-        ).collect()
-    if head and len(head) <= driver_seed_cap:
-        # -- driver tier: radii + pending bookkeeping on collected coords
-        X = np.array([row[1] for row in head], dtype=float)
-        Y = np.array([row[2] for row in head], dtype=float)
-        rr = radii_fn(X, Y)
-        med = float(np.median(rr))
-        # NB: StructType.add mutates in place — build a fresh schema
-        sschema = T.StructType(
-            list(pschema.fields) + [T.StructField("_r", T.DoubleType(), True)]
-        )
-        seeded_df = spark.createDataFrame(
-            [
-                (row[0], float(X[i]), float(Y[i]), float(rr[i]))
-                for i, row in enumerate(head)
-            ],
-            sschema,
-        )
-        out = _knn_join_seed_core(
-            rel, seeded_df, med, k, d2, dist_col, world_r, qid_col,
-            _cells_of_box, _cell_of_point,
-        )
-        resolved = {
-            row[0] for row in out.select(qid_col).distinct().collect()
-        }
-        remaining = [row for row in head if row[0] not in resolved]
-        if not remaining:
-            return out
-        pending = spark.createDataFrame(
-            [(row[0], float(row[1]), float(row[2])) for row in remaining],
-            pschema,
-        ).persist()
-    else:
-        # -- distributed tier (query count above the cap, or no seed)
-        pending = queries.select(
-            F.col(qid_col).alias("_qid"),
-            F.col(qx_col).alias("_qx"),
-            F.col(qy_col).alias("_qy"),
-        ).persist()
-        seeded = _knn_join_seed_round(
-            rel, pending, k, d2, dist_col, world_r, qid_col,
-            _cells_of_box, _cell_of_point, hist=hist,
-        )
-        if seeded is not None:
-            rows0, done0 = seeded  # both materialized (localCheckpoint)
-            out = rows0
-            new_pending = pending.join(
-                done0, on="_qid", how="left_anti"
-            ).persist()
-            pending.unpersist()
-            pending = new_pending
 
     while True:
         if pending.limit(1).count() == 0:
             break
         if r >= world_r:
-            # fallback: no distance cap — min(k, N) semantics
+            # no distance cap: min(k, N) semantics
             cand = pending.crossJoin(rel.df).withColumn(dist_col, d2)
             rows = _resolve_per_query(
                 cand, k, dist_col, qid_col, certify=False
@@ -607,19 +299,23 @@ def knn_join(
             out = rows if out is None else out.unionByName(rows)
             break
         # cell size ≈ radius: each query covers a handful of cells
-        bits = max(1, min(8, int(math.floor(math.log2(world_r / r)))))
-        n = 1 << bits
-        # single-action candidate stream — no persist (see seed core);
-        # candidate generation shape (single-cell entries when the extent
-        # is known, both-side explode otherwise) is _knn_join_candidates
-        cand = _knn_join_candidates(
-            rel,
-            pending.withColumn("_r", F.lit(float(r))),
-            n, d2, dist_col, _cells_of_box, _cell_of_point,
+        n = 1 << max(1, min(6, int(math.floor(math.log2(world_r / r)))))
+        ecells = nd.cells(rel.df, rel.box.lows(), rel.box.highs(), axes, n)
+        qcells = nd.cells(
+            pending, [q - F.lit(r) for q in qpt], [q + F.lit(r) for q in qpt],
+            axes, n,
+        )
+        # no persist on the candidate stream: it feeds exactly ONE action
+        # (the resolve's localCheckpoint)
+        cand = (
+            qcells.join(ecells, on="cell")
+            .withColumn(dist_col, d2)
+            .filter(F.col(dist_col) <= F.lit(r * r))
+            .filter(nd.cell_of(near, axes, n) == F.col("cell"))
         )
         rows = _resolve_per_query(cand, k, dist_col, qid_col)
         # rows is already materialized; out stays a shallow union of
-        # checkpointed slices (≤ ~8 rounds deep)
+        # checkpointed slices
         out = rows if out is None else out.unionByName(rows)
         done_qids = rows.select(F.col(qid_col).alias("_qid")).distinct()
         new_pending = pending.join(done_qids, on="_qid", how="left_anti").persist()

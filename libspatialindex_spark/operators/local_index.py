@@ -13,7 +13,7 @@ all numpy, no per-row Python.
 This pays off when MANY queries hit each partition: the node level costs
 O(rows/capacity) per query instead of O(rows), amortizing exactly like the
 reference's in-tree pruning.  For single queries the JVM zone-map path
-(`StoredRelation.pruned_for_box`) is preferred; this operator is the batch
+(`SpatialRelation.pruned_for_box`) is preferred; this operator is the batch
 workhorse.
 """
 

@@ -45,7 +45,6 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libspatialindex_spark.operators.nd import NDBox
 from libspatialindex_spark.plans import fs as FS
 from libspatialindex_spark.plans import manifest as M
 
@@ -99,7 +98,7 @@ def insert_batch(
     idempotent: bool = False,
 ):
     """M1 — append a batch of entries; only touched buckets change.
-    ``box`` (an NDBox or a 2-D BoxCols) defaults to the index's.
+    ``box`` defaults to the index's.
 
     With ``idempotent=True`` a ``build_id`` already present in the manifest
     is a no-op (exactly-once under streaming epoch replay)."""
@@ -114,7 +113,7 @@ def insert_batch(
     staging = FS.join(idx.path, f"_staging_insert_{tag}")
     fs.delete(staging)
 
-    box = NDBox.of(box) or idx.box
+    box = box or idx.box
     keyed, extent = M.observe_extent(idx.keyed(rows, box), box.dims)
     (
         keyed.repartitionByRange(idx.conf.target_partitions, "z")
@@ -278,7 +277,7 @@ def delete_rows(
     route directly; otherwise victim buckets are discovered by semi-join).
     """
     fs = idx.fs
-    box = NDBox.of(box) or idx.box
+    box = box or idx.box
     recover(idx)  # finish any interrupted earlier swap first
 
     if set(victims.columns) >= {c for pair in box.dims for c in pair}:

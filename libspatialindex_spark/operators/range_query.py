@@ -13,6 +13,10 @@ Mirrors the reference query surface (SURVEY.md §2.1, §2.5):
 * offset/limit — A2, ``sidx_api.h:281-285`` (deterministic here: ordered by
   id, whereas the reference uses traversal order)
 
+Every query takes its window flat — per-axis lows, then highs — and the
+range family runs at any dimension; ball, segment, touches and
+internal-node queries are 2-D shapes.
+
 Execution shape: driver computes the Z cover (plans/cover.py) → pruned scan
 (`z BETWEEN` hits partition + row-group zone maps) → codegen'd exact
 closed-interval predicate.  No shuffle; a range query is a single
@@ -28,72 +32,47 @@ from libspatialindex_spark.functions import geometry as G
 from libspatialindex_spark.operators.relation import SpatialRelation
 
 
-def _pruned(rel: SpatialRelation, qxmin, qymin, qxmax, qymax) -> DataFrame:
-    # Polymorphic: StoredRelation prunes via manifest bucket-MBRs + z zone
-    # maps; plain relations via a Z cover when a materialized z column +
-    # extent bound exist; else full scan.
-    return rel.pruned_for_box(qxmin, qymin, qxmax, qymax)
-
-
-def intersects_query(
-    rel: SpatialRelation, qxmin: float, qymin: float, qxmax: float, qymax: float
-) -> DataFrame:
-    """Q1 — every entry whose MBR intersects the closed query window."""
-    b = rel.box
-    return _pruned(rel, qxmin, qymin, qxmax, qymax).filter(
-        G.intersects(
-            F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
-            qxmin, qymin, qxmax, qymax,
-        )
+def intersects_query(rel: SpatialRelation, *w: float) -> DataFrame:
+    """Q1 — every entry whose box intersects the closed window ``w``."""
+    qlo, qhi = rel.window(w)
+    return rel.pruned_for_box(*w).filter(
+        G.intersects_nd(rel.box.lows(), rel.box.highs(), qlo, qhi)
     )
 
 
-def contains_what_query(
-    rel: SpatialRelation, qxmin: float, qymin: float, qxmax: float, qymax: float
-) -> DataFrame:
-    """Q2 — entries fully inside the query window (query contains data)."""
-    b = rel.box
-    return _pruned(rel, qxmin, qymin, qxmax, qymax).filter(
-        G.contains(
-            F.lit(qxmin), F.lit(qymin), F.lit(qxmax), F.lit(qymax),
-            F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
-        )
+def contains_what_query(rel: SpatialRelation, *w: float) -> DataFrame:
+    """Q2 — entries fully inside the window (query contains data)."""
+    qlo, qhi = rel.window(w)
+    return rel.pruned_for_box(*w).filter(
+        G.contains_nd(qlo, qhi, rel.box.lows(), rel.box.highs())
     )
 
 
-def point_location_query(rel: SpatialRelation, px: float, py: float) -> DataFrame:
-    """Q3 — entries whose MBR contains the point (degenerate-window Q1)."""
-    b = rel.box
-    return _pruned(rel, px, py, px, py).filter(
-        G.contains_point(
-            F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax), px, py
-        )
+def point_location_query(rel: SpatialRelation, *pt: float) -> DataFrame:
+    """Q3 — entries whose box contains the point (degenerate-window Q1)."""
+    return rel.pruned_for_box(*pt, *pt).filter(
+        G.contains_point_nd(rel.box.lows(), rel.box.highs(), pt)
     )
 
 
 def bounds(rel: SpatialRelation) -> DataFrame:
-    """A5 — dataset MBR (the root-node MBR of the reference tree)."""
-    b = rel.box
+    """A5 — dataset MBR (the root-node MBR of the reference tree): one row,
+    per-axis lows then highs, named after the box columns."""
+    dims = rel.box.dims
     return rel.df.agg(
-        F.min(b.xmin).alias("xmin"),
-        F.min(b.ymin).alias("ymin"),
-        F.max(b.xmax).alias("xmax"),
-        F.max(b.ymax).alias("ymax"),
+        *[F.min(lo).alias(lo) for lo, _ in dims],
+        *[F.max(hi).alias(hi) for _, hi in dims],
     )
 
 
-def count_intersects(rel, qxmin, qymin, qxmax, qymax) -> DataFrame:
+def count_intersects(rel: SpatialRelation, *w: float) -> DataFrame:
     """A1 — ``Index_Intersects_count``; returns a 1-row DataFrame."""
-    return intersects_query(rel, qxmin, qymin, qxmax, qymax).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    return intersects_query(rel, *w).agg(F.count(F.lit(1)).alias("n"))
 
 
-def count_contains(rel, qxmin, qymin, qxmax, qymax) -> DataFrame:
+def count_contains(rel: SpatialRelation, *w: float) -> DataFrame:
     """A1 — ``Index_Contains_count``."""
-    return contains_what_query(rel, qxmin, qymin, qxmax, qymax).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    return contains_what_query(rel, *w).agg(F.count(F.lit(1)).alias("n"))
 
 
 def ball_query(
@@ -102,7 +81,7 @@ def ball_query(
     """Circular range query: entries whose MBR is within distance r of the
     center (Ball shape support, ``src/spatialindex/Ball.cc``)."""
     b = rel.box
-    return _pruned(rel, cx - r, cy - r, cx + r, cy + r).filter(
+    return rel.pruned_for_box(cx - r, cy - r, cx + r, cy + r).filter(
         G.ball_intersects_box(
             cx, cy, r, F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax)
         )
@@ -133,7 +112,7 @@ def segment_query(
     b = rel.box
     qxmin, qxmax = min(x1, x2), max(x1, x2)
     qymin, qymax = min(y1, y2), max(y1, y2)
-    return _pruned(rel, qxmin, qymin, qxmax, qymax).filter(
+    return rel.pruned_for_box(qxmin, qymin, qxmax, qymax).filter(
         G.segment_intersects_box(
             x1, y1, x2, y2,
             F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),

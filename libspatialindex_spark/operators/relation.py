@@ -12,9 +12,8 @@ present:
   a ``z BETWEEN`` disjunction that hits parquet row-group stats;
 * stored index     → additionally file/bucket pruning via the manifest.
 
-:class:`BoxPruning` is that planner, shared by the 2-D relation and the
-N-d one (``operators/nd.py``): it works on per-axis (lo, hi) lists at any
-dimension.
+It is one class at every dimension: its planner works on per-axis
+(lo, hi) lists, and a 2-D relation is the d=2 case.
 """
 
 from __future__ import annotations
@@ -26,24 +25,15 @@ from pyspark.sql import functions as F
 
 from libspatialindex_spark.config import DEFAULT, EngineConfig
 from libspatialindex_spark.functions import curves
+from libspatialindex_spark.operators.nd import NDBox, NDConfig
 from libspatialindex_spark.plans.cover import z_cover_nd
 
 
-@dataclass
-class BoxCols:
-    xmin: str = "xmin"
-    ymin: str = "ymin"
-    xmax: str = "xmax"
-    ymax: str = "ymax"
-
-    def cols(self, df: DataFrame) -> tuple[Column, Column, Column, Column]:
-        return (df[self.xmin], df[self.ymin], df[self.xmax], df[self.ymax])
-
-    @staticmethod
-    def of(dims) -> "BoxCols":
-        """The 2-D box of per-axis ``(lo, hi)`` column pairs."""
-        (xmin, xmax), (ymin, ymax) = dims
-        return BoxCols(xmin, ymin, xmax, ymax)
+def BoxCols(
+    xmin: str = "xmin", ymin: str = "ymin", xmax: str = "xmax", ymax: str = "ymax"
+) -> NDBox:
+    """The 2-D box over four named columns."""
+    return NDBox(((xmin, xmax), (ymin, ymax)))
 
 
 def z_predicate(z_col: str, ranges: list[tuple[int, int]]) -> Column:
@@ -59,27 +49,58 @@ def z_predicate(z_col: str, ranges: list[tuple[int, int]]) -> Column:
     return pred
 
 
-class BoxPruning:
-    """Driver-side pruning of a query window given as per-axis ``qlo`` /
-    ``qhi`` lists — one planner for every relation and dimension.
+@dataclass
+class SpatialRelation:
+    """A queryable spatial relation at any dimension (entries are boxes +
+    payload columns).
 
-    Uses the relation's ``df``, ``conf`` (``axes``, ``grid_bits``),
-    ``z_col`` and ``max_extent``.  A stored relation also sets
-    ``bucket_boxes`` ((bucket, lows, highs) per manifest bucket),
-    ``file_boxes`` ((path, bucket, zmin, zmax, n_rows) per data file —
-    z-disjoint within a bucket because the build sorts by z before
+    ``box`` names the per-axis box columns (default ``xmin..ymax``) and
+    ``conf`` carries the world (``axes``) and ``grid_bits``; a query
+    window is passed flat, per-axis lows then highs — at d=2 exactly
+    ``(xmin, ymin, xmax, ymax)``.  ``max_extent`` is the max entry extent
+    per axis: it compensates center-indexing in the Z cover
+    (``plans/cover.z_cover_nd`` ``expand``); None → unknown → no z prune.
+    A stored index (``index_build.StoredIndex.relation``, no Spark job)
+    also sets ``bucket_boxes`` ((bucket, lows, highs) per manifest
+    bucket), ``file_boxes`` ((path, bucket, zmin, zmax, n_rows) per data
+    file — z-disjoint within a bucket because the build sorts by z before
     splitting files) and ``data_path``.
 
-    Three levels, each optional: manifest-MBR intersection (→ ``bucket
-    IN`` partition filter, partitioner-agnostic); the Z cover of the
-    window expanded by the max entry extent (→ ``z BETWEEN`` row-group
-    filter); and, with a file map, a re-planned scan over only the files
-    whose [zmin, zmax] zone meets the cover (the ZM learned index's
-    in-node skip, ``LearnedIndex.cc:1494-1507``)."""
+    Pruning a window has three levels, each optional: manifest-MBR
+    intersection (→ ``bucket IN`` partition filter,
+    partitioner-agnostic); the Z cover of the window expanded by the max
+    entry extent (→ ``z BETWEEN`` row-group filter); and, with a file map,
+    a re-planned scan over only the files whose [zmin, zmax] zone meets
+    the cover (the ZM learned index's in-node skip,
+    ``LearnedIndex.cc:1494-1507``)."""
 
-    bucket_boxes: list = ()
-    file_boxes: list = ()
+    df: DataFrame
+    conf: EngineConfig | NDConfig = field(default_factory=lambda: DEFAULT)
+    box: NDBox = field(default_factory=NDBox)
+    z_col: str | None = None
+    max_extent: tuple[float, ...] | None = None
+    bucket_boxes: list = field(default_factory=list)
+    file_boxes: list = field(default_factory=list)
     data_path: str | None = None
+
+    def window(self, w) -> tuple[list, list]:
+        """A flat window (d lows, then d highs) as (lows, highs) lists."""
+        d = self.box.d
+        if len(w) != 2 * d:
+            raise ValueError(
+                f"a {d}-d window is {2 * d} numbers (lows, then highs), "
+                f"got {len(w)}"
+            )
+        return list(w[:d]), list(w[d:])
+
+    def with_z(self) -> "SpatialRelation":
+        """Attach the Morton key of the box center (codegen, no UDF)."""
+        if self.z_col:
+            return self
+        z = curves.z_key_nd(
+            self.box.centers(), list(self.conf.axes), self.conf.grid_bits
+        )
+        return replace(self, df=self.df.withColumn("z", z), z_col="z")
 
     def box_plan(self, qlo, qhi) -> tuple:
         """(hit buckets or None = no bucket metadata, z predicate or None
@@ -118,8 +139,10 @@ class BoxPruning:
                 files = cand
         return hit, pred, files
 
-    def _pruned(self, qlo, qhi) -> DataFrame:
-        hit, pred, files = self.box_plan(qlo, qhi)
+    def pruned_for_box(self, *w) -> DataFrame:
+        """The relation pruned for the flat window ``w``: a full scan
+        without a materialized z column and an extent bound."""
+        hit, pred, files = self.box_plan(*self.window(w))
         df = self.df
         if hit is not None:
             if not hit:
@@ -136,14 +159,14 @@ class BoxPruning:
             )
         return df if pred is None else df.filter(pred)
 
-    def _files_planned(self, qlo, qhi) -> int:
+    def files_planned_for_box(self, *w) -> int:
         """Files the pruned plan can touch AFTER partition pruning.
         ``pruned.inputFiles()`` ignores the ``bucket IN`` partition filter
         (it lists the whole relation — ADVICE r3), so this derives the
-        count from the same selection :meth:`_pruned` executes: the
+        count from the same selection :meth:`pruned_for_box` executes: the
         file-map subset when that re-plan fires, else the listing
         restricted to surviving bucket directories."""
-        hit, _pred, files = self.box_plan(qlo, qhi)
+        hit, _pred, files = self.box_plan(*self.window(w))
         if hit is not None and not hit:
             return 0
         if files is not None:
@@ -153,38 +176,3 @@ class BoxPruning:
             tags = tuple(f"/bucket={b}/" for b in hit)
             return sum(1 for p in all_files if any(t in p for t in tags))
         return len(all_files)
-
-
-@dataclass
-class SpatialRelation(BoxPruning):
-    """A queryable spatial relation (entries are MBRs + payload columns)."""
-
-    df: DataFrame
-    conf: EngineConfig = field(default_factory=lambda: DEFAULT)
-    box: BoxCols = field(default_factory=BoxCols)
-    z_col: str | None = None
-    # Max entry extent per axis; compensates center-indexing in the Z cover
-    # (see plans/cover.z_cover_nd ``expand``).  None → unknown → pruning
-    # skipped.
-    max_extent: tuple[float, float] | None = None
-
-    def with_z(self) -> "SpatialRelation":
-        """Attach the Morton key of the MBR center (codegen, no UDF)."""
-        if self.z_col:
-            return self
-        cx = (F.col(self.box.xmin) + F.col(self.box.xmax)) / 2
-        cy = (F.col(self.box.ymin) + F.col(self.box.ymax)) / 2
-        df = self.df.withColumn("z", curves.z_key(cx, cy, self.conf))
-        return replace(self, df=df, z_col="z")
-
-    def pruned_for_box(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float
-    ) -> DataFrame:
-        """Prune the relation for a query window (:class:`BoxPruning`):
-        full scan without a materialized z column and an extent bound."""
-        return self._pruned([qxmin, qymin], [qxmax, qymax])
-
-    def files_planned_for_box(
-        self, qxmin: float, qymin: float, qxmax: float, qymax: float
-    ) -> int:
-        return self._files_planned([qxmin, qymin], [qxmax, qymax])

@@ -12,8 +12,9 @@ cell-keyed equi-join — each MBR explodes to the grid cells it overlaps
 exact closed-interval predicate re-checks each candidate pair.  A pair
 whose boxes overlap several shared cells would be emitted once per cell;
 the **reference-corner trick** dedups without a shuffle: emit the pair only
-from the cell containing the intersection's lower-left corner (which lies
-in exactly one cell).
+from the cell containing the intersection's lower corner (which lies in
+exactly one cell).  The self-join runs at any dimension, on the one cell
+grid (``nd.cells`` / ``nd.cell_of``) the point-in-polygon join also uses.
 
 Point-in-polygon join: polygons are a (typically small) dimension layer →
 broadcast; the fact side never shuffles.  For large polygon layers, a
@@ -27,65 +28,34 @@ extra stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from libspatialindex_spark.functions import geometry as G
+from libspatialindex_spark.operators import nd
 from libspatialindex_spark.operators.relation import SpatialRelation
-
-
-def _cells_of_box(
-    df: DataFrame, box, n: int, world, prefix: str = ""
-) -> DataFrame:
-    """Explode a box relation to one row per overlapped grid cell."""
-    wxmin, wymin, wxmax, wymax = world
-    sx, sy = (wxmax - wxmin) / n, (wymax - wymin) / n
-
-    def idx(c: Column, lo: float, s: float) -> Column:
-        i = F.floor((c - F.lit(lo)) / F.lit(s))
-        return F.least(F.greatest(i, F.lit(0)), F.lit(n - 1)).cast("long")
-
-    out = (
-        df.withColumn("_ix0", idx(F.col(box.xmin), wxmin, sx))
-        .withColumn("_ix1", idx(F.col(box.xmax), wxmin, sx))
-        .withColumn("_iy0", idx(F.col(box.ymin), wymin, sy))
-        .withColumn("_iy1", idx(F.col(box.ymax), wymin, sy))
-        .withColumn("_ix", F.explode(F.sequence(F.col("_ix0"), F.col("_ix1"))))
-        .withColumn("_iy", F.explode(F.sequence(F.col("_iy0"), F.col("_iy1"))))
-        .withColumn(prefix + "cell", F.col("_ix") * F.lit(n) + F.col("_iy"))
-        .drop("_ix0", "_ix1", "_iy0", "_iy1", "_ix", "_iy")
-    )
-    return out
-
-
-def _cell_of_point(px: Column, py: Column, n: int, world) -> Column:
-    wxmin, wymin, wxmax, wymax = world
-    sx, sy = (wxmax - wxmin) / n, (wymax - wymin) / n
-
-    def idx(c: Column, lo: float, s: float) -> Column:
-        i = F.floor((c - F.lit(lo)) / F.lit(s))
-        return F.least(F.greatest(i, F.lit(0)), F.lit(n - 1)).cast("long")
-
-    return idx(px, wxmin, sx) * F.lit(n) + idx(py, wymin, sy)
 
 
 def self_join_query(
     rel: SpatialRelation,
-    qxmin: float,
-    qymin: float,
-    qxmax: float,
-    qymax: float,
+    *w: float,
     id_col: str = "id",
     join_bits: int | None = None,
     broadcast_rows_max: int = 100_000,
 ) -> DataFrame:
     """Q5 — pairs (id1, id2), both orders, id1 ≠ id2, both boxes
-    intersecting the window and each other (closed intervals).
+    intersecting the flat window ``w`` and each other (closed intervals),
+    at any dimension.
 
-    ``join_bits`` (cell resolution of the equi-join key) defaults
-    adaptively: cells ≈ max-extent/4 balance explode fan-out (coarse cells)
-    against per-cell candidate quadratics (fine cells) — measured 9× swing
-    on the benchmark fixture.
+    ``join_bits`` (per-axis cell resolution of the equi-join key) defaults
+    adaptively: cells ≈ max-extent / 2^⌊4/d⌋ per axis (extent/4 at d=2,
+    extent/2 at d=3), so a box explodes to a few dozen cells at most,
+    balancing explode fan-out (fine cells) against per-cell candidate
+    quadratics (coarse cells) — measured 9× swing on the 2-D benchmark
+    fixture.  Without an extent bound the grid has 2^⌊16/d⌋ cells per
+    axis.
 
     Join strategy is DATA-ADAPTIVE (guide §3.1): the window-filtered base
     is materialized anyway (it feeds both sides), so its exact count is
@@ -96,58 +66,41 @@ def self_join_query(
     shuffle join ran its per-cell quadratic on that many tasks — measured
     2.0 s → 0.9 s at sf0.1).  Larger bases keep the cell-keyed shuffle
     join, which scales to any window."""
-    import math
-
-    conf = rel.conf
+    qlo, qhi = rel.window(w)
+    d, axes, b = rel.box.d, rel.conf.axes, rel.box
     if join_bits is None:
-        if rel.max_extent and max(rel.max_extent) > 0:
+        ext = max(rel.max_extent) if rel.max_extent else 0.0
+        if ext > 0:
+            world_r = max(hi - lo for lo, hi in axes)
             join_bits = int(
-                min(10, max(4, round(math.log2(1.0 / max(rel.max_extent))) + 2))
+                min(10, max(4, round(math.log2(world_r / ext)) + 4 // d))
             )
         else:
-            join_bits = 8
+            join_bits = 16 // d
     n = 1 << join_bits
-    b = rel.box
 
     # Window restriction first (both sides must intersect the window) —
     # this is the reference's `m_query` narrowing (RTree.cc:1812-1817).
-    # Eager localCheckpoint (r6): the window-filtered base feeds BOTH join
+    # Eager localCheckpoint: the window-filtered base feeds BOTH join
     # sides AND the strategy count, and it is tiny next to the pair output
-    # (window-selective rows vs their per-cell quadratic).  The previous
-    # shape persisted base and eagerly checkpointed the PAIRS so base
-    # could be unpersisted before returning — paying a full extra
-    # materialization of the widest relation in the operator (guide §5).
-    # Checkpointing the small base instead lets the pair result stay lazy
-    # (computed exactly once, by the caller's action); the base blocks
-    # live only as long as the returned DataFrame — no session leak.
-    base = rel.pruned_for_box(qxmin, qymin, qxmax, qymax).filter(
-        G.intersects(
-            F.col(b.xmin), F.col(b.ymin), F.col(b.xmax), F.col(b.ymax),
-            qxmin, qymin, qxmax, qymax,
-        )
-    ).select(id_col, b.xmin, b.ymin, b.xmax, b.ymax).localCheckpoint()
-    n_base = base.count()  # cached rows; sizes the strategy
-    return _self_join_pairs(
-        base, b, n, conf, id_col,
-        broadcast=(n_base <= broadcast_rows_max),
-    )
+    # (window-selective rows vs their per-cell quadratic), so the pair
+    # result stays lazy (computed exactly once, by the caller's action).
+    # The checkpoint blocks live only as long as the returned DataFrame
+    # and never enter the session's cache — no leak across calls.
+    base = rel.pruned_for_box(*w).filter(
+        G.intersects_nd(b.lows(), b.highs(), qlo, qhi)
+    ).select(id_col, *[c for p in b.dims for c in p]).localCheckpoint()
+    cells = nd.cells(base, b.lows(), b.highs(), axes, n)
 
+    def side(tag: str):
+        sel = [F.col(id_col).alias(f"id{tag}")]
+        for a, (lo_c, hi_c) in enumerate(b.dims):
+            sel.append(F.col(lo_c).alias(f"_{tag}lo{a}"))
+            sel.append(F.col(hi_c).alias(f"_{tag}hi{a}"))
+        return cells.select(*sel, "cell")
 
-def _self_join_pairs(base, b, n, conf, id_col, broadcast=False):
-    cells = _cells_of_box(base, b, n, conf.world)
-    left = cells.select(
-        F.col(id_col).alias("id1"),
-        F.col(b.xmin).alias("_axmin"), F.col(b.ymin).alias("_aymin"),
-        F.col(b.xmax).alias("_axmax"), F.col(b.ymax).alias("_aymax"),
-        F.col("cell"),
-    )
-    right = cells.select(
-        F.col(id_col).alias("id2"),
-        F.col(b.xmin).alias("_bxmin"), F.col(b.ymin).alias("_bymin"),
-        F.col(b.xmax).alias("_bxmax"), F.col(b.ymax).alias("_bymax"),
-        F.col("cell"),
-    )
-    if broadcast:
+    left, right = side("1"), side("2")
+    if base.count() <= broadcast_rows_max:  # cached rows
         # Small base: broadcast one side, spread the probe side evenly —
         # no cell shuffle, and the per-cell quadratic of a concentrated
         # window distributes over every core instead of the few tasks
@@ -157,20 +110,20 @@ def _self_join_pairs(base, b, n, conf, id_col, broadcast=False):
             left = left.repartition(dp)
         right = F.broadcast(right)
 
-    pair_ok = G.intersects(
-        F.col("_axmin"), F.col("_aymin"), F.col("_axmax"), F.col("_aymax"),
-        F.col("_bxmin"), F.col("_bymin"), F.col("_bxmax"), F.col("_bymax"),
-    ) & (F.col("id1") != F.col("id2"))
+    def cols(tag: str, end: str) -> list:
+        return [F.col(f"_{tag}{end}{a}") for a in range(d)]
 
+    pair_ok = G.intersects_nd(
+        cols("1", "lo"), cols("1", "hi"), cols("2", "lo"), cols("2", "hi")
+    ) & (F.col("id1") != F.col("id2"))
     joined = left.join(right, on="cell", how="inner").filter(pair_ok)
 
-    # Reference-corner dedup: the intersection's lower-left corner lies in
+    # Reference-corner dedup: the intersection's lower corner lies in
     # exactly one cell — emit the pair only there (no dropDuplicates shuffle).
-    rx = F.greatest(F.col("_axmin"), F.col("_bxmin"))
-    ry = F.greatest(F.col("_aymin"), F.col("_bymin"))
-    in_cell = _cell_of_point(rx, ry, n, conf.world) == F.col("cell")
-
-    return joined.filter(in_cell).select("id1", "id2")
+    corner = [F.greatest(u, v) for u, v in zip(cols("1", "lo"), cols("2", "lo"))]
+    return joined.filter(nd.cell_of(corner, axes, n) == F.col("cell")).select(
+        "id1", "id2"
+    )
 
 
 def point_in_box_join(
@@ -227,9 +180,9 @@ def point_in_box_join(
     deliberately).
     """
     n = 1 << join_bits
-    bcells = _cells_of_box(boxes, box, n, conf.world)
+    bcells = nd.cells(boxes, box.lows(), box.highs(), conf.axes, n)
     pts = points.withColumn(
-        "cell", _cell_of_point(F.col(px), F.col(py), n, conf.world)
+        "cell", nd.cell_of([F.col(px), F.col(py)], conf.axes, n)
     )
     inside = G.contains_point(
         F.col(box.xmin), F.col(box.ymin), F.col(box.xmax), F.col(box.ymax),

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from libspatialindex_spark.functions import geometry as G
 from libspatialindex_spark.operators import temporal
+from libspatialindex_spark.operators.nd import NDBox
 from libspatialindex_spark.operators.relation import BoxCols
 from libspatialindex_spark.plans import fs as FS
 
@@ -69,7 +70,7 @@ class StoredVersionIndex:
     # queries/mutations must use the BUILD-time names, not defaults
     cols: dict | None = None
 
-    def colspec(self) -> tuple[str, str, BoxCols]:
+    def colspec(self) -> tuple[str, str, NDBox]:
         c = self.cols or {}
         b = c.get("box") or ["xmin", "ymin", "xmax", "ymax"]
         return (
@@ -125,7 +126,7 @@ def build_version_index(
     n_tbuckets: int = 16,
     tstart: str = "tstart",
     tend: str = "tend",
-    box: BoxCols | None = None,
+    box: NDBox | None = None,
     equal_frequency: bool = True,
 ) -> StoredVersionIndex:
     """Partition validity-interval entries by a ``tstart`` bucket.

@@ -24,7 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from libspatialindex_spark.operators.index_build import StoredIndex
 from libspatialindex_spark.operators.mutations import insert_batch
-from libspatialindex_spark.operators.relation import BoxCols
+from libspatialindex_spark.operators.nd import NDBox
 
 
 def stream_into_index(
@@ -33,7 +33,7 @@ def stream_into_index(
     idx: StoredIndex,
     schema: str,
     checkpoint_dir: str,
-    box: BoxCols | None = None,
+    box: NDBox | None = None,
     trigger_once: bool = False,
     compact_every: int | None = None,
     compact_max_files: int = 8,

@@ -43,14 +43,15 @@ def test_knn_cache_released(stored, spark):
     """The kNN candidate persist must be released per call: over 3 calls
     the persistent-RDD count may grow only by the (tiny) localCheckpoint
     blocks (≤ 1 each), never by the full candidate caches too (2 each) —
-    for the point, segment and N-d point shapes alike."""
+    for the point and segment shapes on the stored index, and the point
+    shape on a plain relation under an N-d config."""
     idx, df = stored
     rel = idx.relation()
-    reln = nd.NDRelation(df, nd.NDConfig(), nd.NDBox())
+    reln = SpatialRelation(df, nd.NDConfig())
     calls = [
         lambda: knn.knn_query(rel, *P, K),
         lambda: knn.knn_segment_query(rel, *SEG, K),
-        lambda: nd.knn_query_nd(reln, list(P), K),
+        lambda: knn.knn_query(reln, *P, K),
     ]
     for call in calls:
         before = spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -70,7 +71,7 @@ SAT_SHAPES = {
     "custom": lambda rel, k: knn.knn_query_custom(
         rel, F.abs(F.col("xmin") - P[0]), k
     ),
-    "nd_point": lambda rel, k: nd.knn_query_nd(rel, list(P), k),
+    "nd_point": lambda rel, k: knn.knn_query(rel, *P, k),
 }
 
 
@@ -102,8 +103,8 @@ def sat_rels(spark, conf, tmp_path_factory):
             stored2("s2").relation(), emptied(stored2("s2e"))
         ),
         ("nd", "plain"): (
-            nd.NDRelation(df, nd.NDConfig(), nd.NDBox()),
-            nd.NDRelation(df.filter(F.lit(False)), nd.NDConfig(), nd.NDBox()),
+            SpatialRelation(df, nd.NDConfig()),
+            SpatialRelation(df.filter(F.lit(False)), nd.NDConfig()),
         ),
         ("nd", "stored"): (
             stored_nd("n2").relation(), emptied(stored_nd("n2e"))
@@ -274,50 +275,30 @@ def test_knn_custom_comparator(stored, rects_pdf):
     assert got == set(p.id[d <= kth])
 
 
-def test_knn_join_driver_and_distributed_tiers_agree(spark):
-    """r6 two-tier seed: driver-side radii (queries ≤ driver_seed_cap)
-    and the distributed pandas-UDF path must produce the identical
-    tie-inclusive result set."""
-    from libspatialindex_spark.operators import knn
-    from libspatialindex_spark.operators.relation import SpatialRelation
-    from libspatialindex_spark.config import EngineConfig
-    from libspatialindex_spark.sources import testdata as td
-
-    sf = "/root/testdata/sf0.001"
-    rel = SpatialRelation(
-        td.rects(spark, sf), EngineConfig(),
-        max_extent=(td.MAX_EXTENT, td.MAX_EXTENT),
-    )
-    td.register_views(spark, sf)
-    q = spark.sql(
-        f"SELECT qid, qxmin AS qx, qymin AS qy FROM ({td.WINDOWS_SQL.strip()})"
-    )
-    a = {(r.qid, r.id, r.dist2) for r in knn.knn_join(rel, q, 5).collect()}
-    b = {
-        (r.qid, r.id, r.dist2)
-        for r in knn.knn_join(rel, q, 5, driver_seed_cap=0).collect()
-    }
-    assert a == b and len(a) >= 5
-
-
-def test_knn_join_no_extent_fallback_matches(spark, conf):
-    """r6: _knn_join_candidates has two shapes — single-cell entry keying
-    when max_extent is known, both-side explode + corner dedup otherwise.
-    Both must produce the identical kNN-join result."""
+def test_knn_join_no_extent_fallback_matches(spark, conf, rects_pdf):
+    """The kNN join ≡ per-query tie-inclusive brute force, with and
+    without a known max extent (the join reads no extent: both relations
+    must give the brute-force answer), over the derived query points plus
+    a 5×5 grid reaching the world's edges."""
     df = td.rects(spark, SF_DIR)
-    q = spark.sql(
+    derived = spark.sql(
         "SELECT qid, qxmin AS qx, qymin AS qy FROM (" + td.WINDOWS_SQL + ")"
     ).limit(40)
-    with_ext = SpatialRelation(
-        df, conf, max_extent=(td.MAX_EXTENT, td.MAX_EXTENT)
-    )
-    no_ext = SpatialRelation(df, conf, max_extent=None)
-    a = {
-        (r.qid, r.id, r.dist2)
-        for r in knn.knn_join(with_ext, q, K).collect()
-    }
-    b = {
-        (r.qid, r.id, r.dist2)
-        for r in knn.knn_join(no_ext, q, K).collect()
-    }
-    assert a == b and len(a) >= K
+    grid = [
+        (10_000 + 5 * i + j, 0.24 * i, 0.01 + 0.245 * j)
+        for i in range(5) for j in range(5)
+    ]
+    qpts = [tuple(r) for r in derived.collect()] + grid
+    q = spark.createDataFrame(qpts, "qid long, qx double, qy double")
+    p = rects_pdf
+    want = set()
+    for qid, qx, qy in qpts:
+        dx = np.maximum.reduce([p.xmin - qx, qx - p.xmax, np.zeros(len(p))])
+        dy = np.maximum.reduce([p.ymin - qy, qy - p.ymax, np.zeros(len(p))])
+        d2 = np.asarray(dx * dx + dy * dy)
+        kth = np.sort(d2)[K - 1]
+        want |= {(qid, i, x) for i, x in zip(p.id[d2 <= kth], d2[d2 <= kth])}
+    for ext in ((td.MAX_EXTENT, td.MAX_EXTENT), None):
+        rel = SpatialRelation(df, conf, max_extent=ext)
+        got = {(r.qid, r.id, r.dist2) for r in knn.knn_join(rel, q, K).collect()}
+        assert got == want, ext

@@ -1,6 +1,6 @@
 """N-dimensional layer tests: Morton parity, the cover walk vs brute force,
-3-D query correctness vs pandas brute force, 3-D stored-index build
-parity, and d=2 equivalence with the 2-D query operators (VERDICT r1 #3)."""
+3-D query correctness vs pandas brute force through the same query bodies
+the 2-D tests run, and 3-D stored-index build parity (VERDICT r1 #3)."""
 
 import numpy as np
 import pytest
@@ -8,7 +8,13 @@ from pyspark.sql import functions as F
 
 from libspatialindex_spark.config import EngineConfig
 from libspatialindex_spark.functions import curves
-from libspatialindex_spark.operators import index_build, knn, nd, range_query
+from libspatialindex_spark.operators import (
+    index_build,
+    knn,
+    nd,
+    range_query,
+    spatial_join,
+)
 from libspatialindex_spark.operators.relation import SpatialRelation
 from libspatialindex_spark.plans.cover import z_cover_nd
 from libspatialindex_spark.sources import testdata as td
@@ -32,7 +38,7 @@ def r3_pdf(r3):
 
 @pytest.fixture(scope="module")
 def rel3(r3):
-    return nd.NDRelation(r3, nd.NDConfig(axes=AX3, grid_bits=10), BOX3)
+    return SpatialRelation(r3, nd.NDConfig(axes=AX3, grid_bits=10), BOX3)
 
 
 def test_z_key_nd_column_matches_numpy(spark, r3):
@@ -106,7 +112,7 @@ def test_cover_nd_d2_matches_quadtree_cover():
 def test_3d_intersects_vs_pandas(rel3, r3_pdf):
     got = {
         r.id
-        for r in nd.intersects_query_nd(rel3, W3_LO, W3_HI).collect()
+        for r in range_query.intersects_query(rel3, *W3_LO, *W3_HI).collect()
     }
     p = r3_pdf
     m = (
@@ -120,7 +126,7 @@ def test_3d_intersects_vs_pandas(rel3, r3_pdf):
 def test_3d_contains_and_point_location(rel3, r3_pdf):
     got_c = {
         r.id
-        for r in nd.contains_what_query_nd(rel3, W3_LO, W3_HI).collect()
+        for r in range_query.contains_what_query(rel3, *W3_LO, *W3_HI).collect()
     }
     p = r3_pdf
     mc = (
@@ -130,7 +136,7 @@ def test_3d_contains_and_point_location(rel3, r3_pdf):
     )
     assert got_c == set(p.id[mc])
     pt = [0.5, 0.5, 0.5]
-    got_p = {r.id for r in nd.point_location_query_nd(rel3, pt).collect()}
+    got_p = {r.id for r in range_query.point_location_query(rel3, *pt).collect()}
     mp = (
         (p.xmin <= pt[0]) & (pt[0] <= p.xmax)
         & (p.ymin <= pt[1]) & (pt[1] <= p.ymax)
@@ -141,7 +147,7 @@ def test_3d_contains_and_point_location(rel3, r3_pdf):
 
 def test_3d_knn_tie_inclusive(rel3, r3_pdf):
     k = 10
-    got = nd.knn_query_nd(rel3, [0.5, 0.5, 0.5], k).collect()
+    got = knn.knn_query(rel3, 0.5, 0.5, 0.5, k).collect()
     p = r3_pdf
     dx = np.maximum.reduce([p.xmin - 0.5, 0.5 - p.xmax, np.zeros(len(p))])
     dy = np.maximum.reduce([p.ymin - 0.5, 0.5 - p.ymax, np.zeros(len(p))])
@@ -150,37 +156,6 @@ def test_3d_knn_tie_inclusive(rel3, r3_pdf):
     kth = np.sort(d2)[k - 1]
     want = set(p.id[d2 <= kth])
     assert {r.id for r in got} == want and len(got) >= k
-
-
-def test_nd_d2_queries_match_2d_operators(spark, conf):
-    """The dimension-generic path at d=2 returns exactly what the
-    specialized 2-D operators return."""
-    df = td.rects(spark, SF_DIR)
-    rel2 = SpatialRelation(df, conf, max_extent=(td.MAX_EXTENT,) * 2)
-    reln = nd.NDRelation(
-        df, nd.NDConfig(axes=((0.0, 1.0), (0.0, 1.0))), nd.NDBox()
-    )
-    w = (0.25, 0.25, 0.30, 0.30)
-    a = {r.id for r in range_query.intersects_query(rel2, *w).collect()}
-    b = {
-        r.id
-        for r in nd.intersects_query_nd(
-            reln, [w[0], w[1]], [w[2], w[3]]
-        ).collect()
-    }
-    assert a == b
-
-    # kNN through the shared ring core: same (id, dist2) rows at d=2
-    def rows(df):
-        return {(r.id, r.dist2) for r in df.collect()}
-
-    p, k = (0.5, 0.5), 10
-    assert rows(knn.knn_query(rel2, *p, k)) == rows(
-        nd.knn_query_nd(reln, list(p), k)
-    )
-    assert rows(knn.knn_box_query(rel2, *w, k)) == rows(
-        nd.knn_box_query_nd(reln, [w[0], w[1]], [w[2], w[3]], k)
-    )
 
 
 def test_3d_index_build_parity_and_pruning(spark, r3, r3_pdf, tmp_path):
@@ -194,7 +169,7 @@ def test_3d_index_build_parity_and_pruning(spark, r3, r3_pdf, tmp_path):
     assert idx2.conf == conf3 and idx2.box == BOX3
     rel = idx2.relation()
     qlo, qhi = [0.25, 0.25, 0.25], [0.30, 0.30, 0.30]
-    got = {r.id for r in nd.intersects_query_nd(rel, qlo, qhi).collect()}
+    got = {r.id for r in range_query.intersects_query(rel, *qlo, *qhi).collect()}
     p = r3_pdf
     m = (
         ~((p.xmin > qhi[0]) | (p.xmax < qlo[0]))
@@ -216,19 +191,17 @@ def test_3d_index_build_parity_and_pruning(spark, r3, r3_pdf, tmp_path):
 
     # kNN over the stored relation matches the derived-relation answer
     got_knn = {
-        r.id for r in nd.knn_query_nd(rel, [0.5, 0.5, 0.5], 10).collect()
+        r.id for r in knn.knn_query(rel, 0.5, 0.5, 0.5, 10).collect()
     }
-    rel_raw = nd.NDRelation(r3, conf3, BOX3)
+    rel_raw = SpatialRelation(r3, conf3, BOX3)
     want_knn = {
-        r.id for r in nd.knn_query_nd(rel_raw, [0.5, 0.5, 0.5], 10).collect()
+        r.id for r in knn.knn_query(rel_raw, 0.5, 0.5, 0.5, 10).collect()
     }
     assert got_knn == want_knn
 
 
 def test_nd_count_and_bounds(rel3, r3_pdf):
-    from libspatialindex_spark.operators import nd as ndm
-
-    n = ndm.count_intersects_nd(rel3, W3_LO, W3_HI).collect()[0]["n"]
+    n = range_query.count_intersects(rel3, *W3_LO, *W3_HI).collect()[0]["n"]
     p = r3_pdf
     m = (
         ~((p.xmin > W3_HI[0]) | (p.xmax < W3_LO[0]))
@@ -236,8 +209,8 @@ def test_nd_count_and_bounds(rel3, r3_pdf):
         & ~((p.wmin > W3_HI[2]) | (p.wmax < W3_LO[2]))
     )
     assert n == int(m.sum())
-    b = ndm.bounds_nd(rel3).collect()[0]
-    assert b["lo0"] == p.xmin.min() and b["hi2"] == p.wmax.max()
+    b = range_query.bounds(rel3).collect()[0]
+    assert b["xmin"] == p.xmin.min() and b["wmax"] == p.wmax.max()
 
 
 def test_index_nd_facade(spark, r3, r3_pdf, tmp_path):
@@ -269,13 +242,19 @@ def test_index_nd_facade(spark, r3, r3_pdf, tmp_path):
     assert len(k) >= 10 and k <= set(p.id)
 
 
-def test_3d_self_join_vs_pandas(rel3, r3_pdf):
+@pytest.mark.parametrize(
+    "strategy", [{"broadcast_rows_max": 0}, {}], ids=["shuffle", "default"]
+)
+def test_3d_self_join_vs_pandas(rel3, r3_pdf, strategy):
     """3-D window-restricted self-join: both orders, id1 != id2, pairwise
-    intersection — brute-force parity (Exhaustive.cc:190-210 in 3-D)."""
+    intersection — brute-force parity (Exhaustive.cc:190-210 in 3-D), for
+    the cell shuffle join and the default (a broadcast at this size)."""
     qlo, qhi = [0.40, 0.40, 0.40], [0.52, 0.52, 0.52]
     got = {
         (r.id1, r.id2)
-        for r in nd.self_join_query_nd(rel3, qlo, qhi).collect()
+        for r in spatial_join.self_join_query(
+            rel3, *qlo, *qhi, **strategy
+        ).collect()
     }
     p = r3_pdf
     m = (
@@ -299,26 +278,16 @@ def test_3d_self_join_vs_pandas(rel3, r3_pdf):
     assert got == want and got
 
 
-def test_nd_self_join_d2_matches_2d(spark, conf):
-    from libspatialindex_spark.operators import spatial_join
-
-    df = td.rects(spark, SF_DIR)
-    rel2 = SpatialRelation(df, conf, max_extent=(td.MAX_EXTENT,) * 2)
-    reln = nd.NDRelation(
-        df, nd.NDConfig(axes=((0.0, 1.0), (0.0, 1.0))), nd.NDBox()
-    )
-    w = (0.40, 0.40, 0.43, 0.43)
-    a = {
-        (r.id1, r.id2)
-        for r in spatial_join.self_join_query(rel2, *w).collect()
-    }
-    b = {
-        (r.id1, r.id2)
-        for r in nd.self_join_query_nd(
-            reln, [w[0], w[1]], [w[2], w[3]]
+def test_3d_self_join_leaves_cache_empty(spark, rel3):
+    """The self-join's window base is a localCheckpoint, never a cached
+    relation: after calls whose results are dropped, the session's cache
+    is empty (the kNN operators' rule, test_knn_cache_released)."""
+    spark.catalog.clearCache()
+    for _ in range(3):
+        spatial_join.self_join_query(
+            rel3, 0.40, 0.40, 0.40, 0.52, 0.52, 0.52
         ).collect()
-    }
-    assert a == b and a
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ----------------------------------------------------- ND mutations (r3) --
@@ -348,7 +317,7 @@ def test_3d_insert_delete_validate(spark, r3, r3_pdf, tmp_path):
     # full-table query parity after insert
     got = {
         r.id
-        for r in nd.intersects_query_nd(idx.relation(), W3_LO, W3_HI).collect()
+        for r in range_query.intersects_query(idx.relation(), *W3_LO, *W3_HI).collect()
     }
     p = r3_pdf
     m = ~(
@@ -366,7 +335,7 @@ def test_3d_insert_delete_validate(spark, r3, r3_pdf, tmp_path):
     assert idx.validate()
     got2 = {
         r.id
-        for r in nd.intersects_query_nd(idx.relation(), W3_LO, W3_HI).collect()
+        for r in range_query.intersects_query(idx.relation(), *W3_LO, *W3_HI).collect()
     }
     assert got2 == set(p.id[m]) - set(victim_ids)
 
@@ -425,7 +394,7 @@ def test_3d_knn_join_vs_bruteforce(spark, rel3, r3_pdf):
         qpts, "qid long, q0 double, q1 double, q2 double"
     )
     got = {}
-    for r in nd.knn_join_nd(rel3, qs, 10).collect():
+    for r in knn.knn_join(rel3, qs, 10, q_cols=["q0", "q1", "q2"]).collect():
         got.setdefault(r.qid, set()).add((r.id, r.dist2))
     p = r3_pdf
     for qid, qx, qy, qw in qpts:
@@ -468,9 +437,7 @@ def test_3d_mixed_ops_replay(spark, r3, r3_pdf, tmp_path):
             live = live[~live.id.isin(victims)]
         got = Counter(
             r.id
-            for r in nd.intersects_query_nd(
-                idx.relation(), W3_LO, W3_HI
-            ).collect()
+            for r in range_query.intersects_query(idx.relation(), *W3_LO, *W3_HI).collect()
         )
         m = ~(
             (live.xmin > W3_HI[0]) | (live.xmax < W3_LO[0])
@@ -512,15 +479,15 @@ def test_3d_filemap_and_learned_models(spark, r3, r3_pdf, tmp_path_factory):
     assert rel.file_boxes
     rel_b = dataclasses.replace(rel, file_boxes=[])
     want = {
-        r.id for r in nd.intersects_query_nd(rel_b, W3_LO, W3_HI).collect()
+        r.id for r in range_query.intersects_query(rel_b, *W3_LO, *W3_HI).collect()
     }
-    got = {r.id for r in nd.intersects_query_nd(rel, W3_LO, W3_HI).collect()}
+    got = {r.id for r in range_query.intersects_query(rel, *W3_LO, *W3_HI).collect()}
     assert got == want and len(want) > 0
     # the planner that prunes the scan counts its files at d=3 too: the
     # file subset it re-plans, within the bucket-only listing
-    fp = rel.files_planned_for_box(W3_LO, W3_HI)
-    assert fp == len(rel.pruned_for_box(W3_LO, W3_HI).inputFiles())
-    assert 0 < fp <= rel_b.files_planned_for_box(W3_LO, W3_HI)
+    fp = rel.files_planned_for_box(*W3_LO, *W3_HI)
+    assert fp == len(rel.pruned_for_box(*W3_LO, *W3_HI).inputFiles())
+    assert 0 < fp <= rel_b.files_planned_for_box(*W3_LO, *W3_HI)
     assert fp < len(rel.file_boxes)
 
     # certified learned bounds bracket the truth (3 probed buckets)
@@ -559,7 +526,7 @@ def test_3d_mutation_invalidates_filemap(spark, r3, tmp_path):
     refresh_file_map(idx)
     assert idx.file_map() is not None and idx.zm_models()
     rel = idx.relation()
-    got = {r.id for r in nd.intersects_query_nd(rel, W3_LO, W3_HI).collect()}
+    got = {r.id for r in range_query.intersects_query(rel, *W3_LO, *W3_HI).collect()}
     import pandas as pd  # noqa: F401
 
     p = r3.toPandas()
@@ -595,12 +562,12 @@ def test_3d_box_knn_matches_bruteforce(spark, r3, r3_pdf, tmp_path_factory):
         r3, str(tmp_path_factory.mktemp("bk3") / "idx"), conf3, BOX3
     )
     rel = idx.relation()
-    got = {r.id for r in nd.knn_box_query_nd(rel, qlo, qhi, k).collect()}
+    got = {r.id for r in knn.knn_box_query(rel, *qlo, *qhi, k).collect()}
     assert got == want and len(want) >= k
     # degenerate-box equivalence with the point path
     pt = [0.5, 0.5, 0.5]
-    a = {(r.id, r.dist2) for r in nd.knn_query_nd(rel, pt, k).collect()}
-    b = {(r.id, r.dist2) for r in nd.knn_box_query_nd(rel, pt, pt, k).collect()}
+    a = {(r.id, r.dist2) for r in knn.knn_query(rel, *pt, k).collect()}
+    b = {(r.id, r.dist2) for r in knn.knn_box_query(rel, *pt, *pt, k).collect()}
     assert a == b
     # facade surface
     from libspatialindex_spark.api import IndexND
@@ -630,7 +597,7 @@ def test_3d_alt_partitioner_query_parity(spark, r3, r3_pdf, tmp_path_factory, pa
     )
     want = set(p.id[m])
     rel = idx.relation()
-    got = {r.id for r in nd.intersects_query_nd(rel, W3_LO, W3_HI).collect()}
+    got = {r.id for r in range_query.intersects_query(rel, *W3_LO, *W3_HI).collect()}
     assert got == want
     assert len(rel.bucket_boxes) > 1
     if part == "quantile":
@@ -648,9 +615,7 @@ def test_3d_alt_partitioner_query_parity(spark, r3, r3_pdf, tmp_path_factory, pa
     vset = {rr.id for rr in victims.collect()}
     got2 = {
         r.id
-        for r in nd.intersects_query_nd(
-            idx2.relation(), W3_LO, W3_HI
-        ).collect()
+        for r in range_query.intersects_query(idx2.relation(), *W3_LO, *W3_HI).collect()
     }
     assert got2 == want - vset
     assert idx2.validate()
