@@ -30,6 +30,10 @@ build-once / query-many shape the spatial side has:
   a mutation invalidated the projection); :func:`lsh_near_dup_pairs_stored`
   reads ``_bk``/``_q``/``_n2`` straight from the index.  All re-rank with
   the STORED quantized columns — Python never re-touches the raw vectors.
+* **mutations** — the index is a ``manifest.StoredLayout`` whose buckets
+  are the ``_cell=N`` lists: insert, delete and compaction run the
+  spatial index's bucket-dir steps (``operators/mutations.py``), with no
+  per-cell commit record, and reads pass the schema the handle holds.
 
 Results are bit-identical to the in-flight operators in
 ``operators/similarity.py`` (same quantization lattice, same integer plane
@@ -51,8 +55,9 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from libspatialindex_spark.operators import similarity
+from libspatialindex_spark.operators import mutations, similarity
 from libspatialindex_spark.operators.similarity import (
     QUANT_SCALE,
     _quant_cos_cols,
@@ -62,11 +67,13 @@ from libspatialindex_spark.operators.similarity import (
     quantized_planes,
 )
 from libspatialindex_spark.plans import fs as FS
+from libspatialindex_spark.plans import manifest as M
 
 
 @dataclass
-class StoredAnnIndex:
-    """A persisted similarity index (vector data + ann.json manifest)."""
+class StoredAnnIndex(M.StoredLayout):
+    """A persisted similarity index (vector data + ann.json manifest);
+    its buckets are the ``_cell=N`` inverted lists."""
 
     spark: SparkSession
     path: str
@@ -81,24 +88,28 @@ class StoredAnnIndex:
     C: np.ndarray  # (n_cells, dim) int64 quantized centroids
     train_stride: int = 1  # k-means sample stride (manifest provenance)
     lloyd_rounds: int = 2
-
-    @property
-    def data_path(self) -> str:
-        return FS.join(self.path, "data")
+    part = "_cell"
 
     @property
     def sig_path(self) -> str:
         return FS.join(self.path, "sigdata")
 
     def df(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_path)
+        return self.data()
+
+    def sig_data(self) -> DataFrame:
+        """The sig projection, read with its columns' types from the data
+        schema (no inference job)."""
+        s = self.data_schema()
+        return self.spark.read.schema(StructType(
+            [s[c] for c in (self.id_col, "_q", "_n2", "_sig")]
+        )).parquet(self.sig_path)
 
     def has_sig_projection(self) -> bool:
         """True when the sig-partitioned projection is present and
         committed (its marker exists).  False after a mutation
         invalidated it — queries fall back to the main layout."""
-        fs = FS.get_fs(self.spark, self.path)
-        return fs.exists(FS.join(self.path, "sigmap.json"))
+        return self.fs.exists(FS.join(self.path, "sigmap.json"))
 
     def sig_partitions_for(
         self, probes: list[int]
@@ -110,10 +121,9 @@ class StoredAnnIndex:
         natively."""
         if not self.has_sig_projection():
             return None
-        fs = FS.get_fs(self.spark, self.path)
         have = {
             int(n.split("=", 1)[1])
-            for n in fs.listdir(self.sig_path)
+            for n in self.fs.listdir(self.sig_path)
             if n.startswith("_sig=")
         }
         return sorted(have & set(probes)), len(have)
@@ -176,52 +186,32 @@ def build_ann_index(
     integer matmul."""
     spark = df.sparkSession
     fs = FS.get_fs(spark, path)
-    data_path = FS.join(path, "data")
-
     cids, C = similarity.ivf_kmeans_centroids(
         df, train_stride=train_stride, init_every=stride,
         rounds=lloyd_rounds, vec_col=vec_col, id_col=id_col,
     )
-    planes_b = quantized_planes(dim, bands * rows_per_band, seed)
-    planes_s = quantized_planes(dim, n_planes, seed)
-    qv, n2 = _quant_cos_cols(vec_col)
-    bkeys = band_keys_udf(planes_b, bands, rows_per_band)
-    # signature = banded keys with ONE band of n_planes rows (same packing:
-    # bit p set iff <q, plane_p> > 0)
-    sig1 = band_keys_udf(planes_s, 1, n_planes)
-    cell = ivf_cell_udf(cids, C)
-
+    idx = StoredAnnIndex(
+        spark=spark, path=path, dim=dim, n_planes=n_planes, bands=bands,
+        rows_per_band=rows_per_band, seed=seed, stride=stride, id_col=id_col,
+        cids=cids, C=C, train_stride=train_stride, lloyd_rounds=lloyd_rounds,
+    )
     if fs.isdir(path):
         fs.delete(path)
     fs.mkdirs(path)
 
-    out = df.select(
-        F.col(id_col),
-        qv.alias("_q"),
-        n2.alias("_n2"),
-        F.element_at(sig1(F.col(vec_col)), 1).alias("_sig"),
-        bkeys(F.col(vec_col)).alias("_bk"),
-        cell(F.col(vec_col)).alias("_cell"),
-    )
     # ONE file per inverted list (VERDICT r3 #1): shuffle by _cell so each
     # cell's rows land in exactly one task — the old id-hash repartition
     # made EVERY task write into EVERY cell directory, i.e. npart × n_cells
     # tiny files whose listing + footer reads dominated stored-path
     # queries.  maxRecordsPerFile caps hot cells (the salt analog: a skewed
     # list splits into a few sig-sorted files instead of stalling a task's
-    # memory).  The (_cell, _sig) sort keeps the writer from inserting its
-    # own Sort(_cell) — which would let EliminateSorts drop the _sig order
-    # files' row-group zone maps depend on.
-    n_cells = max(len(cids), 1)
-    writer = (
-        out.repartition(n_cells, F.col("_cell"))
-        .sortWithinPartitions("_cell", "_sig")
-        .write.partitionBy("_cell")
-        .mode("overwrite")
+    # memory).
+    _write_cells(
+        _index_cols(idx, df, vec_col).repartition(
+            max(len(cids), 1), F.col("_cell")
+        ),
+        idx.data_path, max_records_per_file,
     )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(data_path)
 
     # Commit point: manifest written AFTER the data (loadHeader analog).
     manifest = {
@@ -239,11 +229,6 @@ def build_ann_index(
         "centroids": [[int(v) for v in row] for row in C],
     }
     fs.write_text(FS.join(path, "ann.json"), json.dumps(manifest))
-    idx = StoredAnnIndex(
-        spark=spark, path=path, dim=dim, n_planes=n_planes, bands=bands,
-        rows_per_band=rows_per_band, seed=seed, stride=stride, id_col=id_col,
-        cids=cids, C=C, train_stride=train_stride, lloyd_rounds=lloyd_rounds,
-    )
     refresh_sig_projection(idx)
     return idx
 
@@ -268,11 +253,8 @@ def refresh_sig_projection(
     invalidate the projection (stale = wrong answers); this rebuilds it.
     At 100 TB it is one extra shuffled write of four thin columns; hot
     signatures split files via maxRecordsPerFile."""
-    spark = idx.spark
-    fs = FS.get_fs(spark, idx.path)
-    data = spark.read.parquet(idx.data_path).select(
-        idx.id_col, "_sig", "_q", "_n2"
-    )
+    fs = idx.fs
+    data = idx.data().select(idx.id_col, "_sig", "_q", "_n2")
     tmp = idx.sig_path + ".new"
     fs.delete(tmp)
     n_sigs = 1 << idx.n_planes
@@ -298,67 +280,15 @@ def invalidate_sig_projection(idx: StoredAnnIndex) -> None:
     """Drop the sig projection BEFORE mutating the main layout (map first,
     then data — a reader mid-crash sees either a committed map over
     committed data or no projection at all, never a stale one)."""
-    fs = FS.get_fs(idx.spark, idx.path)
-    fs.delete(FS.join(idx.path, "sigmap.json"))
-    fs.delete(idx.sig_path)
+    idx.fs.delete(FS.join(idx.path, "sigmap.json"))
+    idx.fs.delete(idx.sig_path)
 
 
-def _aside_dirs(fs, data_path: str, part: str) -> list[str]:
-    """``{part}=N.old`` aside directories left by an interrupted delete.
-    If read as-is, partition discovery sees mixed values ('5' and
-    '5.old'), degrades the partition column to string and double-counts
-    pre-delete rows — so loaders refuse them (see :func:`recover_ann_index`)."""
-    if not fs.isdir(data_path):
-        return []
-    return sorted(
-        n for n in fs.listdir(data_path)
-        if n.startswith(f"{part}=") and n.endswith(".old")
-    )
-
-
-def recover_ann_index(spark: SparkSession, path: str) -> StoredAnnIndex:
-    """Sweep aside dirs from an interrupted ``delete_vectors`` (the
-    spatial ``recover()`` analog, ``RTree.cc:520-530`` loadRTree's
-    refusal of a torn file): a cell whose live dir is MISSING rolls its
-    aside back (pre-delete state — rename ``.old`` → live); a cell whose
-    live dir exists completed its swap, so the aside is dropped.  Either
-    way every cell ends in a consistent, queryable state; an interrupted
-    delete must be re-issued (it anti-joins, so re-running converges)."""
-    fs = FS.get_fs(spark, path)
-    _settle_asides(fs, FS.join(path, "data"))
-    return load_ann_index(spark, path)
-
-
-def _settle_asides(fs, data_path: str) -> None:
-    """Roll every ``_cell=N.old`` aside forward (swap landed → drop) or
-    back (live dir missing → rename aside to live).  Shared by
-    :func:`recover_ann_index` and :func:`compact_ann_index` (ADVICE r5
-    #2: compaction used to SKIP torn cells and then rebuild the sig
-    projection without their rows — silently dropping a cell from
-    projection-served queries)."""
-    for name in _aside_dirs(fs, data_path, "_cell"):
-        old = FS.join(data_path, name)
-        live = FS.join(data_path, name[: -len(".old")])
-        if fs.isdir(live):
-            fs.delete(old)  # swap landed — roll forward
-        else:
-            fs.rename(old, live)  # swap torn — roll back
-
-
-def load_ann_index(spark: SparkSession, path: str) -> StoredAnnIndex:
-    """Open a stored similarity index; raises if the manifest is absent
-    (data without a manifest is an uncommitted build) or if delete
-    asides are present (call :func:`recover_ann_index` first)."""
+def _open(spark: SparkSession, path: str) -> StoredAnnIndex:
     fs = FS.get_fs(spark, path)
     mpath = FS.join(path, "ann.json")
     if not fs.exists(mpath):
         raise FileNotFoundError(f"no ann.json under {path} — not an ANN index")
-    asides = _aside_dirs(fs, FS.join(path, "data"), "_cell")
-    if asides:
-        raise RuntimeError(
-            f"interrupted delete under {path} (aside dirs {asides[:3]}…) — "
-            "run recover_ann_index() before reading"
-        )
     d = json.loads(fs.read_text(mpath))
     return StoredAnnIndex(
         spark=spark, path=path, dim=int(d["dim"]), n_planes=int(d["n_planes"]),
@@ -369,6 +299,36 @@ def load_ann_index(spark: SparkSession, path: str) -> StoredAnnIndex:
         train_stride=int(d.get("train_stride", 1)),
         lloyd_rounds=int(d.get("lloyd_rounds", 2)),
     )
+
+
+def _settle(idx: StoredAnnIndex) -> None:
+    """Settle the asides of an interrupted delete or compaction
+    (``mutations.settle``): the layout keeps no per-cell record, so a
+    cell whose live dir exists completed its swap (roll forward) and one
+    whose live dir is missing rolls back.  Compaction runs it first too
+    (ADVICE r5 #2: it used to SKIP torn cells and then rebuild the sig
+    projection without their rows)."""
+    mutations.settle(idx, lambda c: idx.fs.isdir(idx.bucket_dir(c)))
+
+
+def recover_ann_index(spark: SparkSession, path: str) -> StoredAnnIndex:
+    """Settle the asides of an interrupted ``delete_vectors`` or
+    ``compact_ann_index`` (the spatial ``recover()`` analog,
+    ``RTree.cc:520-530`` loadRTree's refusal of a torn file).  Every cell
+    ends in a consistent, queryable state; an interrupted delete must be
+    re-issued (it anti-joins, so re-running converges)."""
+    idx = _open(spark, path)
+    _settle(idx)
+    return idx
+
+
+def load_ann_index(spark: SparkSession, path: str) -> StoredAnnIndex:
+    """Open a stored similarity index; raises if the manifest is absent
+    (data without a manifest is an uncommitted build) or if delete
+    asides are present (call :func:`recover_ann_index` first)."""
+    idx = _open(spark, path)
+    mutations.check_settled(idx, "recover_ann_index")
+    return idx
 
 
 def _stored_cos(qvec: list[float]):
@@ -432,12 +392,9 @@ def ann_lsh_cosine_stored(
     Re-rank reads stored ``_q``/``_n2``.  Result ≡
     ``similarity.ann_lsh_cosine`` either way."""
     probes = idx.probe_sigs(qvec, probe_hamming)
-    if idx.has_sig_projection():
-        cand = idx.spark.read.parquet(idx.sig_path).filter(
-            F.col("_sig").isin(probes)
-        )
-    else:
-        cand = idx.df().filter(F.col("_sig").isin(probes))
+    cand = (
+        idx.sig_data() if idx.has_sig_projection() else idx.df()
+    ).filter(F.col("_sig").isin(probes))
     d = cand.select(F.col(idx.id_col), _stored_cos(qvec).alias("cos_q"))
     return _topk_tie_inclusive(d, k)
 
@@ -516,14 +473,32 @@ def suggest_n_cells(n_rows: int) -> int:
 # the stored columns for the batch under the PERSISTED planes/centroids
 # (the quantizer is frozen at build time — standard IVF practice; retrain
 # = rebuild) and append into the cell directories as tag-prefixed files;
-# deletes anti-join-rewrite only the cells holding victims.  Results of
-# every stored-path query remain exactly the in-flight operators' results
-# on the mutated vector set.
+# deletes anti-join-rewrite only the cells holding victims.  Both run the
+# spatial mutations' own steps (``operators/mutations.py``); the layout
+# has no per-cell commit record, and every write drops the sig projection
+# before its data lands.  Results of every stored-path query remain
+# exactly the in-flight operators' results on the mutated vector set.
+
+
+def _write_cells(df: DataFrame, path: str, max_records_per_file=None) -> None:
+    """Write ``df`` partitioned by ``_cell``.  The (_cell, _sig) sort keeps
+    the writer from inserting its own Sort(_cell) — which would let
+    EliminateSorts drop the _sig order files' row-group zone maps depend
+    on."""
+    writer = (
+        df.sortWithinPartitions("_cell", "_sig")
+        .write.partitionBy("_cell")
+        .mode("overwrite")
+    )
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+    writer.parquet(path)
 
 
 def _index_cols(idx: StoredAnnIndex, df: DataFrame, vec_col: str):
-    from libspatialindex_spark.operators.similarity import _quant_cos_cols
-
+    """The stored columns of ``df``'s vectors under the index's planes
+    and centroids.  The signature is the banded keys with ONE band of
+    ``n_planes`` rows (same packing: bit p set iff <q, plane_p> > 0)."""
     planes_b = quantized_planes(idx.dim, idx.bands * idx.rows_per_band, idx.seed)
     planes_s = quantized_planes(idx.dim, idx.n_planes, idx.seed)
     qv, n2 = _quant_cos_cols(vec_col)
@@ -548,32 +523,13 @@ def insert_vectors(
 ) -> StoredAnnIndex:
     """Append vectors: stored columns computed under the frozen quantizer,
     staged write partitioned by cell, tag-prefixed move-in."""
-    import re as _re
-
-    fs = FS.get_fs(idx.spark, idx.path)
-    staging = FS.join(idx.path, f"_staging_{_re.sub(r'[^A-Za-z0-9_.-]', '_', build_id)}")
-    fs.delete(staging)
-    out = _index_cols(idx, rows, vec_col)
-    out.repartition("_cell").sortWithinPartitions("_cell", "_sig").write.partitionBy(
-        "_cell"
-    ).mode("overwrite").parquet(staging)
+    btag = mutations.tag(build_id)
+    staged = mutations.staging(idx, f"insert_{btag}")
+    _write_cells(_index_cols(idx, rows, vec_col).repartition("_cell"), staged)
     # stale projection would hide the inserted vectors — drop it before
     # the first staged file becomes visible
     invalidate_sig_projection(idx)
-    tag = _re.sub(r"[^A-Za-z0-9_.-]", "_", build_id)
-    for bname in fs.listdir(staging):
-        if not bname.startswith("_cell="):
-            continue
-        src_dir = FS.join(staging, bname)
-        dst_dir = FS.join(idx.data_path, bname)
-        fs.mkdirs(dst_dir)
-        for fname in fs.listdir(src_dir):
-            if fname.endswith(".parquet"):
-                fs.rename(
-                    FS.join(src_dir, fname),
-                    FS.join(dst_dir, f"{tag}-{fname}"),
-                )
-    fs.delete(staging)
+    mutations.move_in(idx, staged, btag)
     return idx
 
 
@@ -582,41 +538,21 @@ def delete_vectors(
 ) -> StoredAnnIndex:
     """Remove vectors by id: anti-join rewrite of only the inverted lists
     holding victims (aside swap, dropped after the rewrite lands)."""
-    spark = idx.spark
-    fs = FS.get_fs(spark, idx.path)
-    data = spark.read.parquet(idx.data_path)
-    vcol = idx.id_col
-    vb = data.join(victims.select(vcol), on=vcol, how="left_semi")
-    touched = [int(r["_cell"]) for r in vb.select("_cell").distinct().collect()]
+    _settle(idx)
+    ids = victims.select(idx.id_col)
+    touched = mutations.victim_buckets(idx, ids, idx.id_col)
     if not touched:
         return idx
-    staging = FS.join(idx.path, "_staging_delete")
-    fs.delete(staging)
-    survivors = (
-        spark.read.option("basePath", idx.data_path).parquet(
-            *[FS.join(idx.data_path, f"_cell={c}") for c in touched]
-        ).join(victims.select(vcol), on=vcol, how="left_anti")
+    survivors = mutations.read_buckets(idx, touched).join(
+        ids, on=idx.id_col, how="left_anti"
     )
-    survivors.repartition("_cell").sortWithinPartitions(
-        "_cell", "_sig"
-    ).write.partitionBy("_cell").mode("overwrite").parquet(staging)
-    # the projection still holds the victims — drop it before the swap
-    invalidate_sig_projection(idx)
-    for c in touched:
-        live = FS.join(idx.data_path, f"_cell={c}")
-        old = live + ".old"
-        fs.delete(old)
-        src = FS.join(staging, f"_cell={c}")
-        has_new = fs.isdir(src) and any(
-            f.endswith(".parquet") for f in fs.listdir(src)
-        )
-        if fs.isdir(live):
-            fs.rename(live, old)
-        if has_new:
-            fs.rename(src, live)
-    fs.delete(staging)
-    for c in touched:
-        fs.delete(FS.join(idx.data_path, f"_cell={c}.old"))
+
+    def write(p):
+        _write_cells(survivors.repartition("_cell"), p)
+        # the projection still holds the victims — drop it before the swap
+        invalidate_sig_projection(idx)
+
+    mutations.rewrite(idx, touched, "delete", write, lambda t: None)
     return idx
 
 
@@ -631,61 +567,22 @@ def compact_ann_index(
     batch appends ≥1 file per touched cell; the r4 layout rework showed
     list-file proliferation is what made the stored path slower than
     in-flight).  Rewrites only cells above ``max_files_per_cell``,
-    (_cell, _sig)-sorted, via the same aside-swap discipline as
-    :func:`delete_vectors`.  Rebuilds the sig projection afterwards
-    (mutations drop it).
-
-    Torn state from a crashed delete is settled FIRST (ADVICE r5 #2):
-    compaction otherwise skipped ``.old`` cells and rebuilt the sig
-    projection WITHOUT their rows — projection-served queries would
-    silently drop that cell until a manual recover."""
-    spark = idx.spark
-    fs = FS.get_fs(spark, idx.path)
-    _settle_asides(fs, idx.data_path)
-    touched = []
-    for name in fs.listdir(idx.data_path):
-        if not name.startswith("_cell=") or name.endswith(".old"):
-            continue
-        files = [
-            f
-            for f in fs.listdir(FS.join(idx.data_path, name))
-            if f.endswith(".parquet")
-        ]
-        if len(files) > max_files_per_cell:
-            touched.append(int(name[len("_cell="):]))
+    (_cell, _sig)-sorted, via the same aside swap as
+    :func:`delete_vectors`, after settling any torn state.  Rebuilds the
+    sig projection afterwards (mutations drop it)."""
+    _settle(idx)
+    touched = mutations.compaction_buckets(idx, max_files_per_cell)
     if touched:
-        staging = FS.join(idx.path, "_staging_compact")
-        fs.delete(staging)
-        data = spark.read.option("basePath", idx.data_path).parquet(
-            *[FS.join(idx.data_path, f"_cell={c}") for c in touched]
-        )
-        writer = (
-            data.repartition(len(touched), F.col("_cell"))
-            .sortWithinPartitions("_cell", "_sig")
-            .write.partitionBy("_cell")
-            .mode("overwrite")
-        )
-        if max_records_per_file:
-            writer = writer.option(
-                "maxRecordsPerFile", int(max_records_per_file)
+
+        def write(p):
+            _write_cells(
+                mutations.read_buckets(idx, touched)
+                .repartition(len(touched), F.col("_cell")),
+                p, max_records_per_file,
             )
-        writer.parquet(staging)
-        invalidate_sig_projection(idx)  # stale projection must never serve
-        for c in touched:
-            live = FS.join(idx.data_path, f"_cell={c}")
-            old = live + ".old"
-            fs.delete(old)
-            src = FS.join(staging, f"_cell={c}")
-            has_new = fs.isdir(src) and any(
-                f.endswith(".parquet") for f in fs.listdir(src)
-            )
-            if fs.isdir(live):
-                fs.rename(live, old)
-            if has_new:
-                fs.rename(src, live)
-        fs.delete(staging)
-        for c in touched:
-            fs.delete(FS.join(idx.data_path, f"_cell={c}.old"))
+            invalidate_sig_projection(idx)  # stale projection must never serve
+
+        mutations.rewrite(idx, touched, "compact", write, lambda t: None)
     if refresh_projection and not idx.has_sig_projection():
         refresh_sig_projection(idx)
     return idx

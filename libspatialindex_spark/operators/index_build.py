@@ -462,11 +462,7 @@ def build_index(
     new = [b for b in idx.live_buckets() if b not in done]
     if not new:
         return idx
-    idx._data_schema = (  # inferred here once; queries reuse it
-        spark.read.option("basePath", data_path)
-        .parquet(*[FS.join(data_path, f"bucket={b}") for b in new])
-        .schema
-    )
+    idx.data_schema()  # inferred here once; queries reuse it
     idx.append_manifest(
         idx.footer_manifest(data_path, new, dict.fromkeys(new, extent()), build_id)
     )
@@ -501,7 +497,7 @@ def refresh_file_map(idx) -> None:
             "path": fs.uri(z["path"]), "bucket": z["bucket"],
             "zmin": z["min"]["z"], "zmax": z["max"]["z"], "n_rows": z["n_rows"],
         }
-        for z in M.file_zones(fs, idx.data_path, idx.live_buckets(), {"z"})
+        for z in idx.file_zones(idx.data_path, idx.live_buckets(), {"z"})
         if z["n_rows"]
     ]
     tmp = idx.filemap_path + ".new"

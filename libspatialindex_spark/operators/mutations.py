@@ -34,6 +34,17 @@ single-writer per tree):
   forward/back.  The manifest is replaced by the same aside/rename dance,
   never ``rmtree``-then-write.
 
+The protocol exists once, for every stored layout, as the reference's
+one ``IStorageManager`` serves its R-, MVR- and TPR-trees alike
+(``SpatialIndex.h:156-164``): the spatial, version, moving and ANN
+indexes are ``manifest.StoredLayout`` handles whose data roots hold one
+``{part}=N`` dir per bucket, and all of them stage, move in, swap aside,
+settle and pick compaction buckets through the functions below.  A
+layout supplies only its commit record and the test :func:`settle` asks
+of it: the spatial index's parquet manifest, the temporal layouts'
+``temporal.json`` envelopes (``operators/temporal_index.py``), none for
+the ANN lists (``operators/ann_index.py``).
+
 All driver-side file ops go through ``plans/fs`` so the index can live on
 any Hadoop filesystem, not just local disk.
 """
@@ -49,7 +60,8 @@ from libspatialindex_spark.plans import fs as FS
 from libspatialindex_spark.plans import manifest as M
 
 
-def _safe(build_id: str) -> str:
+def tag(build_id: str) -> str:
+    """``build_id`` sanitized for use in file and dir names."""
     return re.sub(r"[^A-Za-z0-9_.-]", "_", build_id)
 
 
@@ -67,27 +79,142 @@ def committed_build_ids(idx) -> set[str]:
     return {r["build_id"] for r in rows or []}
 
 
-def _read_buckets(idx, buckets) -> DataFrame:
-    """Only the ``bucket=N`` data dirs of ``buckets``, read with the
-    index's data schema: no inference job, and the ``.old`` asides of a
-    swap in flight are never listed."""
-    root = idx.data_path
+# --------------------------------------------- the bucket-dir protocol --
+#
+# Every stored layout (spatial, version, moving, ANN) is a
+# ``manifest.StoredLayout``: a data root of ``{part}=N`` bucket dirs.  Its
+# writes share the steps below; each layout adds only its commit record.
+
+
+def staging(idx, name: str) -> str:
+    """A fresh staging dir ``_staging_<name>`` next to the data root."""
+    path = FS.join(idx.path, f"_staging_{name}")
+    idx.fs.delete(path)
+    return path
+
+
+def read_buckets(idx, buckets) -> DataFrame:
+    """Only the live dirs of ``buckets``, read with the layout's data
+    schema: no inference job, and the ``.old`` asides of a swap in flight
+    are never listed."""
     return (
         idx.spark.read.schema(idx.data_schema())
-        .option("basePath", root)
-        .parquet(*[FS.join(root, f"bucket={b}") for b in buckets])
+        .option("basePath", idx.data_path)
+        .parquet(*[idx.bucket_dir(b) for b in buckets])
     )
 
 
-def _sweep_build(fs, data_path: str, tag: str) -> None:
-    """Remove files from an uncommitted attempt of ``tag`` (crash debris)."""
-    for bname in fs.listdir(data_path):
-        if not bname.startswith("bucket="):
-            continue
-        bdir = FS.join(data_path, bname)
-        for fname in fs.listdir(bdir):
-            if fname.startswith(f"{tag}-"):
-                fs.delete(FS.join(bdir, fname))
+def victim_buckets(idx, ids: DataFrame, id_col: str) -> list[int]:
+    """Live buckets holding any id of ``ids``, by a semi-join."""
+    hit = idx.data().join(ids, on=id_col, how="left_semi")
+    return [int(r[0]) for r in hit.select(idx.part).distinct().collect()]
+
+
+def live_rows(idx, b: int) -> int:
+    """Rows in bucket ``b``'s live dir, from its files' footers (tail
+    reads on the driver, no Spark job)."""
+    d = idx.bucket_dir(b)
+    return sum(
+        M.footer(idx.fs, FS.join(d, f)).num_rows
+        for f in M.parquet_files(idx.fs, d)
+    )
+
+
+def sweep_build(idx, build_tag: str) -> None:
+    """Remove the files of an uncommitted attempt of ``build_tag`` (crash
+    debris of :func:`move_in`)."""
+    fs = idx.fs
+    for b in idx.live_buckets():
+        d = idx.bucket_dir(b)
+        for fname in fs.listdir(d):
+            if fname.startswith(f"{build_tag}-"):
+                fs.delete(FS.join(d, fname))
+
+
+def move_in(idx, staged: str, build_tag: str) -> list[int]:
+    """Move the staged files of an insert into the live bucket dirs under
+    ``build_tag``-prefixed names (sweepable on replay) and drop the
+    staging dir; returns the buckets that took files.  Readers may observe
+    rows before the commit that follows — the same single-writer caveat
+    as the reference's dirty pages."""
+    fs = idx.fs
+    buckets = idx.buckets_under(staged)
+    for b in buckets:
+        src, dst = idx.bucket_dir(b, staged), idx.bucket_dir(b)
+        fs.mkdirs(dst)
+        for fname in M.parquet_files(fs, src):
+            dst_name = f"{build_tag}-{fname}"
+            fs.rename(FS.join(src, fname), FS.join(dst, dst_name))
+    fs.delete(staged)
+    return buckets
+
+
+def rewrite(idx, touched: list, name: str, write, commit) -> None:
+    """Replace the ``touched`` buckets with a staged rewrite: ``write``
+    writes it partitioned by the layout's column under the staging dir it
+    is given; ``commit(touched)`` then writes the layout's commit record.
+
+    Per bucket: aside → move in.  The ``.old`` aside copies are NOT
+    deleted before the commit, so every crash point leaves old or new
+    data present for EVERY bucket (including an all-deleted one, whose
+    rewrite has no dir): before the commit, :func:`settle` restores the
+    aside consistently with the old record; after it, :func:`settle` just
+    drops asides."""
+    fs = idx.fs
+    staged = staging(idx, name)
+    write(staged)
+    for b in touched:
+        live, old = idx.bucket_dir(b), idx.bucket_dir(b) + ".old"
+        fs.delete(old)  # stale aside from pre-recovery eras only
+        src = idx.bucket_dir(b, staged)
+        if fs.isdir(live):
+            fs.rename(live, old)
+        if M.parquet_files(fs, src):
+            fs.rename(src, live)
+    fs.delete(staged)
+    commit(touched)
+    # Only now — past the commit point — drop the aside copies.  A crash in
+    # this window leaves harmless ``.old`` debris that settle() sweeps.
+    for b in touched:
+        fs.delete(idx.bucket_dir(b) + ".old")
+
+
+def settle(idx, committed) -> None:
+    """Roll every ``.old`` aside FORWARD (drop it) when ``committed(b)``
+    says the layout's commit record already describes bucket ``b``'s live
+    dir, otherwise BACK (restore the aside over whatever partial rewrite
+    the crash left)."""
+    fs = idx.fs
+    for b in idx.aside_buckets():
+        live = idx.bucket_dir(b)
+        if committed(b):
+            fs.delete(live + ".old")
+        else:
+            fs.delete(live)
+            fs.rename(live + ".old", live)
+
+
+def check_settled(idx, recover: str) -> None:
+    """Refuse a layout whose data root holds ``.old`` asides (see
+    ``StoredLayout.aside_buckets``); ``recover`` names the function that
+    settles them."""
+    asides = idx.aside_buckets()
+    if asides:
+        raise RuntimeError(
+            f"interrupted delete or compaction under {idx.path} (asides of "
+            f"buckets {asides[:3]}…) — run {recover}() before reading"
+        )
+
+
+def compaction_buckets(idx, max_files: int) -> list[int]:
+    """Live buckets holding more than ``max_files`` data files."""
+    return [
+        b for b in idx.live_buckets()
+        if len(M.parquet_files(idx.fs, idx.bucket_dir(b))) > max_files
+    ]
+
+
+# ------------------------------------------------------- spatial index --
 
 
 def insert_batch(
@@ -102,17 +229,13 @@ def insert_batch(
 
     With ``idempotent=True`` a ``build_id`` already present in the manifest
     is a no-op (exactly-once under streaming epoch replay)."""
-    fs = idx.fs
-    tag = _safe(build_id)
-
+    btag = tag(build_id)
     if idempotent:
         if build_id in committed_build_ids(idx):
             return idx  # epoch already committed — replay is a no-op
-        _sweep_build(fs, idx.data_path, tag)
+        sweep_build(idx, btag)
 
-    staging = FS.join(idx.path, f"_staging_insert_{tag}")
-    fs.delete(staging)
-
+    staged = staging(idx, f"insert_{btag}")
     box = box or idx.box
     keyed, extent = M.observe_extent(idx.keyed(rows, box), box.dims)
     (
@@ -123,27 +246,12 @@ def insert_batch(
         .sortWithinPartitions("bucket", "z")
         .write.partitionBy("bucket")
         .mode("overwrite")
-        .parquet(staging)
+        .parquet(staged)
     )
-    buckets = [
-        int(n[len("bucket="):]) for n in fs.listdir(staging)
-        if n.startswith("bucket=")
-    ]
+    buckets = idx.buckets_under(staged)
     ext = dict.fromkeys(buckets, extent() if buckets else None)
-    mrows = idx.footer_manifest(staging, buckets, ext, build_id)
-
-    # Move staged files into live bucket dirs under build_id-prefixed names
-    # (sweepable on replay).  Readers may observe rows before the manifest
-    # commit — same single-writer caveat as the reference's dirty pages.
-    for b in buckets:
-        src_dir = FS.join(staging, f"bucket={b}")
-        dst_dir = FS.join(idx.data_path, f"bucket={b}")
-        fs.mkdirs(dst_dir)
-        for fname in M.parquet_files(fs, src_dir):
-            fs.rename(
-                FS.join(src_dir, fname), FS.join(dst_dir, f"{tag}-{fname}")
-            )
-    fs.delete(staging)
+    mrows = idx.footer_manifest(staged, buckets, ext, build_id)
+    move_in(idx, staged, btag)
 
     # Commit point: manifest append.  The file map goes stale FIRST
     # (fail-safe: losing it only loses the refinement; keeping a stale one
@@ -162,14 +270,12 @@ def recover(idx) -> None:
        live manifest exists, dropped otherwise; ``manifest.new`` debris
        removed) — after this the manifest is either pre- or post-commit,
        never mid-swap.
-    2. For every ``bucket=N.old`` aside: roll FORWARD (drop the aside) iff
-       the settled manifest's row count for N matches the live dir (the
-       mutation committed — the aside is post-commit debris); otherwise
-       roll BACK (restore the aside over whatever partial rewrite the
-       crash left).  A pre-commit crash therefore restores the exact
-       pre-mutation state everywhere — including buckets whose rewrite had
-       finished and all-deleted buckets with no live dir — and the
-       interrupted mutation can simply be re-run.
+    2. :func:`settle` every ``bucket=N.old`` aside: FORWARD iff the
+       settled manifest's row count for N matches the live dir (the
+       mutation committed), otherwise BACK.  A pre-commit crash therefore
+       restores the exact pre-mutation state everywhere — including
+       buckets whose rewrite had finished and all-deleted buckets with no
+       live dir — and the interrupted mutation can simply be re-run.
 
     The row-count probe reads only the touched buckets' parquet footers
     (``num_rows``), on the driver — no Spark job.
@@ -183,28 +289,14 @@ def recover(idx) -> None:
             fs.rename(mpath + ".old", mpath)
     fs.delete(mpath + ".new")
 
-    asides = [
-        name
-        for name in fs.listdir(idx.data_path)
-        if name.startswith("bucket=") and name.endswith(".old")
-    ]
-    if not asides:
+    if not idx.aside_buckets():
         return
     m = M.read_rows(fs, mpath)
     counts = {r["bucket"]: r["n_rows"] for r in M.rollup(m or [])}
-    for name in asides:
-        aside = FS.join(idx.data_path, name)
-        live = FS.join(idx.data_path, name[: -len(".old")])
-        b = int(name[len("bucket="): -len(".old")])
-        live_rows = sum(
-            M.footer(fs, FS.join(live, f)).num_rows
-            for f in M.parquet_files(fs, live)
-        )
-        if m is not None and live_rows == counts.get(b, 0):
-            fs.delete(aside)  # forward: manifest already describes live
-        else:
-            fs.delete(live)  # back: restore the pre-mutation copy
-            fs.rename(aside, live)
+    settle(
+        idx,
+        lambda b: m is not None and live_rows(idx, b) == counts.get(b, 0),
+    )
 
 
 def _replace_manifest(idx, rows: list[dict]) -> None:
@@ -222,33 +314,12 @@ def _replace_manifest(idx, rows: list[dict]) -> None:
     fs.delete(mpath + ".old")
 
 
-def _swap_and_commit(idx, staged: str, touched: list, build_id: str) -> None:
-    """Swap the staged rewrite of the ``touched`` buckets in and commit.
-
-    Per bucket: aside → move in.  The ``.old`` aside copies are NOT
-    deleted here — they survive until after the manifest commit, so every
-    crash point leaves old or new data present for EVERY bucket (including
-    the all-deleted case, whose bucket has no new dir): before the
-    manifest commit, recover() can restore the aside consistently with the
-    still-old manifest; after it, recover() just drops asides.
-
-    Commit: drop the touched buckets' manifest rows and add one row per
-    touched bucket that still has data, from its new files' footers, with
-    the bucket's prior max extents carried forward (a rewrite only removes
-    or keeps rows, so they stay upper bounds) — then an atomic manifest
-    swap.  The stale file map goes first: it must never survive."""
-    fs = idx.fs
-    for b in touched:
-        live = FS.join(idx.data_path, f"bucket={b}")
-        old = FS.join(idx.data_path, f"bucket={b}.old")
-        fs.delete(old)  # stale aside from pre-recover() eras only
-        src = FS.join(staged, f"bucket={b}")
-        if fs.isdir(live):
-            fs.rename(live, old)
-        if M.parquet_files(fs, src):
-            fs.rename(src, live)
-    fs.delete(staged)
-
+def _commit_rewrite(idx, touched: list, build_id: str) -> None:
+    """Drop the touched buckets' manifest rows and add one row per touched
+    bucket that still has data, from its new files' footers, with the
+    bucket's prior max extents carried forward (a rewrite only removes or
+    keeps rows, so they stay upper bounds) — then an atomic manifest swap.
+    The stale file map goes first: it must never survive."""
     rows = idx.manifest_rows()
     prior = {
         r["bucket"]: r["max_ext"]
@@ -258,10 +329,6 @@ def _swap_and_commit(idx, staged: str, touched: list, build_id: str) -> None:
     fresh = idx.footer_manifest(idx.data_path, touched, prior, build_id)
     _invalidate_file_map(idx)
     _replace_manifest(idx, keep + fresh)
-    # Only now — past the commit point — drop the aside copies.  A crash in
-    # this window leaves harmless ``.old`` debris that recover() sweeps.
-    for b in touched:
-        fs.delete(FS.join(idx.data_path, f"bucket={b}.old"))
 
 
 def delete_rows(
@@ -276,36 +343,31 @@ def delete_rows(
     ``victims`` must carry the id column (and box columns if available, to
     route directly; otherwise victim buckets are discovered by semi-join).
     """
-    fs = idx.fs
     box = box or idx.box
     recover(idx)  # finish any interrupted earlier swap first
 
     if set(victims.columns) >= {c for pair in box.dims for c in pair}:
-        vb = idx.keyed(victims, box).select(id_col, "bucket")
+        vb = idx.keyed(victims, box).select("bucket").distinct()
+        touched = [r["bucket"] for r in vb.collect()]
     else:
-        vb = idx.data().join(
-            victims.select(id_col), on=id_col, how="left_semi"
-        ).select(id_col, "bucket")
-    touched = [r["bucket"] for r in vb.select("bucket").distinct().collect()]
+        touched = victim_buckets(idx, victims.select(id_col), id_col)
     if not touched:
         return idx
 
-    # Rewrite each touched bucket without the victims (anti-join), staged
-    # next to the live dirs.
-    staged = FS.join(idx.path, "_staging_delete")
-    fs.delete(staged)
-    survivors = _read_buckets(idx, touched).join(
+    # Rewrite each touched bucket without the victims (anti-join).
+    survivors = read_buckets(idx, touched).join(
         victims.select(id_col), on=id_col, how="left_anti"
     )
     # (bucket, z) sort: rewritten buckets keep the build's in-file z
     # clustering (plain unsorted staging silently degraded row-group zone
     # maps for every deleted-from bucket — the EliminateSorts class of
     # regression, caught in r5)
-    survivors.sortWithinPartitions("bucket", "z").write.partitionBy(
-        "bucket"
-    ).mode("overwrite").parquet(staged)
-
-    _swap_and_commit(idx, staged, touched, build_id)
+    rewrite(
+        idx, touched, "delete",
+        lambda p: survivors.sortWithinPartitions("bucket", "z")
+        .write.partitionBy("bucket").mode("overwrite").parquet(p),
+        lambda t: _commit_rewrite(idx, t, build_id),
+    )
     return idx
 
 
@@ -334,31 +396,25 @@ def compact(
     consistent pre- or post-compaction snapshot.  Row sets are identical
     before and after — only physical file count and in-file order change.
     """
-    fs = idx.fs
     recover(idx)
-
-    touched = [
-        b for b in idx.live_buckets()
-        if len(M.parquet_files(fs, FS.join(idx.data_path, f"bucket={b}")))
-        > max_files_per_bucket
-    ]
+    touched = compaction_buckets(idx, max_files_per_bucket)
     if not touched:
         return idx
 
-    staged = FS.join(idx.path, "_staging_compact")
-    fs.delete(staged)
-    data = _read_buckets(idx, touched)
-    writer = (
-        data.repartition(len(touched), F.col("bucket"))
-        .sortWithinPartitions("bucket", "z")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-    )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(staged)
+    def write(p):
+        w = (
+            read_buckets(idx, touched)
+            .repartition(len(touched), F.col("bucket"))
+            .sortWithinPartitions("bucket", "z")
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+        )
+        if max_records_per_file:
+            w = w.option("maxRecordsPerFile", int(max_records_per_file))
+        w.parquet(p)
 
     # Touched buckets collapse to ONE fresh manifest row each (insert had
     # appended one row per batch).
-    _swap_and_commit(idx, staged, touched, build_id)
+    rewrite(idx, touched, "compact", write,
+            lambda t: _commit_rewrite(idx, t, build_id))
     return idx

@@ -18,13 +18,12 @@ It is one class at every dimension: its planner works on per-axis
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from libspatialindex_spark.config import DEFAULT, EngineConfig
-from libspatialindex_spark.functions import curves
 from libspatialindex_spark.operators.nd import NDBox, NDConfig
 from libspatialindex_spark.plans.cover import z_cover_nd
 
@@ -92,15 +91,6 @@ class SpatialRelation:
                 f"got {len(w)}"
             )
         return list(w[:d]), list(w[d:])
-
-    def with_z(self) -> "SpatialRelation":
-        """Attach the Morton key of the box center (codegen, no UDF)."""
-        if self.z_col:
-            return self
-        z = curves.z_key_nd(
-            self.box.centers(), list(self.conf.axes), self.conf.grid_bits
-        )
-        return replace(self, df=self.df.withColumn("z", z), z_col="z")
 
     def box_plan(self, qlo, qhi) -> tuple:
         """(hit buckets or None = no bucket metadata, z predicate or None

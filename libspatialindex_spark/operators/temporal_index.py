@@ -24,11 +24,20 @@ The distributed analogs:
   expanded box misses the window.  Works for moving POINTS (degenerate
   boxes, vlo = vhi) and moving REGIONS (per-edge velocities) alike.
 
-Both manifests are driver-sized JSON (one row per bucket); the exact
-predicates after the prune are the same codegen Column expressions
-``operators/temporal.py`` always used, so results are unchanged — only
-the rows touched shrink.  At 100 TB the partition filter keeps whole
-bucket directories unread, the same mechanics as the spatial stored index.
+Both layouts keep their envelopes in ``temporal.json``, one entry per
+bucket, and are ``manifest.StoredLayout`` handles whose partition column is
+``tb`` or ``mb``: builds and mutations stage, swap and recover through
+the one bucket-dir protocol of ``operators/mutations.py``, and each
+commit takes every touched bucket's envelope (and ``n_rows``) from its
+files' parquet footers on the driver — no Spark job after the data
+write, no data page read.  Parquet min/max statistics are exact, so the
+envelopes equal the Spark aggregates they replace and pruning stays
+lossless.  Stored reads pass the schema the handle holds, so they run no
+schema-inference job.  The exact predicates after the prune are the same
+codegen Column expressions ``operators/temporal.py`` always used, so
+results are unchanged — only the rows touched shrink.  At 100 TB the
+partition filter keeps whole bucket directories unread, the same
+mechanics as the spatial stored index.
 """
 
 from __future__ import annotations
@@ -40,10 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from libspatialindex_spark.functions import geometry as G
-from libspatialindex_spark.operators import temporal
+from libspatialindex_spark.operators import mutations, temporal
 from libspatialindex_spark.operators.nd import NDBox
 from libspatialindex_spark.operators.relation import BoxCols
 from libspatialindex_spark.plans import fs as FS
+from libspatialindex_spark.plans import manifest as M
 
 _FAR = temporal._FAR
 
@@ -52,7 +62,7 @@ _FAR = temporal._FAR
 
 
 @dataclass
-class StoredVersionIndex:
+class StoredVersionIndex(M.StoredLayout):
     """Time-bucketed validity-interval entries + per-bucket envelopes."""
 
     spark: SparkSession
@@ -69,6 +79,7 @@ class StoredVersionIndex:
     # persisted column spec (like the moving index's `cols`): stored
     # queries/mutations must use the BUILD-time names, not defaults
     cols: dict | None = None
+    part = "tb"
 
     def colspec(self) -> tuple[str, str, NDBox]:
         c = self.cols or {}
@@ -79,12 +90,39 @@ class StoredVersionIndex:
             BoxCols(xmin=b[0], ymin=b[1], xmax=b[2], ymax=b[3]),
         )
 
-    @property
-    def data_path(self) -> str:
-        return FS.join(self.path, "data")
-
     def df(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_path)
+        return self.data()
+
+    def order(self) -> list[str]:
+        """In-file row order after the bucket: ``tstart``.  Sorting by
+        (tb, tstart), not tstart alone, keeps the writer from inserting
+        its own Sort(tb), after which EliminateSorts would drop the
+        tstart order."""
+        return [self.colspec()[0]]
+
+    def meta(self) -> dict:
+        """``temporal.json``'s fields besides the envelopes."""
+        return {
+            "kind": "versions", "t_lo": self.t_lo, "width": self.width,
+            "n_tbuckets": self.n_tbuckets, "cols": self.cols,
+            "cuts": self.cuts,
+        }
+
+    def zone_cols(self) -> set:
+        tstart, tend, b = self.colspec()
+        return {tstart, tend, b.xmin, b.ymin, b.xmax, b.ymax}
+
+    def envelope(self, tb: int, z: dict) -> dict:
+        """Bucket ``tb``'s envelope from its footer zone (see
+        :func:`manifest.bucket_zones`)."""
+        tstart, tend, b = self.colspec()
+        lo, hi = z["min"], z["max"]
+        return {
+            "tb": tb, "ts_min": float(lo[tstart]), "te_max": float(hi[tend]),
+            "xmin": float(lo[b.xmin]), "ymin": float(lo[b.ymin]),
+            "xmax": float(hi[b.xmax]), "ymax": float(hi[b.ymax]),
+            "n_rows": z["n_rows"],
+        }
 
     def hit_buckets(
         self, qxmin: float, qymin: float, qxmax: float, qymax: float,
@@ -145,7 +183,6 @@ def build_version_index(
     spark = versions.sparkSession
     box = box or BoxCols()
     fs = FS.get_fs(spark, path)
-    data_path = FS.join(path, "data")
 
     rng = versions.agg(
         F.min(tstart).alias("lo"), F.max(tstart).alias("hi")
@@ -161,78 +198,19 @@ def build_version_index(
         for c in raw:
             if not cuts or c > cuts[-1]:
                 cuts.append(float(c))
-        tb = _cuts_tb_expr(cuts, tstart)
-    else:
-        tb = F.least(
-            F.lit(n_tbuckets - 1),
-            F.floor((F.col(tstart) - F.lit(t_lo)) / F.lit(width)),
-        ).cast("long")
 
     if fs.isdir(path):
         fs.delete(path)
     fs.mkdirs(path)
-    keyed = versions.withColumn("tb", tb)
-    # ("tb", tstart): a bare tstart sort would be replaced by the writer's
-    # inserted Sort(tb) (EliminateSorts), losing in-file tstart clustering
-    keyed.repartition("tb").sortWithinPartitions("tb", tstart).write.partitionBy(
-        "tb"
-    ).mode("overwrite").parquet(data_path)
-
-    written = spark.read.parquet(data_path)
-    rows = (
-        written.groupBy(F.col("tb").cast("long").alias("tb"))
-        .agg(
-            F.min(tstart).alias("ts_min"),
-            F.max(tend).alias("te_max"),
-            F.min(box.xmin).alias("xmin"),
-            F.min(box.ymin).alias("ymin"),
-            F.max(box.xmax).alias("xmax"),
-            F.max(box.ymax).alias("ymax"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .collect()
+    idx = StoredVersionIndex(
+        spark=spark, path=path, buckets=[], t_lo=t_lo, width=width,
+        n_tbuckets=n_tbuckets, cuts=cuts,
+        cols={"tstart": tstart, "tend": tend,
+              "box": [box.xmin, box.ymin, box.xmax, box.ymax]},
     )
-    buckets = [
-        {
-            "tb": int(r["tb"]), "ts_min": float(r["ts_min"]),
-            "te_max": float(r["te_max"]), "xmin": float(r["xmin"]),
-            "ymin": float(r["ymin"]), "xmax": float(r["xmax"]),
-            "ymax": float(r["ymax"]), "n_rows": int(r["n_rows"]),
-        }
-        for r in rows
-    ]
-    vcols = {
-        "tstart": tstart, "tend": tend,
-        "box": [box.xmin, box.ymin, box.xmax, box.ymax],
-    }
-    fs.write_text(
-        FS.join(path, "temporal.json"),
-        json.dumps({
-            "kind": "versions", "buckets": buckets,
-            "t_lo": t_lo, "width": width, "n_tbuckets": n_tbuckets,
-            "cols": vcols, "cuts": cuts,
-        }),
-    )
-    return StoredVersionIndex(
-        spark=spark, path=path, buckets=buckets,
-        t_lo=t_lo, width=width, n_tbuckets=n_tbuckets, cols=vcols,
-        cuts=cuts,
-    )
-
-
-def load_version_index(spark: SparkSession, path: str) -> StoredVersionIndex:
-    fs = FS.get_fs(spark, path)
-    mpath = FS.join(path, "temporal.json")
-    if not fs.exists(mpath):
-        raise FileNotFoundError(f"no temporal.json under {path}")
-    _check_no_asides(fs, path, "tb")
-    d = json.loads(fs.read_text(mpath))
-    return StoredVersionIndex(
-        spark=spark, path=path, buckets=d["buckets"],
-        t_lo=float(d.get("t_lo", 0.0)), width=float(d.get("width", 1.0)),
-        n_tbuckets=int(d.get("n_tbuckets", len(d["buckets"]) or 16)),
-        cols=d.get("cols"), cuts=d.get("cuts"),
-    )
+    tb = _version_tb_expr(idx, tstart)
+    _write(idx, versions.withColumn("tb", tb).repartition("tb"), idx.data_path)
+    return _build_commit(idx)
 
 
 def time_range_query_stored(
@@ -271,7 +249,7 @@ def time_range_query_stored(
 
 
 @dataclass
-class StoredMovingIndex:
+class StoredMovingIndex(M.StoredLayout):
     """Position-bucketed trajectories + per-bucket velocity envelopes."""
 
     spark: SparkSession
@@ -280,13 +258,37 @@ class StoredMovingIndex:
     cols: dict  # lo/hi/vlo/vhi column names per axis
     world: tuple[float, float, float, float] = (0.0, 0.0, 1.0, 1.0)
     bits: int = 3
-
-    @property
-    def data_path(self) -> str:
-        return FS.join(self.path, "data")
+    part = "mb"
 
     def df(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_path)
+        return self.data()
+
+    def order(self) -> list[str]:
+        """In-file row order after the bucket: none."""
+        return []
+
+    def meta(self) -> dict:
+        """``temporal.json``'s fields besides the envelopes."""
+        return {
+            "kind": "moving", "cols": self.cols, "world": list(self.world),
+            "bits": self.bits,
+        }
+
+    def zone_cols(self) -> set:
+        return {c for cs in self.cols.values() for c in cs}
+
+    def envelope(self, mb: int, z: dict) -> dict:
+        """Bucket ``mb``'s box + velocity envelope from its footer zone:
+        min ``lo``/``vlo`` and max ``hi``/``vhi`` per axis."""
+        c, lo, hi = self.cols, z["min"], z["max"]
+        out = {"mb": mb}
+        for i, a in enumerate("xy"):
+            out[f"{a}lo"] = float(lo[c["lo"][i]])
+            out[f"{a}hi"] = float(hi[c["hi"][i]])
+            out[f"v{a}lo"] = float(lo[c["vlo"][i]])
+            out[f"v{a}hi"] = float(hi[c["vhi"][i]])
+        out["n_rows"] = z["n_rows"]
+        return out
 
     def hit_buckets(
         self, qxmin: float, qymin: float, qxmax: float, qymax: float,
@@ -344,149 +346,93 @@ def build_moving_index(
     vhi = vhi or vlo
     spark = entries.sparkSession
     fs = FS.get_fs(spark, path)
-    data_path = FS.join(path, "data")
-    wx0, wy0, wx1, wy1 = world
-    n = 1 << bits
-    cx = (F.col(lo[0]) + F.col(hi[0])) / 2
-    cy = (F.col(lo[1]) + F.col(hi[1])) / 2
-    ix = F.least(
-        F.lit(n - 1),
-        F.greatest(
-            F.lit(0),
-            F.floor((cx - F.lit(wx0)) / F.lit((wx1 - wx0) / n)),
-        ),
-    ).cast("long")
-    iy = F.least(
-        F.lit(n - 1),
-        F.greatest(
-            F.lit(0),
-            F.floor((cy - F.lit(wy0)) / F.lit((wy1 - wy0) / n)),
-        ),
-    ).cast("long")
-    mb = ix * n + iy
-
     if fs.isdir(path):
         fs.delete(path)
     fs.mkdirs(path)
-    keyed = entries.withColumn("mb", mb)
-    keyed.repartition("mb").write.partitionBy("mb").mode("overwrite").parquet(
-        data_path
+    idx = StoredMovingIndex(
+        spark=spark, path=path, buckets=[], world=world, bits=bits,
+        cols={"lo": list(lo), "hi": list(hi), "vlo": list(vlo),
+              "vhi": list(vhi)},
     )
-
-    written = spark.read.parquet(data_path)
-    rows = (
-        written.groupBy(F.col("mb").cast("long").alias("mb"))
-        .agg(
-            F.min(lo[0]).alias("xlo"), F.max(hi[0]).alias("xhi"),
-            F.min(lo[1]).alias("ylo"), F.max(hi[1]).alias("yhi"),
-            F.min(vlo[0]).alias("vxlo"), F.max(vhi[0]).alias("vxhi"),
-            F.min(vlo[1]).alias("vylo"), F.max(vhi[1]).alias("vyhi"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .collect()
-    )
-    buckets = [
-        {k: (int(r[k]) if k in ("mb", "n_rows") else float(r[k]))
-         for k in ("mb", "xlo", "xhi", "ylo", "yhi",
-                   "vxlo", "vxhi", "vylo", "vyhi", "n_rows")}
-        for r in rows
-    ]
-    cols = {
-        "lo": list(lo), "hi": list(hi), "vlo": list(vlo), "vhi": list(vhi)
-    }
-    fs.write_text(
-        FS.join(path, "temporal.json"),
-        json.dumps({
-            "kind": "moving", "buckets": buckets, "cols": cols,
-            "world": list(world), "bits": bits,
-        }),
-    )
-    return StoredMovingIndex(
-        spark=spark, path=path, buckets=buckets, cols=cols,
-        world=world, bits=bits,
-    )
+    mb = _moving_mb_expr(idx)
+    _write(idx, entries.withColumn("mb", mb).repartition("mb"), idx.data_path)
+    return _build_commit(idx)
 
 
-def _check_no_asides(fs, path: str, part: str) -> None:
-    from libspatialindex_spark.operators.ann_index import _aside_dirs
-
-    asides = _aside_dirs(fs, FS.join(path, "data"), part)
-    if asides:
-        raise RuntimeError(
-            f"interrupted delete under {path} (aside dirs {asides[:3]}…) — "
-            "run recover_temporal_index() before reading"
-        )
-
-
-def recover_temporal_index(spark: SparkSession, path: str):
-    """Sweep delete asides for either temporal layout (version or moving
-    — dispatched from the persisted manifest kind) and re-certify the
-    touched buckets' envelopes against the actual data.  Roll rule as
-    :func:`ann_index.recover_ann_index`: live missing → roll the aside
-    back (pre-delete); live present → swap landed, drop the aside.  The
-    envelope recompute keeps pruning lossless whichever way each bucket
-    rolled; an interrupted delete should be re-issued (idempotent)."""
-    from libspatialindex_spark.operators.ann_index import _aside_dirs
-
-    fs = FS.get_fs(spark, path)
-    mpath = FS.join(path, "temporal.json")
-    if not fs.exists(mpath):
-        raise FileNotFoundError(f"no temporal.json under {path}")
-    kind = json.loads(fs.read_text(mpath)).get("kind", "versions")
-    part = "tb" if kind == "versions" else "mb"
-    data_path = FS.join(path, "data")
-    touched = []
-    for name in _aside_dirs(fs, data_path, part):
-        old = FS.join(data_path, name)
-        live = FS.join(data_path, name[: -len(".old")])
-        touched.append(int(name[len(part) + 1 : -len(".old")]))
-        if fs.isdir(live):
-            fs.delete(old)
-        else:
-            fs.rename(old, live)
-    if kind == "versions":
-        idx = load_version_index(spark, path)
-        if touched:
-            idx.buckets = _recompute_buckets(idx, part, touched, _version_agg(idx))
-            _commit_json(idx, part, idx.buckets, {
-                "kind": "versions", "t_lo": idx.t_lo, "width": idx.width,
-                "n_tbuckets": idx.n_tbuckets, "cols": idx.cols,
-                "cuts": idx.cuts,
-            })
-    else:
-        idx = load_moving_index(spark, path)
-        if touched:
-            idx.buckets = _recompute_buckets(idx, part, touched, _moving_agg(idx.cols))
-            _commit_json(idx, part, idx.buckets, {
-                "kind": "moving", "cols": idx.cols,
-                "world": list(idx.world), "bits": idx.bits,
-            })
+def _build_commit(idx):
+    """Commit a fresh build: the data schema is inferred here once (later
+    reads pass it), then every bucket's envelope from the footers."""
+    idx.data_schema()
+    _commit_json(idx)
     return idx
 
 
-def load_moving_index(spark: SparkSession, path: str) -> StoredMovingIndex:
+def _open(spark: SparkSession, path: str):
+    """The temporal layout at ``path``, of its persisted kind."""
     fs = FS.get_fs(spark, path)
     mpath = FS.join(path, "temporal.json")
     if not fs.exists(mpath):
         raise FileNotFoundError(f"no temporal.json under {path}")
-    _check_no_asides(fs, path, "mb")
     d = json.loads(fs.read_text(mpath))
-    return StoredMovingIndex(
-        spark=spark, path=path, buckets=d["buckets"], cols=d["cols"],
-        world=tuple(d.get("world", (0.0, 0.0, 1.0, 1.0))),
-        bits=int(d.get("bits", 3)),
+    if d.get("kind", "versions") == "moving":
+        return StoredMovingIndex(
+            spark=spark, path=path, buckets=d["buckets"], cols=d["cols"],
+            world=tuple(d.get("world", (0.0, 0.0, 1.0, 1.0))),
+            bits=int(d.get("bits", 3)),
+        )
+    return StoredVersionIndex(
+        spark=spark, path=path, buckets=d["buckets"],
+        t_lo=float(d.get("t_lo", 0.0)), width=float(d.get("width", 1.0)),
+        n_tbuckets=int(d.get("n_tbuckets", len(d["buckets"]) or 16)),
+        cols=d.get("cols"), cuts=d.get("cuts"),
     )
+
+
+def load_version_index(spark: SparkSession, path: str):
+    """Open either temporal layout (its persisted kind picks the class,
+    so ``load_moving_index`` is this function); raises while a swap's
+    ``.old`` asides are present (run :func:`recover_temporal_index`)."""
+    idx = _open(spark, path)
+    mutations.check_settled(idx, "recover_temporal_index")
+    return idx
+
+
+load_moving_index = load_version_index
+
+
+def _settle(idx) -> None:
+    """Settle the asides of an interrupted swap against ``temporal.json``:
+    a bucket whose live dir holds the committed row count rolls forward,
+    any other rolls back."""
+    counts = {e[idx.part]: e["n_rows"] for e in idx.buckets}
+    mutations.settle(
+        idx, lambda b: mutations.live_rows(idx, b) == counts.get(b, 0)
+    )
+
+
+def recover_temporal_index(spark: SparkSession, path: str):
+    """Repair either temporal layout after a crash: settle the asides of
+    an interrupted delete or compaction (:func:`_settle`), then re-take
+    EVERY live bucket's envelope from its files' footers and commit.  The
+    rebuild also covers an insert that crashed between moving its files
+    in and its commit: those rows are kept and counted (roll forward), so
+    the insert must not be re-issued.  Tail reads only, no Spark job."""
+    idx = _open(spark, path)
+    _settle(idx)
+    _commit_json(idx)
+    return idx
 
 
 # ------------------------------------------------- incremental mutations --
 #
 # The C API ships TP/MVR variants of insertData/deleteData
 # (``sidx_api.h:50-105`` — Index_InsertTPData / Index_DeleteMVRData …);
-# the distributed analog below is the same staged, tag-prefixed append +
-# anti-join bucket rewrite the spatial mutations use, with the JSON
-# envelope manifest as the commit point (single writer, like the
-# reference).  Inserts route through the PERSISTED bucket grid, so
-# envelopes stay exact and pruning stays lossless after any mutation.
+# the distributed analog below runs the spatial mutations' own steps
+# (``operators/mutations.py``: staged, tag-prefixed append; anti-join
+# bucket rewrite with the aside swap), with the JSON envelope manifest as
+# the commit point (single writer, like the reference).  Inserts route
+# through the PERSISTED bucket grid, so envelopes stay exact and pruning
+# stays lossless after any mutation.
 
 
 def _version_tb_expr(idx: StoredVersionIndex, tstart: str):
@@ -520,215 +466,108 @@ def _moving_mb_expr(idx: StoredMovingIndex):
     return ix * n + iy
 
 
-def _move_staged_in(fs, staging: str, data_path: str, part: str, tag: str):
-    import re as _re
-
-    safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", tag)
-    for bname in fs.listdir(staging):
-        if not bname.startswith(f"{part}="):
-            continue
-        src_dir = FS.join(staging, bname)
-        dst_dir = FS.join(data_path, bname)
-        fs.mkdirs(dst_dir)
-        for fname in fs.listdir(src_dir):
-            if fname.endswith(".parquet"):
-                fs.rename(
-                    FS.join(src_dir, fname),
-                    FS.join(dst_dir, f"{safe}-{fname}"),
-                )
-    fs.delete(staging)
+def _write(idx, df: DataFrame, path: str) -> None:
+    """Write ``df`` under ``path`` partitioned by the layout's column,
+    each file in the layout's order."""
+    df.sortWithinPartitions(idx.part, *idx.order()).write.partitionBy(
+        idx.part
+    ).mode("overwrite").parquet(path)
 
 
-def _recompute_buckets(idx, part: str, touched: list[int], agg_fn) -> list[dict]:
-    """Merge untouched manifest rows with freshly-aggregated touched ones."""
-    fs = FS.get_fs(idx.spark, idx.path)
-    keep = [b for b in idx.buckets if b[part] not in set(touched)]
-    fresh = []
-    live = [
-        FS.join(idx.data_path, f"{part}={b}")
-        for b in touched
-        if fs.isdir(FS.join(idx.data_path, f"{part}={b}"))
-        and any(f.endswith(".parquet")
-                for f in fs.listdir(FS.join(idx.data_path, f"{part}={b}")))
-    ]
-    if live:
-        df = idx.spark.read.option("basePath", idx.data_path).parquet(*live)
-        fresh = agg_fn(df)
-    return keep + fresh
-
-
-def _version_agg(idx: StoredVersionIndex):
-    tstart, tend, b = idx.colspec()
-
-    def agg(df: DataFrame) -> list[dict]:
-        rows = (
-            df.groupBy(F.col("tb").cast("long").alias("tb"))
-            .agg(
-                F.min(tstart).alias("ts_min"), F.max(tend).alias("te_max"),
-                F.min(b.xmin).alias("xmin"), F.min(b.ymin).alias("ymin"),
-                F.max(b.xmax).alias("xmax"), F.max(b.ymax).alias("ymax"),
-                F.count(F.lit(1)).alias("n_rows"),
-            ).collect()
-        )
-        return [
-            {"tb": int(r["tb"]), "ts_min": float(r["ts_min"]),
-             "te_max": float(r["te_max"]), "xmin": float(r["xmin"]),
-             "ymin": float(r["ymin"]), "xmax": float(r["xmax"]),
-             "ymax": float(r["ymax"]), "n_rows": int(r["n_rows"])}
-            for r in rows
-        ]
-
-    return agg
-
-
-def _moving_agg(cols: dict):
-    lo, hi, vlo, vhi = cols["lo"], cols["hi"], cols["vlo"], cols["vhi"]
-
-    def agg(df: DataFrame) -> list[dict]:
-        rows = (
-            df.groupBy(F.col("mb").cast("long").alias("mb"))
-            .agg(
-                F.min(lo[0]).alias("xlo"), F.max(hi[0]).alias("xhi"),
-                F.min(lo[1]).alias("ylo"), F.max(hi[1]).alias("yhi"),
-                F.min(vlo[0]).alias("vxlo"), F.max(vhi[0]).alias("vxhi"),
-                F.min(vlo[1]).alias("vylo"), F.max(vhi[1]).alias("vyhi"),
-                F.count(F.lit(1)).alias("n_rows"),
-            ).collect()
-        )
-        return [
-            {k: (int(r[k]) if k in ("mb", "n_rows") else float(r[k]))
-             for k in ("mb", "xlo", "xhi", "ylo", "yhi",
-                       "vxlo", "vxhi", "vylo", "vyhi", "n_rows")}
-            for r in rows
-        ]
-
-    return agg
-
-
-def _commit_json(idx, part: str, buckets: list[dict], extra: dict) -> None:
-    fs = FS.get_fs(idx.spark, idx.path)
-    fs.write_text(
-        FS.join(idx.path, "temporal.json"),
-        json.dumps({"buckets": buckets, **extra}),
+def _commit_json(idx, touched: list | None = None) -> None:
+    """Commit point: ``temporal.json`` with the envelopes of the
+    ``touched`` buckets (default: every live bucket) re-taken from their
+    files' footers — min/max statistics and ``num_rows``, tail reads on
+    the driver — and the others kept.  A touched bucket with no live dir
+    drops out."""
+    buckets = idx.live_buckets() if touched is None else touched
+    zones = M.bucket_zones(
+        idx.file_zones(idx.data_path, buckets, idx.zone_cols())
     )
+    keep = [] if touched is None else [
+        e for e in idx.buckets if e[idx.part] not in set(touched)
+    ]
+    idx.buckets = sorted(
+        keep + [idx.envelope(b, z) for b, z in zones.items()],
+        key=lambda e: e[idx.part],
+    )
+    idx.fs.write_text(
+        FS.join(idx.path, "temporal.json"),
+        json.dumps({"buckets": idx.buckets, **idx.meta()}),
+    )
+
+
+def _insert(idx, keyed: DataFrame, build_id: str):
+    """Stage ``keyed`` (carrying the layout's column), move it in under
+    the build tag, commit the touched buckets."""
+    btag = mutations.tag(build_id)
+    staged = mutations.staging(idx, f"insert_{btag}")
+    _write(idx, keyed.repartition(idx.part), staged)
+    _commit_json(idx, mutations.move_in(idx, staged, btag))
+    return idx
+
+
+def _delete(idx, victims: DataFrame, id_col: str):
+    """Anti-join rewrite of only the buckets holding victims."""
+    _settle(idx)
+    ids = victims.select(id_col)
+    touched = mutations.victim_buckets(idx, ids, id_col)
+    if touched:
+        survivors = mutations.read_buckets(idx, touched).join(
+            ids, on=id_col, how="left_anti"
+        )
+        mutations.rewrite(
+            idx, touched, "delete", lambda p: _write(idx, survivors, p),
+            lambda t: _commit_json(idx, t),
+        )
+    return idx
+
+
+def _compact(idx, max_files_per_bucket: int):
+    """M3 maintenance: merge buckets holding more than
+    ``max_files_per_bucket`` files (insert debris) back into one file
+    each, in the layout's order."""
+    _settle(idx)
+    touched = mutations.compaction_buckets(idx, max_files_per_bucket)
+    if touched:
+        mutations.rewrite(
+            idx, touched, "compact",
+            lambda p: _write(idx, mutations.read_buckets(idx, touched)
+                             .repartition(len(touched), F.col(idx.part)), p),
+            lambda t: _commit_json(idx, t),
+        )
+    return idx
 
 
 def insert_versions(
     idx: StoredVersionIndex, rows: DataFrame, build_id: str = "insert",
 ) -> StoredVersionIndex:
-    """Append version entries (Index_InsertMVRData analog): route through
-    the stored tstart grid, staged write, tag-prefixed move-in, envelope
-    recompute for touched buckets, JSON manifest commit."""
-    fs = FS.get_fs(idx.spark, idx.path)
-    staging = FS.join(idx.path, f"_staging_{build_id}")
-    fs.delete(staging)
+    """Append version entries (Index_InsertMVRData analog), routed
+    through the stored tstart grid."""
     tstart, _, _ = idx.colspec()
-    keyed = rows.withColumn("tb", _version_tb_expr(idx, tstart))
-    # ("tb", tstart) like the build: keeps appended files tstart-clustered
-    keyed.repartition("tb").sortWithinPartitions("tb", tstart).write.partitionBy(
-        "tb"
-    ).mode("overwrite").parquet(staging)
-    touched = sorted(
-        int(n.split("=", 1)[1])
-        for n in fs.listdir(staging) if n.startswith("tb=")
-    )
-    _move_staged_in(fs, staging, idx.data_path, "tb", build_id)
-    buckets = _recompute_buckets(idx, "tb", touched, _version_agg(idx))
-    extra = {"kind": "versions", "t_lo": idx.t_lo, "width": idx.width,
-             "n_tbuckets": idx.n_tbuckets, "cols": idx.cols,
-             "cuts": idx.cuts}
-    _commit_json(idx, "tb", buckets, extra)
-    idx.buckets = buckets
-    return idx
+    return _insert(idx, rows.withColumn("tb", _version_tb_expr(idx, tstart)),
+                   build_id)
 
 
 def delete_versions(
     idx: StoredVersionIndex, victims: DataFrame, id_col: str = "id",
 ) -> StoredVersionIndex:
-    """Remove version entries by id (Index_DeleteMVRData analog):
-    anti-join rewrite of only the buckets holding victims."""
-    tstart, _, _ = idx.colspec()
-    return _delete_generic(idx, victims, id_col, "tb", _version_agg(idx), {
-        "kind": "versions", "t_lo": idx.t_lo, "width": idx.width,
-        "n_tbuckets": idx.n_tbuckets, "cols": idx.cols, "cuts": idx.cuts,
-    }, sort_key=tstart)
+    """Remove version entries by id (Index_DeleteMVRData analog)."""
+    return _delete(idx, victims, id_col)
 
 
 def insert_moving(
     idx: StoredMovingIndex, rows: DataFrame, build_id: str = "insert",
 ) -> StoredMovingIndex:
     """Append trajectory entries (Index_InsertTPData analog)."""
-    fs = FS.get_fs(idx.spark, idx.path)
-    staging = FS.join(idx.path, f"_staging_{build_id}")
-    fs.delete(staging)
-    keyed = rows.withColumn("mb", _moving_mb_expr(idx))
-    keyed.write.partitionBy("mb").mode("overwrite").parquet(staging)
-    touched = sorted(
-        int(n.split("=", 1)[1])
-        for n in fs.listdir(staging) if n.startswith("mb=")
-    )
-    _move_staged_in(fs, staging, idx.data_path, "mb", build_id)
-    buckets = _recompute_buckets(idx, "mb", touched, _moving_agg(idx.cols))
-    extra = {"kind": "moving", "cols": idx.cols,
-             "world": list(idx.world), "bits": idx.bits}
-    _commit_json(idx, "mb", buckets, extra)
-    idx.buckets = buckets
-    return idx
+    return _insert(idx, rows.withColumn("mb", _moving_mb_expr(idx)), build_id)
 
 
 def delete_moving(
     idx: StoredMovingIndex, victims: DataFrame, id_col: str = "id",
 ) -> StoredMovingIndex:
     """Remove trajectory entries by id (Index_DeleteTPData analog)."""
-    return _delete_generic(idx, victims, id_col, "mb", _moving_agg(idx.cols), {
-        "kind": "moving", "cols": idx.cols,
-        "world": list(idx.world), "bits": idx.bits,
-    })
-
-
-def _delete_generic(idx, victims, id_col, part, agg_fn, extra, sort_key=None):
-    spark = idx.spark
-    fs = FS.get_fs(spark, idx.path)
-    data = spark.read.parquet(idx.data_path)
-    vb = data.join(victims.select(id_col), on=id_col, how="left_semi")
-    touched = [
-        int(r[part]) for r in vb.select(part).distinct().collect()
-    ]
-    if not touched:
-        return idx
-    staging = FS.join(idx.path, "_staging_delete")
-    fs.delete(staging)
-    survivors = (
-        spark.read.option("basePath", idx.data_path).parquet(
-            *[FS.join(idx.data_path, f"{part}={b}") for b in touched]
-        ).join(victims.select(id_col), on=id_col, how="left_anti")
-    )
-    if sort_key is not None:
-        # (part, key) like the build: rewritten version buckets keep their
-        # tstart clustering (a bare unsorted rewrite silently degraded
-        # row-group pruning — the EliminateSorts class of regression)
-        survivors = survivors.sortWithinPartitions(part, sort_key)
-    survivors.write.partitionBy(part).mode("overwrite").parquet(staging)
-    # swap: aside → move in; asides dropped after the JSON commit
-    for b in touched:
-        live = FS.join(idx.data_path, f"{part}={b}")
-        old = live + ".old"
-        fs.delete(old)
-        src = FS.join(staging, f"{part}={b}")
-        has_new = fs.isdir(src) and any(
-            f.endswith(".parquet") for f in fs.listdir(src)
-        )
-        if fs.isdir(live):
-            fs.rename(live, old)
-        if has_new:
-            fs.rename(src, live)
-    fs.delete(staging)
-    buckets = _recompute_buckets(idx, part, touched, agg_fn)
-    _commit_json(idx, part, buckets, extra)
-    for b in touched:
-        fs.delete(FS.join(idx.data_path, f"{part}={b}.old"))
-    idx.buckets = buckets
-    return idx
+    return _delete(idx, victims, id_col)
 
 
 def moving_range_query_stored(
@@ -771,75 +610,17 @@ def moving_range_query_stored(
     return out, io
 
 
-def _compact_generic(idx, part, agg_fn, extra, sort_key=None,
-                     max_files_per_bucket: int = 1):
-    """Shared M3 compaction for the temporal layouts: merge bucket dirs
-    holding more than ``max_files_per_bucket`` files (insert debris) back
-    into few files, keeping the build's in-file clustering, via the
-    delete path's aside-swap + JSON-commit discipline
-    (:func:`recover_temporal_index` settles any torn state)."""
-    spark = idx.spark
-    fs = FS.get_fs(spark, idx.path)
-    touched = []
-    for name in fs.listdir(idx.data_path):
-        if not name.startswith(f"{part}=") or name.endswith(".old"):
-            continue
-        files = [
-            f
-            for f in fs.listdir(FS.join(idx.data_path, name))
-            if f.endswith(".parquet")
-        ]
-        if len(files) > max_files_per_bucket:
-            touched.append(int(name[len(part) + 1:]))
-    if not touched:
-        return idx
-    staging = FS.join(idx.path, "_staging_compact")
-    fs.delete(staging)
-    data = spark.read.option("basePath", idx.data_path).parquet(
-        *[FS.join(idx.data_path, f"{part}={b}") for b in touched]
-    ).repartition(len(touched), F.col(part))
-    if sort_key is not None:
-        data = data.sortWithinPartitions(part, sort_key)
-    data.write.partitionBy(part).mode("overwrite").parquet(staging)
-    for b in touched:
-        live = FS.join(idx.data_path, f"{part}={b}")
-        old = live + ".old"
-        fs.delete(old)
-        src = FS.join(staging, f"{part}={b}")
-        has_new = fs.isdir(src) and any(
-            f.endswith(".parquet") for f in fs.listdir(src)
-        )
-        if fs.isdir(live):
-            fs.rename(live, old)
-        if has_new:
-            fs.rename(src, live)
-    fs.delete(staging)
-    buckets = _recompute_buckets(idx, part, touched, agg_fn)
-    _commit_json(idx, part, buckets, extra)
-    for b in touched:
-        fs.delete(FS.join(idx.data_path, f"{part}={b}.old"))
-    idx.buckets = buckets
-    return idx
-
-
 def compact_versions(
     idx: StoredVersionIndex, max_files_per_bucket: int = 1
 ) -> StoredVersionIndex:
     """M3 maintenance for the version index (the spatial
     ``mutations.compact`` analog): restore tstart-clustered few-file
     buckets after insert batches."""
-    tstart, _, _ = idx.colspec()
-    return _compact_generic(idx, "tb", _version_agg(idx), {
-        "kind": "versions", "t_lo": idx.t_lo, "width": idx.width,
-        "n_tbuckets": idx.n_tbuckets, "cols": idx.cols, "cuts": idx.cuts,
-    }, sort_key=tstart, max_files_per_bucket=max_files_per_bucket)
+    return _compact(idx, max_files_per_bucket)
 
 
 def compact_moving(
     idx: StoredMovingIndex, max_files_per_bucket: int = 1
 ) -> StoredMovingIndex:
     """M3 maintenance for the moving-object index."""
-    return _compact_generic(idx, "mb", _moving_agg(idx.cols), {
-        "kind": "moving", "cols": idx.cols,
-        "world": list(idx.world), "bits": idx.bits,
-    }, max_files_per_bucket=max_files_per_bucket)
+    return _compact(idx, max_files_per_bucket)

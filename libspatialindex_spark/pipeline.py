@@ -132,6 +132,7 @@ def run_to_storage(
     from pyspark.sql import functions as F  # noqa: F811
 
     from libspatialindex_spark.plans import fs as FSM
+    from libspatialindex_spark.plans import manifest as M
 
     conf = conf or EngineConfig()
     spark = images.sparkSession
@@ -142,14 +143,9 @@ def run_to_storage(
     man_path = FSM.join(out_path, "manifest")
 
     done: set[int] = set()
-    if resume and fs.isdir(man_path) and any(
-        f.endswith(".parquet") for f in fs.listdir(man_path)
-    ):
-        done = {
-            r["grp"]
-            for r in spark.read.parquet(man_path).select("grp").distinct().collect()
-        }
-    elif fs.isdir(out_path) and not resume:
+    if resume:  # committed groups, read on the driver
+        done = {r["grp"] for r in M.read_rows(fs, man_path) or []}
+    elif fs.isdir(out_path):
         fs.delete(out_path)
 
     tiled_src = tiling.assign_tiles(images, conf)

@@ -211,24 +211,9 @@ def file_zone(fs, path: str, cols) -> dict:
     return {"n_rows": md.num_rows, "min": lo, "max": hi}
 
 
-def file_zones(fs, root: str, buckets, cols) -> list[dict]:
-    """One zone (:func:`file_zone`) per data file of the ``bucket=N``
-    dirs of ``buckets`` under ``root``, plus its ``path``, ``bucket`` and
-    on-disk ``n_bytes``."""
-    out = []
-    for b in buckets:
-        d = FS.join(root, f"bucket={b}")
-        for name, size in sorted(fs.sizes(d).items()):
-            if _is_data(name):
-                path = FS.join(d, name)
-                z = file_zone(fs, path, cols)
-                out.append({**z, "path": path, "bucket": b, "n_bytes": size})
-    return out
-
-
 def bucket_zones(zones: list[dict]) -> dict[int, dict]:
-    """File zones merged per bucket: rows and bytes summed, bounds
-    widened."""
+    """File zones (:meth:`StoredLayout.file_zones`) merged per bucket:
+    rows and bytes summed, bounds widened."""
     out: dict[int, dict] = {}
     for z in zones:
         e = out.setdefault(
@@ -263,15 +248,20 @@ def _per_axis(row: dict) -> dict:
 
 
 class StoredLayout:
-    """Driver-side view of a stored index's directory layout (the index
-    handle supplies ``spark``, ``path`` and ``box``, its per-axis box
-    columns).
+    """Driver-side view of a stored layout's bucket directories: the data
+    root holds one ``{part}=N`` dir per bucket, ``part`` naming the
+    layout's partition column (``bucket`` for the spatial index; the
+    temporal and ANN layouts set their own).  The index handle supplies
+    ``spark`` and ``path`` (and, for the spatial index, ``box``, its
+    per-axis box columns).
 
     Opening the index for a query runs no Spark job: the manifest and
     the file map are read on the driver (:func:`read_rows`) and the data
     root is scanned with a schema inferred once per handle.  Committing a
     write runs none either (:meth:`footer_manifest`,
     :meth:`append_manifest`)."""
+
+    part = "bucket"
 
     @property
     def fs(self):
@@ -289,17 +279,18 @@ class StoredLayout:
     def filemap_path(self) -> str:
         return FS.join(self.path, "filemap")
 
+    def bucket_dir(self, b: int, root: str | None = None) -> str:
+        """Bucket ``b``'s dir under ``root`` (default: the data root)."""
+        return FS.join(root or self.data_path, f"{self.part}={b}")
+
     def data_schema(self) -> StructType:
         """The data root's schema, inferred once per handle (inference
         reads a parquet footer in a Spark job); every later read passes it
-        and runs no job.  Inferred from one live ``bucket=N`` dir, so the
-        ``bucket=N.old`` asides of a delete/compact swap (or of a crash
-        before ``recover()``) can never make ``bucket`` a string."""
+        and runs no job.  Inferred from one live bucket dir, so the
+        ``.old`` asides of a delete/compact swap (or of a crash before
+        recovery) can never make the partition column a string."""
         if getattr(self, "_data_schema", None) is None:
-            paths = [
-                FS.join(self.data_path, f"bucket={b}")
-                for b in self.live_buckets()[:1]
-            ]
+            paths = [self.bucket_dir(b) for b in self.live_buckets()[:1]]
             self._data_schema = (
                 self.spark.read.option("basePath", self.data_path)
                 .parquet(*(paths or [self.data_path]))
@@ -307,13 +298,42 @@ class StoredLayout:
             )
         return self._data_schema
 
-    def live_buckets(self) -> list[int]:
-        """Buckets with a live ``bucket=N`` data dir (not an ``.old``
-        aside)."""
+    def buckets_under(self, root: str, asides: bool = False) -> list[int]:
+        """Buckets with a ``{part}=N`` dir under ``root`` — live dirs, or
+        with ``asides`` the ``{part}=N.old`` asides of a swap."""
+        pre = f"{self.part}="
         return sorted(
-            int(n[len("bucket="):]) for n in self.fs.listdir(self.data_path)
-            if n.startswith("bucket=") and not n.endswith(".old")
+            int(n[len(pre):].removesuffix(".old"))
+            for n in self.fs.listdir(root)
+            if n.startswith(pre) and n.endswith(".old") == asides
         )
+
+    def live_buckets(self) -> list[int]:
+        """Buckets with a live data dir (not an ``.old`` aside)."""
+        return self.buckets_under(self.data_path)
+
+    def aside_buckets(self) -> list[int]:
+        """Buckets with an ``.old`` aside under the data root.  The root
+        must never be listed while one exists: partition discovery sees
+        ``N`` and ``N.old`` and fails on (or degrades to string) the
+        partition column."""
+        return self.buckets_under(self.data_path, asides=True)
+
+    def file_zones(self, root: str, buckets, cols) -> list[dict]:
+        """One zone (:func:`file_zone`) per data file of the dirs of
+        ``buckets`` under ``root``, plus its ``path``, ``bucket`` and
+        on-disk ``n_bytes``."""
+        fs, out = self.fs, []
+        for b in buckets:
+            d = self.bucket_dir(b, root)
+            for name, size in sorted(fs.sizes(d).items()):
+                if _is_data(name):
+                    path = FS.join(d, name)
+                    z = file_zone(fs, path, cols)
+                    out.append(
+                        {**z, "path": path, "bucket": b, "n_bytes": size}
+                    )
+        return out
 
     def footer_manifest(
         self, root: str, buckets, ext: dict, build_id: str
@@ -324,7 +344,7 @@ class StoredLayout:
         upper bound, see the module docstring)."""
         dims = self.box.dims
         cols = {"z", *(c for pair in dims for c in pair)}
-        zones = bucket_zones(file_zones(self.fs, root, buckets, cols))
+        zones = bucket_zones(self.file_zones(root, buckets, cols))
         return [
             {
                 "bucket": b,

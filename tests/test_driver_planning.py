@@ -330,3 +330,88 @@ def test_spark_written_manifest_takes_a_driver_append(spark, tmp_path):
     )
     index.delete(spark.createDataFrame(live.sample(n=100, random_state=7)))
     agree()
+
+
+# --- the temporal and ANN layouts ------------------------------------------
+
+
+def _temporal_frames(spark, n: int = 4000):
+    rng = np.random.default_rng(21)
+    t0 = rng.uniform(0.0, 1000.0, n)
+    x = rng.uniform(0.0, 0.98, n)
+    y = rng.uniform(0.0, 0.98, n)
+    ids = np.arange(n, dtype=np.int64)
+    versions = pd.DataFrame({
+        "id": ids, "tstart": t0, "tend": t0 + rng.uniform(1.0, 50.0, n),
+        "xmin": x, "ymin": y, "xmax": x + 0.01, "ymax": y + 0.01,
+    })
+    moving = pd.DataFrame({
+        "id": ids, "x": x, "y": y,
+        "vx": rng.uniform(-1e-4, 1e-4, n), "vy": rng.uniform(-1e-4, 1e-4, n),
+    })
+    return spark.createDataFrame(versions), spark.createDataFrame(moving)
+
+
+@pytest.mark.parametrize("kind", ["versions", "moving"])
+def test_temporal_writes_run_no_job_after_the_data_write(spark, tmp_path, kind):
+    """The temporal layouts commit like the spatial index: each touched
+    bucket's envelope comes from its files' footers.  An insert runs its
+    staged write only, a compaction its rewrite, a delete its victim
+    routing and rewrite (5, 6 and 10 jobs when envelopes were Spark
+    aggregates over an inferred-schema read).  A version-index query on a
+    16-bucket index plans with no job: the read passes the handle's
+    schema."""
+    from libspatialindex_spark.operators import temporal_index as ti
+
+    versions, moving = _temporal_frames(spark)
+    rows = versions if kind == "versions" else moving
+    if kind == "versions":
+        idx = ti.build_version_index(rows.filter("id % 4 != 0"),
+                                     str(tmp_path / "t"), n_tbuckets=16)
+        insert, delete, compact = (
+            ti.insert_versions, ti.delete_versions, ti.compact_versions)
+        n, (df, _) = _jobs(spark, lambda: ti.time_range_query_stored(
+            idx, 0.2, 0.2, 0.4, 0.4, 200.0, 260.0))
+        assert n == 0, f"stored query planned with {n} Spark jobs"
+    else:
+        idx = ti.build_moving_index(rows.filter("id % 4 != 0"),
+                                    str(tmp_path / "t"), bits=2)
+        insert, delete, compact = (
+            ti.insert_moving, ti.delete_moving, ti.compact_moving)
+    extra = rows.filter("id % 4 = 0")
+    victims = rows.filter("id % 9 = 0").select("id")
+
+    n, _ = _jobs(spark, lambda: insert(idx, extra, build_id="ins-1"))
+    assert n <= 2, f"insert ran {n} Spark jobs"
+    n, _ = _jobs(spark, lambda: compact(idx))
+    assert n <= 2, f"compact ran {n} Spark jobs"
+    n, _ = _jobs(spark, lambda: delete(idx, victims))
+    assert n <= 5, f"delete ran {n} Spark jobs"
+    assert idx.total_rows() == rows.filter("id % 9 != 0").count()
+
+
+def test_ann_writes_run_no_job_after_the_data_write(spark, tmp_path):
+    """The ANN layout keeps no per-cell record: an insert runs its staged
+    write only, a compaction its rewrite, a delete its victim routing and
+    rewrite (8 jobs when both reads inferred their schema)."""
+    from libspatialindex_spark.operators import ann_index as ai
+
+    rng = np.random.default_rng(22)
+    n = 4000
+    emb = spark.createDataFrame(pd.DataFrame({
+        "vec_id": np.arange(n, dtype=np.int64),
+        "embedding": list(rng.normal(size=(n, 16))),
+    }))
+    idx = ai.build_ann_index(emb.filter("vec_id % 4 != 0"),
+                             str(tmp_path / "a"), dim=16, stride=97)
+    extra = emb.filter("vec_id % 4 = 0")
+    victims = emb.filter("vec_id % 9 = 0").select("vec_id")
+
+    n, _ = _jobs(spark, lambda: ai.insert_vectors(idx, extra, build_id="e1"))
+    assert n <= 2, f"insert ran {n} Spark jobs"
+    n, _ = _jobs(spark, lambda: ai.compact_ann_index(
+        idx, refresh_projection=False))
+    assert n <= 2, f"compact ran {n} Spark jobs"
+    n, _ = _jobs(spark, lambda: ai.delete_vectors(idx, victims))
+    assert n <= 6, f"delete ran {n} Spark jobs"
+    assert idx.df().count() == emb.filter("vec_id % 9 != 0").count()

@@ -339,3 +339,122 @@ def test_moving_index_compact(spark, moving, tmp_path_factory):
     assert set(after) == set(before) and max(after.values()) == 1
     out, _ = ti.moving_range_query_stored(idx, *W, *MQ)
     assert {r.id for r in out.collect()} == want
+
+
+# --- commits from parquet footers ------------------------------------------
+
+
+def _aggregate(idx, part: str) -> list[dict]:
+    """Per-bucket envelopes of the stored data by a Spark aggregate — the
+    form the commit wrote before it read parquet footers."""
+    if part == "tb":
+        ts, te, b = idx.colspec()
+        spec = {
+            "ts_min": F.min(ts), "te_max": F.max(te),
+            "xmin": F.min(b.xmin), "ymin": F.min(b.ymin),
+            "xmax": F.max(b.xmax), "ymax": F.max(b.ymax),
+        }
+    else:
+        c, spec = idx.cols, {}
+        for i, a in enumerate("xy"):
+            spec[f"{a}lo"] = F.min(c["lo"][i])
+            spec[f"{a}hi"] = F.max(c["hi"][i])
+            spec[f"v{a}lo"] = F.min(c["vlo"][i])
+            spec[f"v{a}hi"] = F.max(c["vhi"][i])
+    rows = (
+        idx.spark.read.parquet(idx.data_path)
+        .groupBy(F.col(part).cast("long").alias(part))
+        .agg(*[v.alias(k) for k, v in spec.items()],
+             F.count(F.lit(1)).alias("n_rows"))
+        .collect()
+    )
+    return sorted(
+        ({k: int(v) if k in (part, "n_rows") else float(v)
+          for k, v in r.asDict().items()} for r in rows),
+        key=lambda e: e[part],
+    )
+
+
+def _check_envelopes(spark, idx, part: str) -> None:
+    want = _aggregate(idx, part)
+    assert sorted(idx.buckets, key=lambda e: e[part]) == want
+    loaded = ti.load_version_index(spark, idx.path)
+    assert sorted(loaded.buckets, key=lambda e: e[part]) == want
+
+
+_LAYOUTS = {
+    "versions": ("tb", dict(n_tbuckets=16)),
+    "points": ("mb", dict(bits=3)),
+    "regions": ("mb", dict(bits=3, lo=("xmin", "ymin"), hi=("xmax", "ymax"),
+                           vlo=("vxlo", "vylo"), vhi=("vxhi", "vyhi"))),
+}
+
+
+def _entries(spark, versions, kind):
+    if kind == "versions":
+        return versions
+    td.register_views(spark, SF_DIR)
+    return spark.sql(td.MOVING_SQL if kind == "points" else td.MOVING_REGIONS_SQL)
+
+
+@pytest.mark.parametrize("kind", sorted(_LAYOUTS))
+def test_envelopes_from_footers_equal_spark_aggregate(
+    spark, versions, tmp_path_factory, kind
+):
+    """Every commit takes each touched bucket's envelope from its files'
+    footers; parquet min/max statistics are exact, so after build,
+    insert, delete and compaction the envelopes equal the Spark
+    aggregate of the data, for the version index and for moving points
+    and regions."""
+    part, kw = _LAYOUTS[kind]
+    rows = _entries(spark, versions, kind)
+    path = str(tmp_path_factory.mktemp("tix") / f"env-{kind}")
+    build = ti.build_version_index if part == "tb" else ti.build_moving_index
+    insert = ti.insert_versions if part == "tb" else ti.insert_moving
+    delete = ti.delete_versions if part == "tb" else ti.delete_moving
+    compact = ti.compact_versions if part == "tb" else ti.compact_moving
+
+    idx = build(rows.filter(F.col("id") % 3 != 0), path, **kw)
+    _check_envelopes(spark, idx, part)
+    insert(idx, rows.filter(F.col("id") % 3 == 0), build_id="e1")
+    _check_envelopes(spark, idx, part)
+    delete(idx, rows.filter(F.col("id") % 7 == 0).select("id").distinct())
+    _check_envelopes(spark, idx, part)
+    compact(idx)
+    _check_envelopes(spark, idx, part)
+    assert idx.total_rows() == rows.filter(F.col("id") % 7 != 0).count()
+
+
+def test_temporal_insert_crash_before_commit_is_recovered(
+    spark, conf, versions, tmp_path_factory, monkeypatch
+):
+    """An insert moves its files into the live bucket dirs before its
+    commit; a crash in between left rows that ``temporal.json`` did not
+    count, and recovery only looked at asides.  Recovery now re-takes
+    every live bucket's envelope from the footers: the rows on disk are
+    counted, the envelopes equal the data, and the pruned query equals
+    the full scan."""
+    path = str(tmp_path_factory.mktemp("tix") / "vcrash")
+    idx = ti.build_version_index(
+        versions.filter(F.col("id") % 2 == 0), path, n_tbuckets=16
+    )
+
+    def boom(*a, **k):
+        raise RuntimeError("crash before the commit")
+
+    monkeypatch.setattr(ti, "_commit_json", boom)
+    with pytest.raises(RuntimeError, match="crash"):
+        ti.insert_versions(idx, versions.filter(F.col("id") % 2 == 1),
+                           build_id="e1")
+    monkeypatch.undo()
+
+    rec = ti.recover_temporal_index(spark, path)
+    on_disk = spark.read.parquet(rec.data_path).count()
+    assert on_disk == versions.count()
+    assert sum(b["n_rows"] for b in rec.buckets) == on_disk
+    assert rec.buckets == _aggregate(rec, "tb")
+    rel = SpatialRelation(versions, conf, max_extent=(td.MAX_EXTENT,) * 2)
+    for q in (TQ, (0.0, 2000.0)):
+        want = {r.id for r in temporal.time_range_query(rel, *W, *q).collect()}
+        out, _ = ti.time_range_query_stored(rec, *W, *q)
+        assert {r.id for r in out.collect()} == want
